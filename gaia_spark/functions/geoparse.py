@@ -1,10 +1,12 @@
 """Geoparsing: extract (lat, lon) point geometries from page text.
 
-Realizes the north-star requirement ("lat/lon extracted from text via
-vectorized Arrow UDFs, byte-identical extracted text per url") with the
-FROZEN grammar v1 from FIXTURES.md §2. The grammar is a contract: the
-``extracted`` column must be a pure function of ``text`` — never change the
-pattern; the golden hash in tests/goldens pins it.
+Realizes the north-star requirement ("lat/lon extracted from text,
+byte-identical extracted text per url") with the FROZEN grammar v1 from
+FIXTURES.md §2. The grammar is a contract: the ``extracted`` column must be
+a pure function of ``text`` — never change the pattern; the golden hash in
+tests/goldens pins it. Extraction runs entirely in the JVM
+(``GEOPARSE_PATTERN_JVM``); the Python-``re`` and RE2 spellings of the same
+grammar are kept as differential references for test_geoparse.
 
 Reference role: the point-layer ingestion the reference does via fiona/
 GeoPandas (``[R] gaia/geo/geo_inputs.py :: VectorFileIO``) — here points are
@@ -14,8 +16,7 @@ born from web text instead of GeoJSON.
 from __future__ import annotations
 
 import pyspark.sql.functions as F
-from pyspark.sql import Column, DataFrame
-from pyspark.sql.types import DoubleType, StringType, StructField, StructType
+from pyspark.sql import DataFrame
 
 # FROZEN v1 — FIXTURES.md §2. Group 1 = whole match, 2 = lat, 3 = lon.
 GEOPARSE_PATTERN_V1 = (
@@ -24,14 +25,6 @@ GEOPARSE_PATTERN_V1 = (
     r"\s*,\s*"
     r"(-?(?:180(?:\.0{1,6})?|(?:1[0-7][0-9]|[0-9]{1,2})\.[0-9]{1,6})))"
     r"(?![0-9.])"
-)
-
-GEO_STRUCT = StructType(
-    [
-        StructField("extracted", StringType()),
-        StructField("lat", DoubleType()),
-        StructField("lon", DoubleType()),
-    ]
 )
 
 # JVM (java.util.regex) form of the grammar for the pure-JVM extraction
@@ -54,8 +47,9 @@ GEOPARSE_PATTERN_JVM = (
     r"(?![0-9.])"
 )
 
-# RE2 form of the FROZEN v1 grammar for the vectorized pyarrow engine
-# (RE2 supports no lookarounds). Provably match-equivalent to
+# RE2 form of the FROZEN v1 grammar (pyarrow's regex engine; RE2 supports
+# no lookarounds) — the differential reference the JVM pattern is checked
+# against in test_geoparse. Provably match-equivalent to
 # GEOPARSE_PATTERN_V1 under leftmost-first search:
 #  - the negative lookbehind becomes a CONSUMED one-char prefix
 #    ``(?:^|[^0-9A-Za-z.(-])`` — a body match at position p exists iff
@@ -76,58 +70,13 @@ GEOPARSE_PATTERN_RE2 = (
 )
 
 
-@F.arrow_udf(GEO_STRUCT)
-def geoparse_udf(text):
-    """Arrow-native batch extraction via pyarrow's RE2 engine — the batch
-    stays a ``pyarrow.Array`` end to end (Spark 4 ``arrow_udf``): no
-    arrow→pandas object conversion of a million strings per query, no
-    per-row PyObject churn. Measured ~2.4x the original pandas
-    ``str.extract`` kernel plus ~7% again over the pandas_udf boundary;
-    float parses are bit-identical (correctly-rounded strtod both ways),
-    pinned by a 0-diff exceptAll comparison over the 1M-row pages corpus.
-
-    First match wins; no match → all-NULL struct (row kept). ``extracted``
-    is the exact whole-match text (byte-identical invariant).
-    """
-    import pyarrow as pa
-    import pyarrow.compute as pc
-
-    res = pc.extract_regex(text, GEOPARSE_PATTERN_RE2)
-    # struct_field does not apply the parent struct's validity (non-matching
-    # rows carry '' children) — mask through the match validity explicitly
-    valid = pc.is_valid(res)
-    null_s = pa.scalar(None, type=pa.string())
-    m = pc.if_else(valid, pc.struct_field(res, "m"), null_s)
-    lat = pc.cast(pc.if_else(valid, pc.struct_field(res, "lat"), null_s), pa.float64())
-    lon = pc.cast(pc.if_else(valid, pc.struct_field(res, "lon"), null_s), pa.float64())
-    return pa.StructArray.from_arrays([m, lat, lon], names=["extracted", "lat", "lon"])
-
-
-# The grammar IS deterministic, but the nondeterministic flag stops Catalyst
-# from duplicating the UDF when a filter on its output gets pushed past the
-# projection — without it every downstream `lat IS NOT NULL` doubles the
-# regex work (observed 2x ArrowEvalPython nodes in the within-join plan).
-geoparse_udf = geoparse_udf.asNondeterministic()
-
-
-def geoparse_prefilter() -> Column:
-    """Cheap JVM-side necessary condition for a grammar match.
-
-    Any match contains <digit> \\s* , \\s* [-digit] (lat ends with a digit,
-    then the comma separator, then lon starts with '-' or a digit). Spark
-    hoists pandas UDFs into an unconditional ArrowEvalPython node, so a
-    ``when(prefilter, udf(...))`` would NOT skip work — instead the
-    prefilter nulls the UDF *input*, so the expensive grammar regex only
-    runs on candidate strings (str.extract skips NaN).
-    """
-    return F.col("text").rlike(r"[0-9]\s*,\s*-?[0-9]")
-
-
 def geoparse(df: DataFrame, text_col: str = "text") -> DataFrame:
     """Add ``extracted``, ``lat``, ``lon`` columns to a pages DataFrame.
 
     NULL-safe: rows without coordinates keep NULLs (excluded from spatial
-    ops downstream by ``lat IS NOT NULL``).
+    ops downstream by ``lat IS NOT NULL``). Raises ``ValueError`` when
+    ``df`` already has a ``_geo_m`` column (the internal scratch column
+    would otherwise overwrite and then drop it).
 
     Extraction runs fully JVM-side (``regexp_extract`` with the grammar's
     lookarounds, which java regex supports natively): one big-regex pass
@@ -141,11 +90,12 @@ def geoparse(df: DataFrame, text_col: str = "text") -> DataFrame:
     nondeterministic so Catalyst neither duplicates it into
     the lat/lon projections (CollapseProject refuses to inline
     nondeterministic aliases) nor re-evaluates it under a pushed filter
-    — the same single-evaluation guarantee the Arrow UDF path got from
-    ``asNondeterministic()``. The vectorized ``geoparse_udf`` above stays
-    as the Arrow alternative; both are pinned match-equivalent by
-    test_geoparse.
+    — the same single-evaluation guarantee ``asNondeterministic()`` gives
+    a UDF. test_geoparse pins the JVM pattern match-equivalent to the RE2
+    and Python spellings above.
     """
+    if "_geo_m" in df.columns:
+        raise ValueError("input already has a '_geo_m' column - rename it before geoparse")
     big = F.regexp_extract(F.col(text_col), GEOPARSE_PATTERN_JVM, 1)
     # _m carries the ONLY textual occurrence of the big pattern (nullif
     # would expand it twice inside one CASE — correct but reliant on

@@ -40,25 +40,20 @@ def knn_join_broadcast(
     site_key: str = "site_id",
     site_lat: str = "lat",
     site_lon: str = "lon",
-    impl: str = "auto",
 ) -> DataFrame:
     """Top-k nearest sites per point; returns (point_key, site_id, dist_m, rank).
 
     Ties broken by (distance, site id) ascending (deterministic,
-    oracle-mirrorable). Two implementations:
+    oracle-mirrorable). The plan follows the site count m:
 
-    - ``sql``  — the site list rides along as a broadcast array column;
+    - m ≤ 512 — the site list rides along as a broadcast array column;
       per point, ``array_sort(transform(sites, s -> (dist, id)))`` picks the
       top k entirely inside the JVM (no Python stage). O(m log m) per row —
       the right plan for m up to a few hundred sites.
-    - ``arrow`` — vectorized numpy (batch × m) haversine matrix via
+    - m > 512 — vectorized numpy (batch × m) haversine matrix via
       mapInPandas; wins for large m where BLAS-style batching matters.
-
-    ``auto`` picks sql for m ≤ 512.
     """
-    if impl == "auto":
-        impl = "sql" if len(sites_pdf) <= 512 else "arrow"
-    if impl == "sql":
+    if len(sites_pdf) <= 512:
         return _knn_broadcast_sql(points, sites_pdf, k, point_key, site_key, site_lat, site_lon)
     s_ids = sites_pdf[site_key].to_numpy(dtype=np.int64)
     order = np.argsort(s_ids)

@@ -12,8 +12,9 @@ every relation is the same two-phase Spark plan (SURVEY.md §2.C):
    (full/partial classified at build time);
 2. **refinement** — full-cover cells need no geometry test at all; partial
    rect cells refine with a codegen'd BETWEEN; partial irregular-polygon
-   cells refine in an Arrow-batched numpy ray-casting UDF over precompiled
-   edge tables (the "prepared geometry" role).
+   cells refine with even-odd ray casting plus a boundary-distance test,
+   evaluated JVM-side by higher-order functions over the precompiled edge
+   array each cover row carries (the "prepared geometry" role).
 
 The polygon side is tiny next to a web-scale pages table, so the cover is
 broadcast (zero shuffle). A salted sort-merge path exists for the
@@ -29,7 +30,6 @@ import numpy as np
 import pandas as pd
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql.types import BooleanType
 
 from gaia_spark.functions import portable
 from gaia_spark.functions.kernel import PreparedPolygon, polygon_cover
@@ -133,44 +133,6 @@ class ZoneIndex:
         return df
 
 
-def _pip_refine_udf(spark: SparkSession, prepared: dict[int, list[tuple[np.ndarray, np.ndarray]]], mode: str):
-    """Arrow-batched ray-casting refinement over broadcast edge tables.
-
-    mode: 'interior' (strict within), 'covers' (interior or boundary),
-    'boundary' (touches). Rows with NULL zone_id (pre-decided JVM-side)
-    return False cheaply.
-    """
-    bc = spark.sparkContext.broadcast(
-        {z: [(la.copy(), lo.copy()) for la, lo in rings] for z, rings in prepared.items()}
-    )
-
-    @F.pandas_udf(BooleanType())
-    def pip(zone_id: pd.Series, lat: pd.Series, lon: pd.Series) -> pd.Series:
-        out = np.zeros(len(zone_id), dtype=bool)
-        valid = zone_id.notna().to_numpy()
-        if valid.any():
-            zs = zone_id.to_numpy(dtype="float64")
-            lats = lat.to_numpy(dtype="float64")
-            lons = lon.to_numpy(dtype="float64")
-            polys = bc.value
-            for z in np.unique(zs[valid]):
-                zi = int(z)
-                if zi not in polys:
-                    continue
-                m = valid & (zs == z)
-                prep = PreparedPolygon.from_rings(polys[zi])
-                if mode == "interior":
-                    r = prep.contains(lats[m], lons[m]) & ~prep.on_boundary(lats[m], lons[m])
-                elif mode == "covers":
-                    r = prep.contains(lats[m], lons[m]) | prep.on_boundary(lats[m], lons[m])
-                else:  # boundary
-                    r = prep.on_boundary(lats[m], lons[m])
-                out[m] = r
-        return pd.Series(out)
-
-    return pip
-
-
 BOUNDARY_EPS2 = 1e-18  # (1e-9 deg)² — matches kernel.PreparedPolygon.on_boundary
 
 
@@ -191,93 +153,27 @@ def _raycast_sql(lat: str = "lat", lon: str = "lon") -> str:
 def _boundary_sql(lat: str = "lat", lon: str = "lon") -> str:
     """min point-to-edge squared distance ≤ eps² (kernel.on_boundary twin).
 
-    Higher-order functions are interpreted (not codegen'd), so the segment
-    distance uses the compact form d² = u + t·(t·len2 − 2·dot) with
-    t = clamp01(dot/len2), u = |p−a|² — one transform pass + array_min,
-    ~half the per-edge expression nodes of the naive projection form.
-    Equivalent algebra; equals kernel.on_boundary to fp rounding.
+    The projection onto the segment is clamped by branch: dot ≤ 0 → |p−a|²,
+    dot ≥ len2 → |p−b|², otherwise cross²/len2 (distance to the line). Every
+    branch is a sum of squares or a square over the edge length, so a point
+    ON an edge yields d² of order ulp², far below eps². The expanded form
+    u + t·(t·len2 − 2·dot) cancels to ±ulp(u) ≈ 1e-16 there and misses
+    edge points. A degenerate edge (len2 = 0) has dot = 0 and takes the
+    first branch. Higher-order functions are interpreted (not codegen'd);
+    the CASE evaluates only the branch it takes.
     """
     dx, dy = "(e.x2 - e.x1)", "(e.y2 - e.y1)"
     px, py = f"({lon} - e.x1)", f"({lat} - e.y1)"
+    qx, qy = f"({lon} - e.x2)", f"({lat} - e.y2)"
     len2 = f"({dx} * {dx} + {dy} * {dy})"
     dot = f"({px} * {dx} + {py} * {dy})"
-    u = f"({px} * {px} + {py} * {py})"
-    t = f"least(cast(1 as double), greatest(cast(0 as double), {dot} / {len2}))"
-    d2 = f"({u} + {t} * ({t} * {len2} - 2 * {dot}))"
-    return (
-        f"array_min(transform(edges, e -> "
-        f"CASE WHEN {len2} = 0 THEN {u} ELSE {d2} END)) <= {BOUNDARY_EPS2}"
+    cross = f"({px} * {dy} - {py} * {dx})"
+    d2 = (
+        f"CASE WHEN {dot} <= 0 THEN {px} * {px} + {py} * {py} "
+        f"WHEN {dot} >= {len2} THEN {qx} * {qx} + {qy} * {qy} "
+        f"ELSE {cross} * {cross} / {len2} END"
     )
-
-
-def _ring_edges(rings: list[tuple[np.ndarray, np.ndarray]]):
-    """(y1, x1, y2, x2) edge tuples across all rings (rings closed first)."""
-    from gaia_spark.functions.kernel import _close_ring
-
-    for la, lo in rings:
-        la, lo = _close_ring(la, lo)
-        for y1, x1, y2, x2 in zip(la[:-1], lo[:-1], la[1:], lo[1:]):
-            yield float(y1), float(x1), float(y2), float(x2)
-
-
-def _codegen_raycast(rings: list[tuple[np.ndarray, np.ndarray]], lat: str = "lat", lon: str = "lon") -> str:
-    """Zone-specialized even-odd ray cast with the edge constants inlined as
-    literals — no arrays, no lambdas, whole-stage-codegen-able. Horizontal
-    edges are dropped at build time; each edge's slope is prefolded. Crossing
-    parity over ALL rings' edges = even-odd with holes/multipolygons."""
-    terms = []
-    for y1, x1, y2, x2 in _ring_edges(rings):
-        if y1 == y2:
-            continue  # never crossed by the half-open rule
-        m = (x2 - x1) / (y2 - y1)
-        cond = (
-            f"(({y1!r} > {lat}) != ({y2!r} > {lat})) AND "
-            f"({lon} < {x1!r} + ({lat} - {y1!r}) * {m!r})"
-        )
-        terms.append(f"(CASE WHEN {cond} THEN 1 ELSE 0 END)")
-    if not terms:
-        return "false"
-    return f"(({' + '.join(terms)}) % 2) = 1"
-
-
-def _codegen_boundary(rings: list[tuple[np.ndarray, np.ndarray]], lat: str = "lat", lon: str = "lon") -> str:
-    """Zone-specialized boundary test: min over all rings' edges of the
-    compact segment distance with len2/deltas prefolded to literals."""
-    ds = []
-    for y1, x1, y2, x2 in _ring_edges(rings):
-        dx, dy = x2 - x1, y2 - y1
-        len2 = dx * dx + dy * dy
-        px, py = f"({lon} - {x1!r})", f"({lat} - {y1!r})"
-        u = f"({px} * {px} + {py} * {py})"
-        if len2 == 0:
-            ds.append(u)
-            continue
-        dot = f"({px} * {dx!r} + {py} * {dy!r})"
-        t = f"least(cast(1 as double), greatest(cast(0 as double), {dot} / {len2!r}))"
-        ds.append(f"({u} + {t} * ({t} * {len2!r} - 2 * {dot}))")
-    if not ds:
-        return "false"
-    return f"least({', '.join(ds)}) <= {BOUNDARY_EPS2}" if len(ds) > 1 else f"({ds[0]}) <= {BOUNDARY_EPS2}"
-
-
-def _codegen_poly_predicate(
-    prepared: dict[int, list[tuple[np.ndarray, np.ndarray]]], pip_mode: str
-) -> "F.Column":
-    """CASE zone_id WHEN ... dispatch over zone-specialized predicates."""
-    branches = []
-    for zid, rings in sorted(prepared.items()):
-        rc = _codegen_raycast(rings)
-        bd = _codegen_boundary(rings)
-        if pip_mode == "interior":
-            body = f"CASE WHEN {rc} THEN NOT ({bd}) ELSE false END"
-        elif pip_mode == "covers":
-            body = f"CASE WHEN {rc} THEN true ELSE ({bd}) END"
-        else:
-            body = bd
-        branches.append(f"WHEN zone_id = {zid} THEN ({body})")
-    if not branches:
-        return F.lit(False)
-    return F.expr("CASE " + " ".join(branches) + " ELSE false END")
+    return f"array_min(transform(edges, e -> {d2})) <= {BOUNDARY_EPS2}"
 
 
 def with_cell(df: DataFrame, res: int, lat: str = "lat", lon: str = "lon", out: str | None = None) -> DataFrame:
@@ -387,7 +283,6 @@ def spatial_join(
     point_key: str = "url",
     strategy: str = "broadcast",
     n_salt: int = 8,
-    refine: str = "auto",
 ) -> DataFrame:
     """Two-phase cell-bucketed spatial join of points against a zone index.
 
@@ -397,7 +292,7 @@ def spatial_join(
     how='anti' → points matching none (DisjointProcess).
     """
     if predicate == "disjoint":
-        return spatial_join(points, index, "intersects", "anti", point_key, strategy, n_salt, refine)
+        return spatial_join(points, index, "intersects", "anti", point_key, strategy, n_salt)
     if predicate not in PREDICATES:
         raise ValueError(f"unknown predicate {predicate!r}")
     if how not in ("inner", "semi", "anti"):
@@ -433,51 +328,27 @@ def spatial_join(
         | (lon == F.col("min_lon")) | (lon == F.col("max_lon"))
     )
 
+    # polygon refine: ray-cast + boundary test over the broadcast edge
+    # arrays, entirely inside the JVM — no Python stage in the join at all.
+    # CASE nesting short-circuits the (pricier) boundary test behind the
+    # raycast verdict, so it only runs for rows it could actually flip.
+    rc, bd = _raycast_sql(), _boundary_sql()
     is_rect, is_poly = F.col("kind") == "rect", F.col("kind") == "poly"
     if predicate == "within":
         rect_ok = strict_in_bbox
-        pip_mode = "interior"
+        poly_ok = F.expr(f"CASE WHEN {rc} THEN NOT ({bd}) ELSE false END")
     elif predicate == "intersects":
         rect_ok = closed_in_bbox
-        pip_mode = "covers"
+        poly_ok = F.expr(f"CASE WHEN {rc} THEN true ELSE ({bd}) END")
     else:  # touches
         rect_ok = on_bbox_edge
-        pip_mode = "boundary"
+        poly_ok = F.expr(bd)
 
     # full cells decide rect/poly 'within'/'intersects' without any geometry
     # test; 'touches' can never come from a full-interior cell.
     full_ok = F.col("full") & F.lit(predicate != "touches")
     jvm_decided = full_ok | (is_rect & rect_ok)
-
-    needs_pip = is_poly & ~full_ok
-    if refine == "auto":
-        total_edges = sum(len(la) for rings in index.prepared.values() for la, _ in rings)
-        # codegen only for SMALL zone sets: beyond ~32 inlined edges the
-        # generated consume method exceeds janino's 64 KB limit — Spark then
-        # pays a FAILED compile (~1-2 s serial, every query) and silently
-        # runs interpreted, which is both slower than the HOF path and a
-        # scaling tax (measured: 2.3 s fixed overhead per join at 60 edges)
-        refine = "codegen" if 0 < total_edges <= 32 else "sql"
-    if refine == "codegen":
-        # small zone sets: specialize per zone with literal edge constants —
-        # straight-line whole-stage-codegen arithmetic, no arrays/lambdas
-        pip_ok = needs_pip & _codegen_poly_predicate(index.prepared, pip_mode)
-    elif refine == "sql":
-        # default: ray-cast + boundary test over the broadcast edge arrays,
-        # entirely inside the JVM — no Python stage in the join at all.
-        # CASE nesting short-circuits the (pricier) boundary test behind the
-        # raycast verdict, so it only runs for rows it could actually flip.
-        rc, bd = _raycast_sql(), _boundary_sql()
-        if pip_mode == "interior":
-            poly_ok = F.expr(f"CASE WHEN {rc} THEN NOT ({bd}) ELSE false END")
-        elif pip_mode == "covers":
-            poly_ok = F.expr(f"CASE WHEN {rc} THEN true ELSE ({bd}) END")
-        else:
-            poly_ok = F.expr(bd)
-        pip_ok = needs_pip & poly_ok
-    else:  # refine == 'arrow': vectorized numpy kernels via pandas UDF
-        pip = _pip_refine_udf(spark, index.prepared, pip_mode)
-        pip_ok = needs_pip & pip(F.when(needs_pip, F.col("zone_id")), lat, lon)
+    pip_ok = is_poly & ~full_ok & poly_ok
     matched = cand.where(jvm_decided | pip_ok)
 
     if how == "inner":

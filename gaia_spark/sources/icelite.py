@@ -111,11 +111,21 @@ class IceTable:
 
     def committed_meta_values(self, key: str) -> set:
         """All values of ``meta[key]`` across committed snapshots — the
-        idempotency lookup for streaming sinks (skip replayed batch ids)."""
+        idempotency lookup for streaming sinks (skip replayed batch ids).
+
+        A snapshot counts as committed only once CURRENT has reached it: a
+        kill between the manifest rename and the CURRENT swap leaves a
+        ``snap-N.json`` with N above the current id, which the next commit
+        overwrites — its meta must not mark that batch as done."""
+        cur = self._current_snapshot()
+        if cur is None:
+            return set()
         out = set()
         for name in self.snapshots():
             with open(os.path.join(self.manifest_dir, name)) as f:
                 m = json.load(f)
+            if m["snapshot_id"] > cur["snapshot_id"]:
+                continue
             v = (m.get("meta") or {}).get(key)
             if v is not None:
                 out.add(v)

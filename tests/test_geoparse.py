@@ -5,6 +5,7 @@ import os
 import re
 
 import pyspark.sql.functions as F
+import pytest
 
 from gaia_spark.functions.geoparse import GEOPARSE_PATTERN_V1, geoparse
 from gaia_spark.synth import synth_pages
@@ -64,6 +65,16 @@ def test_geoparse_null_rows_kept(spark):
     n_null = df.where(F.col("lat").isNull()).count()
     assert n_null > 0
     assert df.count() == 500
+
+
+def test_geoparse_refuses_to_clobber_scratch_column(spark):
+    """geoparse's internal ``_geo_m`` column must not silently overwrite
+    (and then drop) a user column of the same name."""
+    import pytest
+
+    df = spark.createDataFrame([("12.5,45.6", "keep")], "text string, _geo_m string")
+    with pytest.raises(ValueError, match="_geo_m"):
+        geoparse(df)
 
 
 def test_re2_pattern_equivalent_to_frozen_v1():

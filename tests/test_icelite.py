@@ -124,3 +124,28 @@ def test_stream_batch_replay_is_skipped(spark, tmp_path):
     assert write_stream_batch(t2, batch, 0) is False  # replayed id skipped
     assert write_stream_batch(t2, batch, 1) is True
     assert t2.read(spark).count() == 14
+
+
+def test_stream_batch_orphan_manifest_is_replayed(spark, tmp_path):
+    """A kill between the manifest rename and the CURRENT swap leaves a
+    snap-N.json that CURRENT never pointed to. Its batch id is NOT
+    committed: the replay must append, and its rows must be readable."""
+    import json
+    import os
+
+    from gaia_spark.streaming.ingest import write_stream_batch
+
+    path = str(tmp_path / "stream_orphan")
+    t = IceTable(path)
+    assert write_stream_batch(t, spark.range(7).selectExpr("id AS v"), 0) is True
+    orphan = {
+        "snapshot_id": 2, "parent": 1, "operation": "append", "files": [],
+        "added": [], "meta": {"stream_batch": 1}, "schema": "",
+    }
+    with open(os.path.join(t.manifest_dir, "snap-00000002.json"), "w") as f:
+        json.dump(orphan, f)
+
+    t2 = IceTable(path)  # restarted process replays batch 1
+    assert write_stream_batch(t2, spark.range(5).selectExpr("id + 100 AS v"), 1) is True
+    got = sorted(r.v for r in t2.read(spark).collect())
+    assert got == list(range(7)) + list(range(100, 105))

@@ -41,18 +41,25 @@ def brute_force_pairs(points_pdf: pd.DataFrame, zones_pdf: pd.DataFrame, predica
     urls = pts["url"].to_numpy()
     for z in zones_pdf.itertuples(index=False):
         if z.kind == "rect":
+            closed = (lats >= z.min_lat) & (lats <= z.max_lat) & (lons >= z.min_lon) & (lons <= z.max_lon)
             if predicate == "within":
                 m = (lats > z.min_lat) & (lats < z.max_lat) & (lons > z.min_lon) & (lons < z.max_lon)
-            else:  # intersects
-                m = (lats >= z.min_lat) & (lats <= z.max_lat) & (lons >= z.min_lon) & (lons <= z.max_lon)
+            elif predicate == "intersects":
+                m = closed
+            else:  # touches: on a closed bbox edge
+                m = closed & (
+                    (lats == z.min_lat) | (lats == z.max_lat) | (lons == z.min_lon) | (lons == z.max_lon)
+                )
         else:
             prep = PreparedPolygon(
                 np.array([v["lat"] for v in z.vertices]), np.array([v["lon"] for v in z.vertices])
             )
             if predicate == "within":
                 m = prep.contains(lats, lons) & ~prep.on_boundary(lats, lons)
-            else:
+            elif predicate == "intersects":
                 m = prep.covers(lats, lons)
+            else:  # touches
+                m = prep.on_boundary(lats, lons)
         for u in urls[m]:
             out.add((u, int(z.zone_id)))
     return out
@@ -63,15 +70,35 @@ def points_pdf(points):
     return points.select("url", "lat", "lon").toPandas()
 
 
-@pytest.mark.parametrize("predicate", ["within", "intersects"])
-def test_join_matches_brute_force(points, points_pdf, zones_pdf, index, predicate):
+@pytest.fixture(scope="module")
+def boundary_pdf(zones_pdf):
+    """Points ON every zone boundary: each vertex and each edge midpoint."""
+    rows = []
+    for z in zones_pdf.itertuples(index=False):
+        la = np.array([v["lat"] for v in z.vertices])
+        lo = np.array([v["lon"] for v in z.vertices])
+        lats = np.concatenate([la[:-1], (la[:-1] + la[1:]) / 2])
+        lons = np.concatenate([lo[:-1], (lo[:-1] + lo[1:]) / 2])
+        rows += [(f"b{z.zone_id}_{i}", float(a), float(o)) for i, (a, o) in enumerate(zip(lats, lons))]
+    return pd.DataFrame(rows, columns=["url", "lat", "lon"])
+
+
+@pytest.mark.parametrize("predicate", ["within", "intersects", "touches"])
+def test_join_matches_brute_force(spark, points, points_pdf, boundary_pdf, zones_pdf, index, predicate):
+    """Page points plus points placed on every zone boundary, so 'touches'
+    has matches and 'within'/'intersects' see their open/closed edges."""
+    pts = points.select("url", "lat", "lon").unionByName(
+        spark.createDataFrame(boundary_pdf, "url string, lat double, lon double")
+    )
     got = {
         (r.url, r.zone_id)
-        for r in spatial_join(points, index, predicate).select("url", "zone_id").collect()
+        for r in spatial_join(pts, index, predicate).select("url", "zone_id").collect()
     }
-    want = brute_force_pairs(points_pdf, zones_pdf, predicate)
+    want = brute_force_pairs(pd.concat([points_pdf, boundary_pdf]), zones_pdf, predicate)
     assert got == want
     assert len(want) > 0  # fixture sanity: clusters hit zones
+    if predicate == "touches":
+        assert {u for u, _ in want} >= set(boundary_pdf["url"])
 
 
 def test_semi_and_anti(points, points_pdf, zones_pdf, index):
@@ -93,21 +120,6 @@ def test_overlapping_zones_yield_multiple_rows(points, points_pdf, zones_pdf, in
     want = brute_force_pairs(points_pdf, zones_pdf, "intersects")
     cnt = pd.Series([u for u, _ in want]).value_counts()
     assert per_url == int((cnt > 1).sum())
-
-
-@pytest.mark.parametrize("predicate", ["within", "intersects", "touches"])
-def test_refine_paths_equivalent(points, index, predicate):
-    """All three refinement backends — interpreted HOFs over edge arrays,
-    zone-specialized codegen literals, Arrow numpy kernels — must agree."""
-    results = [
-        {
-            (r.url, r.zone_id)
-            for r in spatial_join(points, index, predicate, refine=refine)
-            .select("url", "zone_id").collect()
-        }
-        for refine in ("sql", "codegen", "arrow")
-    ]
-    assert results[0] == results[1] == results[2]
 
 
 def test_hot_cell_skew_salting_correct(spark, index):
@@ -148,10 +160,9 @@ def test_salted_smj_same_result(points, index):
     assert a == b
 
 
-def test_holed_zone_three_refine_backends_agree(spark, points):
-    """Multi-ring (holed) zones through the full spatial_join API: the
-    codegen / sql / arrow refine backends must produce identical pair sets,
-    and all must match the numpy kernel's even-odd verdicts."""
+def test_holed_zone_matches_numpy_kernel(spark, points):
+    """Multi-ring (holed) zones through the full spatial_join API must match
+    the numpy kernel's even-odd verdicts."""
     outer = [
         {"lat": -40.0, "lon": -60.0}, {"lat": -40.0, "lon": 60.0},
         {"lat": 40.0, "lon": 60.0}, {"lat": 40.0, "lon": -60.0},
@@ -168,14 +179,10 @@ def test_holed_zone_three_refine_backends_agree(spark, points):
         "vertices": outer, "rings": [outer, hole],
     }])
     idx = ZoneIndex.build(zpdf)
-    results = {}
-    for backend in ("codegen", "sql", "arrow"):
-        results[backend] = {
-            (r.url, r.zone_id)
-            for r in spatial_join(points, idx, "within", refine=backend)
-            .select("url", "zone_id").collect()
-        }
-    assert results["codegen"] == results["sql"] == results["arrow"]
+    got = {
+        (r.url, r.zone_id)
+        for r in spatial_join(points, idx, "within").select("url", "zone_id").collect()
+    }
 
     prep = PreparedPolygon.from_rings([
         (np.array([v["lat"] for v in outer]), np.array([v["lon"] for v in outer])),
@@ -186,7 +193,7 @@ def test_holed_zone_three_refine_backends_agree(spark, points):
         pdf["lat"].to_numpy(), pdf["lon"].to_numpy()
     )
     want = {(u, 0) for u in pdf["url"].to_numpy()[m]}
-    assert results["sql"] == want
+    assert got == want
     # the hole actually excludes points (fixture sanity)
     inner = (
         (pdf["lat"].to_numpy() > -15) & (pdf["lat"].to_numpy() < 15)

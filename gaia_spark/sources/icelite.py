@@ -8,12 +8,19 @@ snapshot reads — enough for resumable batch jobs with per-partition lineage.
 Layout:
     table_dir/
       data/<commit_uuid>/part-*.parquet     (immutable once committed)
-      _manifests/snap-00000001.json          (file list + row counts + schema)
+      _manifests/snap-00000001.json          (file list, added files, meta,
+                                              schema, timestamp_ms)
       _manifests/CURRENT                     (atomic pointer, rename-committed)
 
 Commit protocol: data is written to a fresh uuid dir (never overwritten),
 the manifest is written to a temp name and os.rename'd into place, then
 CURRENT is swapped by rename — readers always see a complete snapshot.
+A commit is the CURRENT swap: a ``snap-N.json`` with N above CURRENT's id
+(a kill between the two renames) is not committed, is never read, and is
+overwritten by the next commit. A manifest's ``meta`` (caller tags plus
+``added_rows``) and ``timestamp_ms`` are its commit record, as Iceberg keeps
+commit metadata in the snapshot summary — :meth:`IceTable.committed_meta`
+is how resumable jobs and streaming sinks find what they already wrote.
 On a real deployment this maps 1:1 onto Iceberg append/overwrite commits.
 """
 
@@ -21,6 +28,7 @@ from __future__ import annotations
 
 import json
 import os
+import time
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
@@ -34,14 +42,16 @@ class IceTable:
         os.makedirs(os.path.join(path, "data"), exist_ok=True)
 
     # -- snapshot bookkeeping -------------------------------------------------
+    def _load(self, name: str) -> dict:
+        with open(os.path.join(self.manifest_dir, name)) as f:
+            return json.load(f)
+
     def _current_snapshot(self) -> dict | None:
         cur = os.path.join(self.manifest_dir, "CURRENT")
         if not os.path.exists(cur):
             return None
         with open(cur) as f:
-            name = f.read().strip()
-        with open(os.path.join(self.manifest_dir, name)) as f:
-            return json.load(f)
+            return self._load(f.read().strip())
 
     def snapshots(self) -> list[str]:
         return sorted(n for n in os.listdir(self.manifest_dir) if n.startswith("snap-"))
@@ -64,6 +74,7 @@ class IceTable:
             "added": added if added is not None else files,
             "meta": meta or {},
             "schema": schema,
+            "timestamp_ms": int(time.time() * 1000),
         }
         name = f"snap-{snap_id:08d}.json"
         tmp = os.path.join(self.manifest_dir, f".tmp-{uuid.uuid4().hex}")
@@ -109,71 +120,42 @@ class IceTable:
         meta["added_rows"] = self._file_rows(files)
         return self._commit(files, df.schema.json(), "overwrite", parent, files, meta)
 
-    def committed_meta_values(self, key: str) -> set:
-        """All values of ``meta[key]`` across committed snapshots — the
-        idempotency lookup for streaming sinks (skip replayed batch ids).
+    def committed_meta(self) -> list[dict]:
+        """The commit record of every committed snapshot whose added files
+        the current snapshot still lists: its ``meta`` plus ``snapshot_id``
+        and ``timestamp_ms``, oldest first. Manifest reads only — no Spark
+        job. This is the done-set lookup for resumable jobs (one record per
+        unit) and for streaming sinks (skip replayed batch ids).
 
-        A snapshot counts as committed only once CURRENT has reached it: a
-        kill between the manifest rename and the CURRENT swap leaves a
-        ``snap-N.json`` with N above the current id, which the next commit
-        overwrites — its meta must not mark that batch as done."""
+        Only ids up to CURRENT's are read, so an orphan ``snap-N.json`` left
+        by a kill between the manifest rename and the CURRENT swap never
+        counts. A commit whose files a later snapshot dropped (an overwrite,
+        or the ``rollback`` snapshots older tables carry) no longer counts
+        either: its rows are not in the table, so its work is not done."""
         cur = self._current_snapshot()
         if cur is None:
-            return set()
-        out = set()
-        for name in self.snapshots():
-            with open(os.path.join(self.manifest_dir, name)) as f:
-                m = json.load(f)
-            if m["snapshot_id"] > cur["snapshot_id"]:
-                continue
-            v = (m.get("meta") or {}).get(key)
-            if v is not None:
-                out.add(v)
+            return []
+        live = set(cur["files"])
+        out = []
+        for sid in range(1, cur["snapshot_id"] + 1):
+            m = self._load(f"snap-{sid:08d}.json")
+            if live.issuperset(m["added"]):
+                out.append(
+                    {**m["meta"], "snapshot_id": sid, "timestamp_ms": m.get("timestamp_ms")}
+                )
         return out
-
-    def rollback_uncommitted_units(self, job_id: str, done_units: set[str]) -> int:
-        """Exactly-once repair: drop files added by append commits tagged with
-        (job_id, unit) whose unit never reached 'done' lineage — the window
-        where a crash fell between data-append and lineage-append. Returns
-        the number of orphaned commits pruned (0 = nothing to repair)."""
-        cur = self._current_snapshot()
-        if cur is None:
-            return 0
-        orphan_files: set[str] = set()
-        n = 0
-        for name in self.snapshots():
-            with open(os.path.join(self.manifest_dir, name)) as f:
-                m = json.load(f)
-            meta = m.get("meta") or {}
-            if (
-                m.get("operation") == "append"
-                and meta.get("job_id") == job_id
-                and meta.get("unit") is not None
-                and meta["unit"] not in done_units
-            ):
-                orphan_files.update(m.get("added", []))
-                n += 1
-        if not orphan_files:
-            return 0
-        kept = [f for f in cur["files"] if f not in orphan_files]
-        self._commit(kept, cur["schema"], "rollback", cur, added=[], meta={"job_id": job_id})
-        return n
 
     # -- read -------------------------------------------------------------------
     def read(self, spark: SparkSession, snapshot_id: int | None = None) -> DataFrame:
-        if snapshot_id is None:
-            snap = self._current_snapshot()
-            if snap is None:
-                raise FileNotFoundError(f"empty icelite table at {self.path}")
-        else:
-            with open(os.path.join(self.manifest_dir, f"snap-{snapshot_id:08d}.json")) as f:
-                snap = json.load(f)
-        if not snap["files"]:
-            # stored schema is df.schema.json() — reconstruct the StructType
-            # (createDataFrame does not accept schema-JSON strings)
-            from pyspark.sql.types import StructType
-
-            return spark.createDataFrame(
-                [], StructType.fromJson(json.loads(snap["schema"]))
-            )
+        snap = self._current_snapshot()
+        if snap is None:
+            raise FileNotFoundError(f"empty icelite table at {self.path}")
+        if snapshot_id is not None:
+            if snapshot_id > snap["snapshot_id"]:
+                # a snap-N.json above CURRENT is a torn commit, not history
+                raise ValueError(
+                    f"snapshot {snapshot_id} of {self.path} is not committed "
+                    f"(current snapshot is {snap['snapshot_id']})"
+                )
+            snap = self._load(f"snap-{snapshot_id:08d}.json")
         return spark.read.parquet(*snap["files"])

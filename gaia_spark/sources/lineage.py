@@ -2,14 +2,14 @@
 
 North-rule requirement (``BASELINE.json:14``): "resumable from checkpoint
 with per-partition lineage + metrics". A job is split into named UNITS
-(e.g. warc_ts days or url-hash buckets); each unit's output is committed to
-an icelite table together with a lineage row. On restart, done units are
-anti-joined away and only the remainder recomputes — unit processing must
-be deterministic (everything in this engine is), so reruns are idempotent.
-
-Lineage rows live in their own icelite table:
-    (job_id, unit, status, input_rows, output_rows, attempt,
-     started_unix, finished_unix)
+(e.g. warc_ts days or url-hash buckets); each unit's output is ONE atomic
+icelite append, and that append's manifest is the unit's lineage record:
+    meta = (job_id, unit, started_unix, added_rows)
+    + the manifest's snapshot_id and timestamp_ms (the finish time)
+On restart, units with a committed record are skipped and only the
+remainder recomputes — unit processing must be deterministic (everything in
+this engine is), so reruns are idempotent. A kill before the CURRENT swap
+leaves no committed record, so that unit simply runs again.
 """
 
 from __future__ import annotations
@@ -23,24 +23,27 @@ from gaia_spark.sources.icelite import IceTable
 
 
 class ResumableJob:
-    def __init__(self, spark: SparkSession, job_id: str, output: IceTable, lineage: IceTable):
+    def __init__(
+        self, spark: SparkSession, job_id: str, output: IceTable, _legacy_lineage=None
+    ):
+        # the fourth argument was a separate lineage table; older callers
+        # still pass it positionally, and it is never read or written
         self.spark = spark
         self.job_id = job_id
         self.output = output
-        self.lineage = lineage
+
+    def units(self) -> dict[str, dict]:
+        """Lineage of this job's committed units: ``{unit: record}`` with
+        the record as :meth:`IceTable.committed_meta` returns it. Reads
+        manifests only — no Spark job."""
+        return {
+            m["unit"]: m
+            for m in self.output.committed_meta()
+            if m.get("job_id") == self.job_id and "unit" in m
+        }
 
     def done_units(self) -> set[str]:
-        try:
-            ldf = self.lineage.read(self.spark)
-        except FileNotFoundError:
-            return set()
-        rows = (
-            ldf.where(f"job_id = '{self.job_id}' AND status = 'done'")
-            .select("unit")
-            .distinct()
-            .collect()
-        )
-        return {r.unit for r in rows}
+        return set(self.units())
 
     def run(
         self,
@@ -48,30 +51,19 @@ class ResumableJob:
         process: Callable[[SparkSession, str], DataFrame],
         fail_after: int | None = None,
     ) -> dict:
-        """Process every not-yet-done unit; each unit = one atomic commit of
-        (data append, lineage append). ``fail_after`` aborts after N units —
+        """Process every not-yet-done unit; each unit = one atomic append
+        whose manifest records it. ``fail_after`` aborts after N units —
         the crash-injection hook for resumability tests."""
         done = self.done_units()
-        # exactly-once: prune data commits whose lineage row never landed
-        # (crash between data-append and lineage-append), then recompute them
-        self.output.rollback_uncommitted_units(self.job_id, done)
         pending = [u for u in units if u not in done]
         processed = 0
         for unit in pending:
             if fail_after is not None and processed >= fail_after:
                 raise RuntimeError(f"injected failure after {processed} units")
-            t0 = time.time()
-            out = process(self.spark, unit)
+            meta = {"job_id": self.job_id, "unit": unit, "started_unix": time.time()}
             # ONE execution per unit: append() writes the data and records the
             # row count from the parquet footers in the commit manifest — a
             # separate count() action would re-run the whole unit plan.
-            manifest = self.output.append(out, meta={"job_id": self.job_id, "unit": unit})
-            n_out = manifest["meta"]["added_rows"]
-            lrow = self.spark.createDataFrame(
-                [(self.job_id, unit, "done", n_out, 1, float(t0), float(time.time()))],
-                "job_id string, unit string, status string, output_rows long, "
-                "attempt int, started_unix double, finished_unix double",
-            )
-            self.lineage.append(lrow)
+            self.output.append(process(self.spark, unit), meta=meta)
             processed += 1
         return {"processed": processed, "skipped": len(units) - len(pending)}

@@ -75,7 +75,7 @@ def write_stream_batch(table, batch_df: DataFrame, batch_id: int) -> bool:
     """Idempotent micro-batch append: skip when this batch id already has a
     committed manifest (checkpoint replay after a crash). Returns True when
     the batch was appended, False when skipped as a duplicate."""
-    if batch_id in table.committed_meta_values("stream_batch"):
+    if any(m.get("stream_batch") == batch_id for m in table.committed_meta()):
         return False
     table.append(batch_df, meta={"stream_batch": batch_id})
     return True
@@ -110,8 +110,9 @@ def stream_spatial_join(
     assign zones from the broadcast zone index — the streaming flagship
     (incremental crawl → live zone enrichment).
 
-    Stateless by construction: geoparse is a per-row Arrow UDF and the
-    batch :func:`~gaia_spark.operators.spatial_join.spatial_join` inner
+    Stateless by construction: geoparse is a JVM ``regexp_extract`` over
+    each row's text and the batch
+    :func:`~gaia_spark.operators.spatial_join.spatial_join` inner
     path is candidate-join + filter (no aggregation, no dedup), so the
     same operator runs unchanged on a streaming DataFrame with the zone
     cover as the static broadcast side. No watermark needed — output rows

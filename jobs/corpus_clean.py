@@ -3,15 +3,14 @@
 Usage:
     spark-submit --py-files gaia_spark.zip jobs/corpus_clean.py \
         --documents /data/documents --output /data/clean \
-        --lineage /data/clean_lineage --job-id clean-2025-01 \
-        [--context-len 512] [--minhash] [--quality-min 0.5]
+        --job-id clean-2025-01 [--context-len 512] [--minhash] [--quality-min 0.5]
 
 Per unit (= source stratum, the natural crawl partition), the pipeline is:
 quality gate → PII scrub → exact dedup (earliest doc_id survives; optional
 MinHash-LSH near-dup pass) → token counts → sequence-packing spans.
-Each unit is one atomic (data append, lineage append) commit through
-ResumableJob — on restart, done units are skipped and torn commits rolled
-back, the same exactly-once contract as jobs/spatial_join.py.
+Each unit is one atomic append through ResumableJob, its manifest the unit's
+lineage record — on restart, done units are skipped, the same exactly-once
+contract as jobs/spatial_join.py.
 """
 
 from __future__ import annotations
@@ -26,7 +25,6 @@ def main(argv=None) -> None:
     p = argparse.ArgumentParser()
     p.add_argument("--documents", required=True, help="documents parquet dir")
     p.add_argument("--output", required=True)
-    p.add_argument("--lineage", required=True)
     p.add_argument("--job-id", default="corpus-clean")
     p.add_argument("--context-len", type=int, default=512)
     p.add_argument("--quality-min", type=float, default=0.5)
@@ -72,7 +70,7 @@ def main(argv=None) -> None:
             "doc_id", "source", "text", "n_tokens", "tok_start", "bin_first", "bin_last"
         )
 
-    job = ResumableJob(spark, args.job_id, IceTable(args.output), IceTable(args.lineage))
+    job = ResumableJob(spark, args.job_id, IceTable(args.output))
     stats = job.run(units, process)
     print(f"done: {stats}")
 

@@ -3,11 +3,11 @@
 Usage:
     spark-submit --py-files gaia_spark.zip jobs/spatial_join.py \
         --pages /data/pages --zones synth16 --output /data/out \
-        --lineage /data/out_lineage --job-id crawl-2025-01 [--units-by-lang]
+        --job-id crawl-2025-01 [--predicate within] [--cell-res N]
 
-Resumable: pages are processed unit-by-unit (lang partitions by default);
-on restart, done units are skipped via the lineage table and torn commits
-are rolled back (exactly-once).
+Resumable: pages are processed one lang unit at a time, each unit one atomic
+append to the output table whose manifest records (job_id, unit); on
+restart, units with a committed record are skipped (exactly-once).
 """
 
 from __future__ import annotations
@@ -23,7 +23,6 @@ def main(argv=None) -> None:
     p.add_argument("--pages", required=True, help="pages parquet dir, or synth:<n>")
     p.add_argument("--zones", default="synth16")
     p.add_argument("--output", required=True)
-    p.add_argument("--lineage", required=True)
     p.add_argument("--job-id", default="spatial-join")
     p.add_argument("--predicate", default="within")
     p.add_argument("--cell-res", type=int, default=None)
@@ -52,7 +51,7 @@ def main(argv=None) -> None:
         joined = spatial_join(geoparse(pages), idx, args.predicate, point_key="url")
         return joined.select("url", "lat", "lon", "zone_id")
 
-    job = ResumableJob(spark, args.job_id, IceTable(args.output), IceTable(args.lineage))
+    job = ResumableJob(spark, args.job_id, IceTable(args.output))
     stats = job.run(list(LANGS), process)
     print(f"done: {stats}")
 

@@ -56,10 +56,9 @@ def test_spark_submit_job_resumable(spark, tmp_path, monkeypatch):
     import jobs.spatial_join as job
 
     out = str(tmp_path / "out")
-    lin = str(tmp_path / "lineage")
     argv = [
         "--pages", "synth:300", "--zones", "synth16",
-        "--output", out, "--lineage", lin, "--job-id", "t-job",
+        "--output", out, "--job-id", "t-job",
     ]
     job.main(argv)
     n1 = IceTable(out).read(spark).count()
@@ -173,10 +172,9 @@ def test_corpus_clean_job_end_to_end(spark, tmp_path):
     import jobs.corpus_clean as job
 
     out = str(tmp_path / "clean")
-    lin = str(tmp_path / "clean_lineage")
     argv = [
         "--documents", "/root/testdata/sf0.001/documents.parquet",
-        "--output", out, "--lineage", lin, "--job-id", "t-clean",
+        "--output", out, "--job-id", "t-clean",
         "--quality-min", "0.3",
     ]
     job.main(argv)
@@ -193,10 +191,9 @@ def test_corpus_clean_job_end_to_end(spark, tmp_path):
     assert IceTable(out).read(spark).count() == n1
 
     out2 = str(tmp_path / "clean_mh")
-    lin2 = str(tmp_path / "clean_mh_lineage")
     job.main([
         "--documents", "/root/testdata/sf0.001/documents.parquet",
-        "--output", out2, "--lineage", lin2, "--job-id", "t-clean-mh",
+        "--output", out2, "--job-id", "t-clean-mh",
         "--quality-min", "0.3", "--minhash",
     ])
     assert 0 < IceTable(out2).read(spark).count() <= n1

@@ -73,25 +73,30 @@ def test_relational_join_broadcasts_small_dim(spark):
     assert "TakeOrderedAndProject" in plan  # orderBy+limit fused, no full sort
 
 
-def test_arrow_refine_single_python_stage(spark):
-    """refine='arrow' must add exactly ONE ArrowEvalPython node (the pair
-    predicate) and keep the candidate join broadcast — no extra shuffle,
-    no grouped-map stages."""
+def square_features(spark):
+    """39 closed 3°×3° square polygons along a diagonal."""
     import pandas as pd
 
-    from gaia_spark.operators.feature_join import feature_spatial_join
-
-    idx = ZoneIndex.build(synth_zones_pdf(16))
     k = list(range(1, 40))
     ring = lambda a, b: [  # noqa: E731
         {"lat": a, "lon": b}, {"lat": a, "lon": b + 3.0},
         {"lat": a + 3.0, "lon": b + 3.0}, {"lat": a + 3.0, "lon": b},
         {"lat": a, "lon": b},
     ]
-    feats = spark.createDataFrame(
+    return spark.createDataFrame(
         pd.DataFrame({"fid": k, "vertices": [ring(-30.0 + i, -60.0 + i) for i in k]}),
         "fid long, vertices array<struct<lat:double,lon:double>>",
     )
+
+
+def test_arrow_refine_single_python_stage(spark):
+    """refine='arrow' must add exactly ONE ArrowEvalPython node (the pair
+    predicate) and keep the candidate join broadcast — no extra shuffle,
+    no grouped-map stages."""
+    from gaia_spark.operators.feature_join import feature_spatial_join
+
+    idx = ZoneIndex.build(synth_zones_pdf(16))
+    feats = square_features(spark)
     out = feature_spatial_join(feats, idx, "intersects", feature_key="fid", refine="arrow")
     plan = plan_of(out)
     assert plan.count("ArrowEvalPython") == 1
@@ -103,6 +108,48 @@ def test_arrow_refine_single_python_stage(spark):
     assert "CartesianProduct" not in plan
     assert "Exchange hashpartitioning" not in plan
     assert "FlatMapGroupsInPandas" not in plan
+
+
+def test_feature_join_refine_runs_above_bnl_join(spark):
+    """With at most BNL_MAX_ZONES zones the SQL refine is a Filter ABOVE the
+    broadcast nested-loop join, and the join condition holds only the four
+    bbox comparisons. Without the pushdown barrier in feature_join, the
+    optimizer moves the geometry algebra into the join condition, where it
+    runs for every (feature, zone) probe pair instead of once per candidate."""
+    from gaia_spark.operators.feature_join import BNL_MAX_ZONES, feature_spatial_join
+
+    zones = synth_zones_pdf(16)
+    assert len(zones) <= BNL_MAX_ZONES
+    out = feature_spatial_join(
+        square_features(spark), ZoneIndex.build(zones), "intersects", feature_key="fid"
+    )
+    root = out._jdf.queryExecution().executedPlan()
+    if root.nodeName() == "AdaptiveSparkPlan":
+        root = root.executedPlan()
+
+    def find_join(node, ancestors):
+        if node.nodeName() == "BroadcastNestedLoopJoin":
+            return node, ancestors
+        kids = node.children()
+        for i in range(kids.size()):
+            hit = find_join(kids.apply(i), ancestors + [node])
+            if hit is not None:
+                return hit
+        return None
+
+    join, ancestors = find_join(root, [])
+    cond = join.condition().get()
+    refs = cond.references().toSeq()
+    assert {refs.apply(i).name() for i in range(refs.size())} == {
+        "_fmin_lat", "_fmax_lat", "_fmin_lon", "_fmax_lon",
+        "_z_min_lat", "_z_max_lat", "_z_min_lon", "_z_max_lon",
+    }
+    assert "lambdafunction" not in cond.toString()
+    refine = [
+        n for n in ancestors
+        if n.nodeName() == "Filter" and "lambdafunction" in n.condition().toString()
+    ]
+    assert len(refine) == 1
 
 
 def test_near_join_cells_cover_is_in_plan(spark):

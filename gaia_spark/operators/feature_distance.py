@@ -31,7 +31,6 @@ in knn.knn_join_cells (future work; the web-pipeline shape is small-m).
 
 from __future__ import annotations
 
-import pandas as pd
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, Window
 
@@ -40,11 +39,9 @@ from gaia_spark.functions import portable
 from gaia_spark.operators.feature_join import (
     _close_ring_sql,
     _covered_at,
-    _edges_sql,
-    _on_boundary_at,
     _proper_cross_sql,
 )
-from gaia_spark.operators.spatial_join import ZoneIndex
+from gaia_spark.operators.spatial_join import ZoneIndex, _boundary_sql, edges_sql
 from gaia_spark.session import iter_checkpoint
 
 
@@ -53,8 +50,6 @@ def _pt_seg_dist_m_sql(edges: str, lat: str, lon: str) -> str:
     closest point via clamped planar degree-space projection. Lambda var
     ``se`` (distinct from feature_join's ``e``/``ea``/``eb`` so builders
     can nest)."""
-    from gaia_spark.functions import portable
-
     dx, dy = "(se.x2 - se.x1)", "(se.y2 - se.y1)"
     len2 = f"({dx} * {dx} + {dy} * {dy})"
     dot = f"(({lon} - se.x1) * {dx} + ({lat} - se.y1) * {dy})"
@@ -67,28 +62,6 @@ def _pt_seg_dist_m_sql(edges: str, lat: str, lon: str) -> str:
     return f"array_min(transform({edges}, se -> {d}))"
 
 
-def _zones_meta_pdf(index: ZoneIndex) -> pd.DataFrame:
-    """One row per zone with a NORMALIZED edge array (rect zones get their
-    4 bbox edges synthesized driver-side — the zone side is small)."""
-    z = index.cover_pdf.drop_duplicates("zone_id")[
-        ["zone_id", "kind", "min_lat", "min_lon", "max_lat", "max_lon", "edges"]
-    ].copy()
-
-    def norm(r):
-        if r["kind"] == "poly" and r["edges"]:
-            return r["edges"]
-        a, b, c, d = r["min_lat"], r["min_lon"], r["max_lat"], r["max_lon"]
-        return [
-            {"y1": a, "x1": b, "y2": a, "x2": d},
-            {"y1": a, "x1": d, "y2": c, "x2": d},
-            {"y1": c, "x1": d, "y2": c, "x2": b},
-            {"y1": c, "x1": b, "y2": a, "x2": b},
-        ]
-
-    z["edges"] = z.apply(norm, axis=1)
-    return z[["zone_id", "edges"]]
-
-
 def _zone_dist_sql(kind: str, zedges: str = "z.edges") -> str:
     """Geometry-distance expression for one (feature, zone) pair: 0 when
     the feature intersects the zone, else the vertex↔edge candidate min.
@@ -97,7 +70,7 @@ def _zone_dist_sql(kind: str, zedges: str = "z.edges") -> str:
     zones-array plan, a plain column in the distributed cell-ring plan)."""
     any_fv_covered = f"exists(vertices, v -> {_covered_at(zedges, 'v.lat', 'v.lon')})"
     if kind == "line":
-        zv_touch = _on_boundary_at("_fedges", "zv.y1", "zv.x1")
+        zv_touch = _boundary_sql("zv.y1", "zv.x1", "_fedges")
     else:
         zv_touch = _covered_at("_fedges", "zv.y1", "zv.x1")
     any_zv_covered = f"exists({zedges}, zv -> {zv_touch})"
@@ -119,19 +92,16 @@ def _with_zones_array(features: DataFrame, index: ZoneIndex, vertices_col: str, 
             f"feature columns {sorted(reserved)} collide with reserved "
             "output columns (zone_id, dist_m, rank) — rename them first"
         )
-    spark = features.sparkSession
-    zpdf = _zones_meta_pdf(index)
-    zones = spark.createDataFrame(
-        zpdf.to_dict("records"),
-        "zone_id long, edges array<struct<y1:double,x1:double,y2:double,x2:double>>",
-    ).agg(F.collect_list(F.struct("zone_id", "edges")).alias("_zs"))
+    zones = index.zone_df(features.sparkSession).agg(
+        F.collect_list(F.struct("zone_id", "edges")).alias("_zs")
+    )
     feats = (
         features.withColumnRenamed(vertices_col, "vertices")
         if vertices_col != "vertices"
         else features
     )
     feats = feats.where(F.col("vertices").isNotNull() & (F.size("vertices") >= 2))
-    fedges = _edges_sql(_close_ring_sql("vertices")) if kind == "poly" else _edges_sql("vertices")
+    fedges = edges_sql(_close_ring_sql("vertices")) if kind == "poly" else edges_sql("vertices")
     return feats.withColumn("_fedges", F.expr(fedges)).join(F.broadcast(zones))
 
 
@@ -245,7 +215,7 @@ def feature_distance_nearest_cells(
         else features
     )
     feats = feats.where(F.col("vertices").isNotNull() & (F.size("vertices") >= 2))
-    fedges = _edges_sql(_close_ring_sql("vertices")) if kind == "poly" else _edges_sql("vertices")
+    fedges = edges_sql(_close_ring_sql("vertices")) if kind == "poly" else edges_sql("vertices")
     fmin_lat = "array_min(transform(vertices, v -> v.lat))"
     fmax_lat = "array_max(transform(vertices, v -> v.lat))"
     fmin_lon = "array_min(transform(vertices, v -> v.lon))"

@@ -12,11 +12,21 @@ that gap with the same two-phase Spark plan as :mod:`spatial_join`:
    driver loop, features stay distributed), equi-joined on cell against the
    broadcast zone cover, then deduped to (feature, zone) pairs and
    pre-filtered by closed bbox overlap (codegen'd comparisons);
-2. **refinement** — vertex-in-polygon (even-odd raycast over the broadcast
-   edge arrays), polygon-vertex-in-feature (raycast over the feature's own
-   edge array derived with ``zip_with``), and proper segment×segment
-   crossing (orientation signs), all as Catalyst higher-order functions —
-   zero Python, zero Arrow transfer in the hot path.
+2. **refinement** — vertex-in-polygon (even-odd raycast plus the boundary
+   distance test over the zone table's edge arrays), polygon-vertex-in-
+   feature (the same two tests over the feature's own edge array, derived
+   with ``spatial_join.edges_sql``), and proper segment×segment crossing
+   (orientation signs), all as Catalyst higher-order functions — zero
+   Python, zero Arrow transfer in the hot path. The raycast and boundary
+   tests are the point join's ``_raycast_sql`` / ``_boundary_sql``, so a
+   point on an edge reads the same in both joins; the zone table
+   (``ZoneIndex.zone_df``) gives every zone, rects included, one edge ring.
+   ``refine='arrow'`` evaluates the same algebra in numpy
+   (:mod:`feature_refine`).
+
+Features with a NaN vertex coordinate are refused (the job fails with a
+clear error): NaN defeats both the raycast and the boundary test, and the
+two refine backends would disagree on them.
 
 Predicate algebra over those three primitives (A = left feature, B = zone):
 
@@ -56,7 +66,13 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 
 from gaia_spark.functions import portable
-from gaia_spark.operators.spatial_join import BOUNDARY_EPS2, ZoneIndex
+from gaia_spark.operators.spatial_join import (
+    BOUNDARY_EPS2,
+    ZoneIndex,
+    _boundary_sql,
+    _raycast_sql,
+    edges_sql,
+)
 
 FEATURE_PREDICATES = ("within", "intersects", "disjoint", "touches", "touches_rook", "crosses")
 
@@ -65,56 +81,40 @@ FEATURE_PREDICATES = ("within", "intersects", "disjoint", "touches", "touches_ro
 # SQL fragment builders (all evaluated JVM-side by Catalyst HOFs)
 # ---------------------------------------------------------------------------
 
-def _raycast_at(edges: str, lat: str, lon: str) -> str:
-    """Even-odd crossing parity of point (lat, lon) against an edge array —
-    the HOF twin of kernel.PreparedPolygon.contains (half-open boundary)."""
-    return (
-        f"(aggregate({edges}, 0L, (acc, e) -> acc + (CASE WHEN "
-        f"((e.y1 > {lat}) != (e.y2 > {lat})) AND "
-        f"({lon} < e.x1 + ({lat} - e.y1) * (e.x2 - e.x1) / (e.y2 - e.y1)) "
-        f"THEN 1L ELSE 0L END)) % 2) = 1"
-    )
-
-
-def _on_boundary_at(edges: str, lat: str, lon: str) -> str:
-    """min point-to-edge squared distance ≤ eps² over an edge array
-    (compact segment-distance form, kernel.on_boundary twin)."""
-    dx, dy = "(e.x2 - e.x1)", "(e.y2 - e.y1)"
-    px, py = f"({lon} - e.x1)", f"({lat} - e.y1)"
-    len2 = f"({dx} * {dx} + {dy} * {dy})"
-    dot = f"({px} * {dx} + {py} * {dy})"
-    u = f"({px} * {px} + {py} * {py})"
-    t = f"least(cast(1 as double), greatest(cast(0 as double), {dot} / {len2}))"
-    d2 = f"({u} + {t} * ({t} * {len2} - 2 * {dot}))"
-    return (
-        f"array_min(transform({edges}, e -> "
-        f"CASE WHEN {len2} = 0 THEN {u} ELSE {d2} END)) <= {BOUNDARY_EPS2}"
-    )
-
-
 def _covered_at(edges: str, lat: str, lon: str) -> str:
     """Closed containment (interior ∨ boundary) against an edge array."""
-    return f"(({_raycast_at(edges, lat, lon)}) OR ({_on_boundary_at(edges, lat, lon)}))"
+    return f"(({_raycast_sql(lat, lon, edges)}) OR ({_boundary_sql(lat, lon, edges)}))"
 
 
 def _strictly_in_at(edges: str, lat: str, lon: str) -> str:
-    return f"(({_raycast_at(edges, lat, lon)}) AND NOT ({_on_boundary_at(edges, lat, lon)}))"
+    return f"(({_raycast_sql(lat, lon, edges)}) AND NOT ({_boundary_sql(lat, lon, edges)}))"
 
 
 def _proper_cross_sql(a_edges: str, b_edges: str) -> str:
     """∃ (ea, eb): segments properly cross (interiors intersect
-    transversally) — orientation-sign test, collinear contact excluded."""
+    transversally) — orientation-sign test, collinear contact excluded.
+    An endpoint within BOUNDARY_EPS of the other segment's line is contact,
+    not crossing: the boundary test already puts such a vertex on that
+    edge, so it must not also read as a crossing there (a line starting on
+    a zone edge touches the zone). The sign tests run first; the distance
+    checks only see the rare pairs that pass both."""
     def cross(ox, oy, ax, ay, bx, by):  # (a-o) × (b-o)
         return f"(({ax} - {ox}) * ({by} - {oy}) - ({ay} - {oy}) * ({bx} - {ox}))"
+
+    def len2(e):
+        return f"(({e}.x2 - {e}.x1) * ({e}.x2 - {e}.x1) + ({e}.y2 - {e}.y1) * ({e}.y2 - {e}.y1))"
 
     d1 = cross("eb.x1", "eb.y1", "eb.x2", "eb.y2", "ea.x1", "ea.y1")
     d2 = cross("eb.x1", "eb.y1", "eb.x2", "eb.y2", "ea.x2", "ea.y2")
     d3 = cross("ea.x1", "ea.y1", "ea.x2", "ea.y2", "eb.x1", "eb.y1")
     d4 = cross("ea.x1", "ea.y1", "ea.x2", "ea.y2", "eb.x2", "eb.y2")
+    apart = " AND ".join(
+        f"({d}) * ({d}) > {BOUNDARY_EPS2} * {len2(e)}"
+        for d, e in ((d1, "eb"), (d2, "eb"), (d3, "ea"), (d4, "ea"))
+    )
     return (
         f"exists({a_edges}, ea -> exists({b_edges}, eb -> "
-        f"((({d1}) > 0) != (({d2}) > 0)) AND (({d1}) != 0) AND (({d2}) != 0) AND "
-        f"((({d3}) > 0) != (({d4}) > 0)) AND (({d3}) != 0) AND (({d4}) != 0)))"
+        f"((({d1}) > 0) != (({d2}) > 0)) AND ((({d3}) > 0) != (({d4}) > 0)) AND {apart}))"
     )
 
 
@@ -135,11 +135,12 @@ def _collinear_interior_sql(
     STRICT containment in both
     polygons: inside both on either side ⇒ the interiors meet. A shared
     edge between side-by-side polygons puts each offset point inside only
-    one of them, so genuine touches are unaffected. The offset must sit far above the cancellation floor of the point-to-
-    segment distance form (d² ≈ u − dot²/len² loses increments below
-    ~len²·2⁻⁵² ≈ 3e-12 for 360°-scale edges; 1e-8 ≫ that), else the probe
-    falsely reads as on-boundary. Slivers thinner than the offset evade
-    the witness — documented limit.
+    one of them, so genuine touches are unaffected. The probe's squared
+    distance to the edge (1e-8) must sit far above BOUNDARY_EPS2 (1e-18),
+    else it reads as on-boundary; the branch form of ``_boundary_sql``
+    computes it as cross²/len2, whose error is only the rounding of the
+    probe coordinates (~1e-14° at 100°-scale coordinates), so it does.
+    Slivers thinner than the offset evade the witness — documented limit.
     """
     dx, dy = "(eb.x2 - eb.x1)", "(eb.y2 - eb.y1)"
     len2, collinear, lo, hi = _collinear_pair_parts()
@@ -194,15 +195,6 @@ def _collinear_overlap_sql(a_edges: str, b_edges: str) -> str:
     )
 
 
-def _edges_sql(arr: str) -> str:
-    """Consecutive-vertex edge structs over a vertex array expression."""
-    return (
-        f"zip_with(slice({arr}, 1, size({arr}) - 1), "
-        f"slice({arr}, 2, size({arr}) - 1), "
-        "(a, b) -> struct(a.lat AS y1, a.lon AS x1, b.lat AS y2, b.lon AS x2))"
-    )
-
-
 def _close_ring_sql(arr: str) -> str:
     """Auto-append the closing vertex when a polygon ring is not explicitly
     closed (first != last) — the kernel's _close_ring twin. An unclosed ring
@@ -215,24 +207,12 @@ def _close_ring_sql(arr: str) -> str:
     )
 
 
-_FEATURE_EDGES = _edges_sql("vertices")
+_FEATURE_EDGES = edges_sql("vertices")
 
 # multi-ring features: edges PER RING (each ring auto-closed) then
 # flattened — a flat vertex list would fabricate a bogus edge between
 # ring i's end and ring i+1's start
-_RING_EDGES = "flatten(transform({rings}, r -> " + _edges_sql(_close_ring_sql("r")) + "))"
-
-# zone geometry normalized to one edge-array form: poly zones already carry
-# `edges`; rect zones synthesize their 4 edges from the bbox columns. All
-# zone-side metadata is _z_-prefixed so user feature columns never collide.
-_ZONE_EDGES = (
-    "CASE WHEN _z_kind = 'poly' THEN _z_edges_src ELSE array("
-    "struct(_z_min_lat AS y1, _z_min_lon AS x1, _z_min_lat AS y2, _z_max_lon AS x2), "
-    "struct(_z_min_lat AS y1, _z_max_lon AS x1, _z_max_lat AS y2, _z_max_lon AS x2), "
-    "struct(_z_max_lat AS y1, _z_max_lon AS x1, _z_max_lat AS y2, _z_min_lon AS x2), "
-    "struct(_z_max_lat AS y1, _z_min_lon AS x1, _z_min_lat AS y2, _z_min_lon AS x2)) END"
-)
-
+_RING_EDGES = "flatten(transform({rings}, r -> " + edges_sql(_close_ring_sql("r")) + "))"
 
 # refine='auto' switches to the Arrow/numpy backend above this many edges
 # per feature: the SQL HOF refine pays an interpreted-expression cost per
@@ -244,6 +224,9 @@ _ZONE_EDGES = (
 # crossover sits well above the bench regime; 2048 is a conservative
 # extrapolation (the clipped pairwise sweep grows ~O(√Va·√Vb), so the
 # interpreted cost overtakes the round-trip again for very dense rings).
+# A later A/B at local[4] (2000 star-shaped 512-gons × 16 zones) had Arrow
+# ahead (intersects 1.09 s vs 1.31 s, within 1.14 s vs 1.69 s), so this
+# threshold is not the measured crossover; see ROADMAP item 3.
 AUTO_ARROW_MIN_EDGES = 2048
 
 # Candidate generation strategy switch: at or below this many zones the
@@ -301,7 +284,7 @@ def _refine_ok_sql(
 ) -> str:
     """The full refinement predicate over a candidate (feature, zone) pair,
     parameterized by the EDGE-ARRAY expressions so it can be instantiated
-    either over precomputed columns (`_fedges`/`_zedges`, the cell-cover
+    either over precomputed columns (`_fedges`/`_z_edges`, the cell-cover
     path) or with the derivations inlined (the broadcast nested-loop path,
     where the whole predicate lives inside the join condition and there are
     no intermediate columns to reference).
@@ -333,7 +316,7 @@ def _refine_ok_sql(
     # zone vertices probed against the FEATURE: lines have no interior, so
     # 'covered by A' degrades to 'on A's boundary' for kind='line'
     if kind == "line":
-        zv_covered_by_a = _on_boundary_at(fedges, "zv.y1", "zv.x1")
+        zv_covered_by_a = _boundary_sql("zv.y1", "zv.x1", fedges)
         zv_strictly_in_a = "false"
     else:
         zv_covered_by_a = _covered_at(fedges, "zv.y1", "zv.x1")
@@ -470,7 +453,7 @@ def feature_spatial_join(
         # polygons: auto-close an unclosed ring so the closing edge exists;
         # lines must NOT be closed (the chain is open by definition)
         fedges = (
-            _edges_sql(_close_ring_sql("vertices")) if kind == "poly" else _FEATURE_EDGES
+            edges_sql(_close_ring_sql("vertices")) if kind == "poly" else _FEATURE_EDGES
         )
     # bbox, all pure SQL over the vertex array, with ZERO interpreted
     # lambdas: `vertices.lat` / `vertices.lon` are GetArrayStructFields —
@@ -489,35 +472,33 @@ def feature_spatial_join(
         .withColumn("_fmax_lon", F.expr("array_max(_vlons)"))
         .drop("_vlats", "_vlons")
     )
-
-    # zone side: one row per zone (driver-deduped, it's the small broadcast
-    # side). _z_-prefix every zone-side metadata column: the user's feature
-    # layer may legitimately carry 'kind', bbox, or 'edges'/'cell' columns,
-    # and an unprefixed join would be ambiguous or silently drop user data
-    zmeta_pdf = index.cover_pdf.drop_duplicates("zone_id")[
-        ["zone_id", "kind", "min_lat", "min_lon", "max_lat", "max_lon", "edges"]
-    ]
-    zmeta = spark.createDataFrame(
-        zmeta_pdf.to_dict("records"),
-        "zone_id long, kind string, min_lat double, min_lon double, "
-        "max_lat double, max_lon double, "
-        "edges array<struct<y1:double,x1:double,y2:double,x2:double>>",
-    ).select(
-        "zone_id",
-        F.col("kind").alias("_z_kind"),
-        F.col("min_lat").alias("_z_min_lat"),
-        F.col("min_lon").alias("_z_min_lon"),
-        F.col("max_lat").alias("_z_max_lat"),
-        F.col("max_lon").alias("_z_max_lon"),
-        F.col("edges").alias("_z_edges_src"),
+    # a NaN vertex makes the raycast and boundary tests (and the two refine
+    # backends) disagree, so refuse it. array_max sorts NaN above every
+    # number: the bbox max reads NaN exactly when some vertex does.
+    nan_vertex = F.isnan("_fmax_lat") | F.isnan("_fmax_lon")
+    feats = feats.withColumn(
+        "_fmax_lat",
+        F.when(nan_vertex, F.raise_error(F.lit(
+            "feature_spatial_join: a feature has a NaN vertex coordinate; "
+            "drop or repair it before joining"
+        ))).otherwise(F.col("_fmax_lat")),
     )
 
-    use_bnl = len(zmeta_pdf) <= BNL_MAX_ZONES
+    # zone side: the index's zone table, one row per zone (the small
+    # broadcast side). _z_-prefix every zone-side metadata column: the
+    # user's feature layer may legitimately carry 'kind', bbox, or
+    # 'edges'/'cell' columns, and an unprefixed join would be ambiguous or
+    # silently drop user data
+    zmeta = index.zone_df(spark).select(
+        "zone_id",
+        *[F.col(c).alias(f"_z_{c}") for c in ("min_lat", "min_lon", "max_lat", "max_lon", "edges")],
+    )
+
+    use_bnl = len(index.zone_pdf) <= BNL_MAX_ZONES
     drop_common = [
         "_fmin_lat", "_fmax_lat", "_fmin_lon", "_fmax_lon", "_fedges",
-        "_cx", "_cy", "_cell", "_z_cell", "_z_kind",
-        "_z_min_lat", "_z_min_lon", "_z_max_lat", "_z_max_lon",
-        "_z_edges_src", "_zedges",
+        "_cx", "_cy", "_cell", "_z_cell",
+        "_z_min_lat", "_z_min_lon", "_z_max_lat", "_z_max_lon", "_z_edges",
     ]
 
     bbox_overlap = (
@@ -584,7 +565,6 @@ def feature_spatial_join(
         a_mode = None
         if rings_col is None:
             a_mode = "poly_close" if kind == "poly" else "line"
-        cand = cand.withColumn("_zedges", F.expr(_ZONE_EDGES))
         if a_mode is None:
             cand = cand.withColumn("_fedges", F.expr(fedges))
         matched = _arrow_refine(cand, predicate, kind, _PAIR_RECT, a_mode)
@@ -597,15 +577,13 @@ def feature_spatial_join(
         join_type = "left_semi" if how == "semi" else "left_anti"
         return features.join(hits, feature_key, join_type)
 
-    # feature edge table + zone edge form, derived AFTER candidate
-    # generation: the zip_with over the (possibly large) vertex array runs
-    # once per surviving (feature, zone) pair, never for the ~99% of
-    # features whose bbox meets no zone.
-    cand = cand.withColumn("_fedges", F.expr(fedges)).withColumn(
-        "_zedges", F.expr(_ZONE_EDGES)
-    )
+    # feature edge table, derived AFTER candidate generation: the zip_with
+    # over the (possibly large) vertex array runs once per surviving
+    # (feature, zone) pair, never for the ~99% of features whose bbox meets
+    # no zone.
+    cand = cand.withColumn("_fedges", F.expr(fedges))
     cand = cand.withColumn("_fedges_x", F.expr(_clip_sql("_fedges"))).withColumn(
-        "_zedges_x", F.expr(_clip_sql("_zedges"))
+        "_zedges_x", F.expr(_clip_sql("_z_edges"))
     )
 
     # refinement over the precomputed edge columns, behind an explicit
@@ -619,7 +597,7 @@ def feature_spatial_join(
     # filter exactly here, so it evaluates once per bbox-surviving
     # candidate with the edge arrays materialized as columns.
     ok = _refine_ok_sql(
-        predicate, kind, "_fedges", "_zedges", fedges_x="_fedges_x", zedges_x="_zedges_x"
+        predicate, kind, "_fedges", "_z_edges", fedges_x="_fedges_x", zedges_x="_zedges_x"
     )
     matched = cand.where(
         F.when(F.monotonically_increasing_id() >= 0, F.expr(ok)).otherwise(F.lit(False))
@@ -656,8 +634,8 @@ def _arrow_refine(
             F.col("_fedges.y2"), F.col("_fedges.x2"),
         ]
     args += [
-        F.col("_zedges.y1"), F.col("_zedges.x1"),
-        F.col("_zedges.y2"), F.col("_zedges.x2"),
+        F.col("_z_edges.y1"), F.col("_z_edges.x1"),
+        F.col("_z_edges.y2"), F.col("_z_edges.x2"),
         F.expr(ix["lat0"]), F.expr(ix["lat1"]),
         F.expr(ix["lon0"]), F.expr(ix["lon1"]),
     ]

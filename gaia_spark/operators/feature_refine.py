@@ -108,7 +108,7 @@ def make_pair_udf(predicate: str, kind: str, a_edges_mode: str | None = None):
 
 def raycast(py, px, ey1, ex1, ey2, ex2):
     """Even-odd parity of points (n,) against edges (m,) → bool (n,).
-    Twin of feature_join._raycast_at (same comparison & division order)."""
+    Twin of spatial_join._raycast_sql (same comparison & division order)."""
     if len(ey1) == 0:
         return np.zeros(len(py), dtype=bool)
     py2, px2 = py[:, None], px[:, None]
@@ -121,19 +121,21 @@ def raycast(py, px, ey1, ex1, ey2, ex2):
 
 def min_d2(py, px, ey1, ex1, ey2, ex2):
     """Min squared point-to-segment distance, points (n,) × edges (m,).
-    Twin of feature_join._on_boundary_at's distance form."""
+    Twin of spatial_join._boundary_sql's branches (same operation order):
+    dot ≤ 0 → |p−a|², dot ≥ len2 → |p−b|², else cross²/len2."""
     if len(ey1) == 0:
         return np.full(len(py), np.inf)
-    dx, dy = ex2 - ex1, ey2 - ey1
+    dx, dy = (ex2 - ex1)[None], (ey2 - ey1)[None]
+    pxr, pyr = px[:, None] - ex1[None], py[:, None] - ey1[None]
+    qxr, qyr = px[:, None] - ex2[None], py[:, None] - ey2[None]
     len2 = dx * dx + dy * dy
-    pxr = px[:, None] - ex1[None]
-    pyr = py[:, None] - ey1[None]
-    dot = pxr * dx[None] + pyr * dy[None]
-    u = pxr * pxr + pyr * pyr
+    dot = pxr * dx + pyr * dy
+    cross = pxr * dy - pyr * dx
     with np.errstate(divide="ignore", invalid="ignore"):
-        t = np.minimum(1.0, np.maximum(0.0, dot / len2[None]))
-        d2 = u + t * (t * len2[None] - 2 * dot)
-    d2 = np.where(len2[None] == 0, u, d2)
+        d2 = np.where(
+            dot <= 0, pxr * pxr + pyr * pyr,
+            np.where(dot >= len2, qxr * qxr + qyr * qyr, cross * cross / len2),
+        )
     return d2.min(axis=1)
 
 
@@ -151,7 +153,8 @@ def strictly_in(py, px, ey1, ex1, ey2, ex2):
 
 def proper_cross_any(ay1, ax1, ay2, ax2, by1, bx1, by2, bx2) -> bool:
     """∃ properly crossing (A edge, B edge) pair — sign test, collinear
-    contact excluded. Twin of feature_join._proper_cross_sql."""
+    contact and endpoints within BOUNDARY_EPS of the other line excluded.
+    Twin of feature_join._proper_cross_sql."""
     if len(ay1) == 0 or len(by1) == 0:
         return False
     eax1, eay1 = ax1[:, None], ay1[:, None]
@@ -162,9 +165,12 @@ def proper_cross_any(ay1, ax1, ay2, ax2, by1, bx1, by2, bx2) -> bool:
     d2 = (ebx2 - ebx1) * (eay2 - eby1) - (eby2 - eby1) * (eax2 - ebx1)
     d3 = (eax2 - eax1) * (eby1 - eay1) - (eay2 - eay1) * (ebx1 - eax1)
     d4 = (eax2 - eax1) * (eby2 - eay1) - (eay2 - eay1) * (ebx2 - eax1)
+    lb = (ebx2 - ebx1) * (ebx2 - ebx1) + (eby2 - eby1) * (eby2 - eby1)
+    la = (eax2 - eax1) * (eax2 - eax1) + (eay2 - eay1) * (eay2 - eay1)
     ok = (
-        ((d1 > 0) != (d2 > 0)) & (d1 != 0) & (d2 != 0)
-        & ((d3 > 0) != (d4 > 0)) & (d3 != 0) & (d4 != 0)
+        ((d1 > 0) != (d2 > 0)) & ((d3 > 0) != (d4 > 0))
+        & (d1 * d1 > BOUNDARY_EPS2 * lb) & (d2 * d2 > BOUNDARY_EPS2 * lb)
+        & (d3 * d3 > BOUNDARY_EPS2 * la) & (d4 * d4 > BOUNDARY_EPS2 * la)
     )
     return bool(ok.any())
 

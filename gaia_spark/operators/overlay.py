@@ -28,6 +28,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, Window
 
 from gaia_spark.functions import portable as P
+from gaia_spark.operators.spatial_join import edges_sql
 
 # --- shared intersection formulas (evaluated verbatim by the oracle) ---------
 
@@ -56,13 +57,7 @@ def chain_segments(
     """Explode a vertex-array chain layer to (line_key, seg_idx, s{y1,x1,y2,x2})."""
     return lines.select(
         F.col(line_key),
-        F.posexplode(
-            F.expr(
-                f"zip_with(slice({vertices_col}, 1, size({vertices_col}) - 1), "
-                f"slice({vertices_col}, 2, size({vertices_col}) - 1), "
-                "(a, b) -> struct(a.lat AS y1, a.lon AS x1, b.lat AS y2, b.lon AS x2))"
-            )
-        ).alias("seg_idx", "s"),
+        F.posexplode(F.expr(edges_sql(vertices_col))).alias("seg_idx", "s"),
     )
 
 

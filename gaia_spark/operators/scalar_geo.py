@@ -20,6 +20,7 @@ from gaia_spark.functions.kernel import (
     polygon_area_m2,
     polyline_length_m,
 )
+from gaia_spark.operators.spatial_join import edges_sql
 
 RING = ArrayType(
     StructType([StructField("lat", DoubleType()), StructField("lon", DoubleType())])
@@ -174,11 +175,7 @@ def ring_centroid_area_sql(vertices: str = "vertices") -> str:
     that the reference's CentroidProcess exposes (``[R] gaia/geo/
     processes_vector.py :: CentroidProcess``), unlike the vertex-mean
     variant (kept as ``ring_centroid`` for point clouds)."""
-    pairs = (
-        f"zip_with(slice({vertices}, 1, size({vertices}) - 1), "
-        f"slice({vertices}, 2, size({vertices}) - 1), "
-        "(a, b) -> struct(a.lat AS y1, a.lon AS x1, b.lat AS y2, b.lon AS x2))"
-    )
+    pairs = edges_sql(vertices)
     cross = "(p.x1 * p.y2 - p.x2 * p.y1)"
     a2 = f"aggregate({pairs}, cast(0 as double), (acc, p) -> acc + {cross})"
     cx = (

@@ -26,6 +26,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, Window
 
 from gaia_spark.functions import portable as P
+from gaia_spark.operators.spatial_join import edges_sql
 
 # --- shared snap formulas (evaluated verbatim by the DuckDB oracle) ----------
 
@@ -73,13 +74,7 @@ def snap_to_lines(
 
     segs = lines.select(
         F.col(line_key),
-        F.posexplode(
-            F.expr(
-                f"zip_with(slice({vertices_col}, 1, size({vertices_col}) - 1), "
-                f"slice({vertices_col}, 2, size({vertices_col}) - 1), "
-                "(a, b) -> struct(a.lat AS y1, a.lon AS x1, b.lat AS y2, b.lon AS x2))"
-            )
-        ).alias("seg_idx", "s"),
+        F.posexplode(F.expr(edges_sql(vertices_col))).alias("seg_idx", "s"),
     )
     # expanded bbox in cell coordinates; lon ring sized at the worst
     # latitude the disc can reach, x pmod-wrapped across the antimeridian

@@ -76,82 +76,125 @@ def _zone_rings(z) -> list[tuple[np.ndarray, np.ndarray]]:
     ]
 
 
+_EDGES_SCHEMA = "array<struct<y1:double,x1:double,y2:double,x2:double>>"
+_BBOX_SCHEMA = "min_lat double, min_lon double, max_lat double, max_lon double"
+
+
 @dataclass
 class ZoneIndex:
     """Driver-built broadcastable index over a (small) polygon layer."""
 
     res: int
-    cover_pdf: pd.DataFrame  # zone_id, cell, full, kind, min/max bounds
+    cover_pdf: pd.DataFrame  # zone_id, cell, full, kind, bbox, edges (poly zones only)
+    zone_pdf: pd.DataFrame  # one row per zone: zone_id, kind, bbox, edges (every kind)
     prepared: dict[int, list[tuple[np.ndarray, np.ndarray]]]  # zone_id -> rings
     zones_pdf: pd.DataFrame
 
     @classmethod
     def build(cls, zones_pdf: pd.DataFrame, res: int | None = None) -> "ZoneIndex":
         res = res if res is not None else pick_resolution(zones_pdf)
-        rows, prepared = [], {}
+        zones, cover, prepared = [], [], {}
         for z in zones_pdf.itertuples(index=False):
             rings = _zone_rings(z)
             prep = PreparedPolygon.from_rings(rings)
-            edges = None
+            bbox = (z.min_lat, z.min_lon, z.max_lat, z.max_lon)
             if z.kind == "poly":
                 prepared[int(z.zone_id)] = rings
-                # precompiled edge table (ALL rings, even-odd) shipped INTO
-                # the broadcast cover so refinement can run as JVM
-                # higher-order functions (no Arrow)
+                # precompiled edge table (ALL rings, even-odd): the prepared
+                # geometry the JVM higher-order-function refines read
                 edges = [
                     {"y1": float(a1), "x1": float(o1), "y2": float(a2), "x2": float(o2)}
                     for a1, o1, a2, o2 in zip(prep.y1, prep.x1, prep.y2, prep.x2)
                 ]
+            else:  # rect ring: (min, min) → (min, max) → (max, max) → (max, min)
+                a, b, c, d = (float(v) for v in bbox)
+                edges = [
+                    {"y1": a, "x1": b, "y2": a, "x2": d},
+                    {"y1": a, "x1": d, "y2": c, "x2": d},
+                    {"y1": c, "x1": d, "y2": c, "x2": b},
+                    {"y1": c, "x1": b, "y2": a, "x2": b},
+                ]
+            zones.append((int(z.zone_id), z.kind, *bbox, edges))
+            # rect cover rows carry no edges: the point join decides rects on
+            # the bbox alone, so the broadcast cover stays small
+            cover_edges = edges if z.kind == "poly" else None
             full, partial = polygon_cover(prep, res)
-            for c in full:
-                rows.append((int(z.zone_id), int(c), True, z.kind, z.min_lat, z.min_lon, z.max_lat, z.max_lon, edges))
-            for c in partial:
-                rows.append((int(z.zone_id), int(c), False, z.kind, z.min_lat, z.min_lon, z.max_lat, z.max_lon, edges))
-        cover = pd.DataFrame(
-            rows,
-            columns=["zone_id", "cell", "full", "kind", "min_lat", "min_lon", "max_lat", "max_lon", "edges"],
+            for flag, cells in ((True, full), (False, partial)):
+                for c in cells:
+                    cover.append((int(z.zone_id), int(c), flag, z.kind, *bbox, cover_edges))
+        cols = ["min_lat", "min_lon", "max_lat", "max_lon", "edges"]
+        return cls(
+            res=res,
+            cover_pdf=pd.DataFrame(cover, columns=["zone_id", "cell", "full", "kind", *cols]),
+            zone_pdf=pd.DataFrame(zones, columns=["zone_id", "kind", *cols]).drop_duplicates("zone_id"),
+            prepared=prepared,
+            zones_pdf=zones_pdf,
         )
-        return cls(res=res, cover_pdf=cover, prepared=prepared, zones_pdf=zones_pdf)
 
     def cover_df(self, spark: SparkSession) -> DataFrame:
+        """The cell cover (one row per zone × cell) the point join probes."""
+        return self._session_df(
+            spark, "cover", self.cover_pdf,
+            f"zone_id long, cell long, full boolean, kind string, {_BBOX_SCHEMA}, edges {_EDGES_SCHEMA}",
+        )
+
+    def zone_df(self, spark: SparkSession) -> DataFrame:
+        """The zone table (one row per zone; rects carry their four-edge
+        ring) that the feature join and feature distance read."""
+        return self._session_df(
+            spark, "zone", self.zone_pdf,
+            f"zone_id long, kind string, {_BBOX_SCHEMA}, edges {_EDGES_SCHEMA}",
+        )
+
+    def _session_df(self, spark: SparkSession, name: str, pdf: pd.DataFrame, schema: str) -> DataFrame:
         # memoized per session: the records conversion + schema inference
         # costs ~0.5 s of SERIAL driver time per call — pure Amdahl loss
         # that showed up directly in N-vs-4N scaling measurements
         # keyed by the session OBJECT (identity compare, strong ref) — an
         # id()-keyed cache could collide after the old session is GC'd and
         # CPython reuses its id, returning a DataFrame bound to a dead session
-        cache = getattr(self, "_cover_df_cache", None)
-        if cache is not None and cache[0] is spark:
-            return cache[1]
-        df = spark.createDataFrame(
-            self.cover_pdf.to_dict("records"),
-            "zone_id long, cell long, full boolean, kind string, "
-            "min_lat double, min_lon double, max_lat double, max_lon double, "
-            "edges array<struct<y1:double,x1:double,y2:double,x2:double>>",
-        )
-        self._cover_df_cache = (spark, df)
+        cache = self.__dict__.setdefault("_df_cache", {})
+        hit = cache.get(name)
+        if hit is not None and hit[0] is spark:
+            return hit[1]
+        df = spark.createDataFrame(pdf.to_dict("records"), schema)
+        cache[name] = (spark, df)
         return df
 
 
 BOUNDARY_EPS2 = 1e-18  # (1e-9 deg)² — matches kernel.PreparedPolygon.on_boundary
 
 
-def _raycast_sql(lat: str = "lat", lon: str = "lon") -> str:
-    """Even-odd ray casting over the cover row's ``edges`` array — the SAME
-    formula as kernel.PreparedPolygon.contains, but evaluated JVM-side by
-    Catalyst's higher-order functions: zero Python, zero Arrow transfer.
+def edges_sql(vertices: str) -> str:
+    """Consecutive-vertex edges ``struct(y1, x1, y2, x2)`` of an
+    ``array<struct<lat, lon>>`` expression — the edge layout of the zone
+    table and of every raycast / boundary test below."""
+    return (
+        f"zip_with(slice({vertices}, 1, size({vertices}) - 1), "
+        f"slice({vertices}, 2, size({vertices}) - 1), "
+        "(a, b) -> struct(a.lat AS y1, a.lon AS x1, b.lat AS y2, b.lon AS x2))"
+    )
+
+
+def _raycast_sql(lat: str = "lat", lon: str = "lon", edges: str = "edges") -> str:
+    """Even-odd ray casting over an edge-array expression (the cover row's
+    ``edges`` by default) — the SAME formula as
+    kernel.PreparedPolygon.contains, but evaluated JVM-side by Catalyst's
+    higher-order functions: zero Python, zero Arrow transfer.
     Horizontal edges self-exclude via the (y1 > lat) != (y2 > lat) guard
     (the division then yields ±Infinity, and the AND is already false)."""
     return (
-        f"(aggregate(edges, 0L, (acc, e) -> acc + (CASE WHEN "
+        f"(aggregate({edges}, 0L, (acc, e) -> acc + (CASE WHEN "
         f"((e.y1 > {lat}) != (e.y2 > {lat})) AND "
         f"({lon} < e.x1 + ({lat} - e.y1) * (e.x2 - e.x1) / (e.y2 - e.y1)) "
         f"THEN 1L ELSE 0L END)) % 2) = 1"
     )
 
 
-def _boundary_sql(lat: str = "lat", lon: str = "lon") -> str:
-    """min point-to-edge squared distance ≤ eps² (kernel.on_boundary twin).
+def _boundary_sql(lat: str = "lat", lon: str = "lon", edges: str = "edges") -> str:
+    """min point-to-edge squared distance ≤ eps² over an edge-array
+    expression (the cover row's ``edges`` by default; kernel.on_boundary
+    twin, and feature_refine.min_d2 is its numpy copy).
 
     The projection onto the segment is clamped by branch: dot ≤ 0 → |p−a|²,
     dot ≥ len2 → |p−b|², otherwise cross²/len2 (distance to the line). Every
@@ -173,7 +216,7 @@ def _boundary_sql(lat: str = "lat", lon: str = "lon") -> str:
         f"WHEN {dot} >= {len2} THEN {qx} * {qx} + {qy} * {qy} "
         f"ELSE {cross} * {cross} / {len2} END"
     )
-    return f"array_min(transform(edges, e -> {d2})) <= {BOUNDARY_EPS2}"
+    return f"array_min(transform({edges}, e -> {d2})) <= {BOUNDARY_EPS2}"
 
 
 def with_cell(df: DataFrame, res: int, lat: str = "lat", lon: str = "lon", out: str | None = None) -> DataFrame:

@@ -253,74 +253,78 @@ def min_label_components(
 
     from gaia_spark.session import iter_checkpoint, release_checkpoint, sever_lineage
 
+    # the edge input is joined in every round: materialize it once, or each
+    # round re-runs whatever plan produced it
+    edges = iter_checkpoint(edges, reliable_checkpoint)
     labels = iter_checkpoint(
         nodes.select(node_col, F.col(node_col).alias("label")), reliable_checkpoint
     )
     _cp = labels  # the round's live checkpoint frame (release target: a
     # .drop() wrapper is NOT releasable — unpersist needs the LogicalRDD root)
     scratch = tempfile.mkdtemp(prefix="gaia_mlc_")
-    converged = False
-    for _round in range(max_iter):
-        prop = (
-            edges.join(labels, node_col)
-            .groupBy(nbr_col)
-            .agg(F.min("label").alias("nbr_label"))
-            .withColumnRenamed(nbr_col, node_col)
-        )
-        cur = labels.join(prop, node_col, "left").select(
-            node_col,
-            F.least(F.col("label"), F.coalesce(F.col("nbr_label"), F.col("label"))).alias("label"),
-            F.col("label").alias("_prev"),
-        )
-        # first jump checkpointed: the second jump references its input
-        # twice (row + parent side), and an unmaterialized input would be
-        # recomputed on both sides
-        jump1 = iter_checkpoint(
-            cur.join(
-                cur.select(F.col(node_col).alias("_p"), F.col("label").alias("_pl")),
-                cur["label"] == F.col("_p"),
-                "left",
-            ).select(
+    try:
+        converged = False
+        for _round in range(max_iter):
+            prop = (
+                edges.join(labels, node_col)
+                .groupBy(nbr_col)
+                .agg(F.min("label").alias("nbr_label"))
+                .withColumnRenamed(nbr_col, node_col)
+            )
+            cur = labels.join(prop, node_col, "left").select(
                 node_col,
-                F.least(F.col("label"), F.coalesce(F.col("_pl"), F.col("label"))).alias("label"),
-                "_prev",
-            ),
-            reliable_checkpoint,
-        )
-        new = iter_checkpoint(
-            jump1.join(
-                jump1.select(F.col(node_col).alias("_p"), F.col("label").alias("_pl")),
-                jump1["label"] == F.col("_p"),
-                "left",
-            ).select(
-                node_col,
-                F.least(F.col("label"), F.coalesce(F.col("_pl"), F.col("label"))).alias("label"),
-                "_prev",
-            ),
-            reliable_checkpoint,
-        )
-        release_checkpoint(jump1)
-        converged = new.where(F.col("label") != F.col("_prev")).isEmpty()
-        if _cp is not None:
-            release_checkpoint(_cp)  # superseded only AFTER new materialized
-        _cp, labels = new, new.drop("_prev")
-        if converged:
-            break
-        # the round plan references labels multiple times — sever the
-        # retained object graph every few rounds or per-round overhead
-        # grows multiplicatively (session.sever_lineage)
-        if (_round + 1) % 3 == 0:
-            labels = sever_lineage(labels, f"{scratch}/labels_{_round}")
-            release_checkpoint(_cp)
-            _cp = None  # parquet-backed state; nothing to release
-    if not converged:
+                F.least(F.col("label"), F.coalesce(F.col("nbr_label"), F.col("label"))).alias("label"),
+                F.col("label").alias("_prev"),
+            )
+            # first jump checkpointed: the second jump references its input
+            # twice (row + parent side), and an unmaterialized input would be
+            # recomputed on both sides
+            jump1 = iter_checkpoint(
+                cur.join(
+                    cur.select(F.col(node_col).alias("_p"), F.col("label").alias("_pl")),
+                    cur["label"] == F.col("_p"),
+                    "left",
+                ).select(
+                    node_col,
+                    F.least(F.col("label"), F.coalesce(F.col("_pl"), F.col("label"))).alias("label"),
+                    "_prev",
+                ),
+                reliable_checkpoint,
+            )
+            new = iter_checkpoint(
+                jump1.join(
+                    jump1.select(F.col(node_col).alias("_p"), F.col("label").alias("_pl")),
+                    jump1["label"] == F.col("_p"),
+                    "left",
+                ).select(
+                    node_col,
+                    F.least(F.col("label"), F.coalesce(F.col("_pl"), F.col("label"))).alias("label"),
+                    "_prev",
+                ),
+                reliable_checkpoint,
+            )
+            release_checkpoint(jump1)
+            converged = new.where(F.col("label") != F.col("_prev")).isEmpty()
+            if _cp is not None:
+                release_checkpoint(_cp)  # superseded only AFTER new materialized
+            _cp, labels = new, new.drop("_prev")
+            if converged:
+                break
+            # the round plan references labels multiple times — sever the
+            # retained object graph every few rounds or per-round overhead
+            # grows multiplicatively (session.sever_lineage)
+            if (_round + 1) % 3 == 0:
+                labels = sever_lineage(labels, f"{scratch}/labels_{_round}")
+                release_checkpoint(_cp)
+                _cp = None  # parquet-backed state; nothing to release
+        if not converged:
+            raise RuntimeError(
+                f"min_label_components: no convergence in {max_iter} rounds"
+            )
+        return iter_checkpoint(labels, reliable_checkpoint, release=_cp)
+    finally:
+        release_checkpoint(edges)
         shutil.rmtree(scratch, ignore_errors=True)
-        raise RuntimeError(
-            f"min_label_components: no convergence in {max_iter} rounds"
-        )
-    labels = iter_checkpoint(labels, reliable_checkpoint, release=_cp)
-    shutil.rmtree(scratch, ignore_errors=True)
-    return labels
 
 
 def local_morans_i(

@@ -499,16 +499,10 @@ def q_feature_distance_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
     import pyspark.sql.functions as F2
 
     from gaia_spark.functions import portable as P
-    from gaia_spark.operators.feature_distance import (
-        _zones_meta_pdf,
-        feature_distance_nearest_cells,
-    )
+    from gaia_spark.operators.feature_distance import feature_distance_nearest_cells
 
     feats = parcel_features(spark, sf_dir)
-    zones = spark.createDataFrame(
-        _zones_meta_pdf(_zone_index()).to_dict("records"),
-        "zone_id long, edges array<struct<y1:double,x1:double,y2:double,x2:double>>",
-    )
+    zones = _zone_index().zone_df(spark).select("zone_id", "edges")
     out = feature_distance_nearest_cells(feats, zones, res=5, feature_key="p_partkey")
     return out.select(
         "p_partkey",
@@ -1077,14 +1071,11 @@ def q_feature_buffer(spark: SparkSession, sf_dir: str) -> DataFrame:
     A + P·r + 8r²·sin(π/8) and P + 32r·sin(π/16)."""
     from gaia_spark.functions import portable as P
     from gaia_spark.operators.scalar_geo import buffer_features
+    from gaia_spark.operators.spatial_join import edges_sql
 
     feats = parcel_features(spark, sf_dir)
     buf = buffer_features(feats, 2.0, quad_segs=4)
-    pairs = (
-        "zip_with(slice(buffered, 1, size(buffered) - 1), "
-        "slice(buffered, 2, size(buffered) - 1), "
-        "(a, b) -> struct(a.lat AS y1, a.lon AS x1, b.lat AS y2, b.lon AS x2))"
-    )
+    pairs = edges_sql("buffered")
     area = (
         f"aggregate({pairs}, cast(0 as double), "
         "(acc, p) -> acc + (p.x1 * p.y2 - p.x2 * p.y1)) / 2.0"

@@ -781,17 +781,13 @@ def q_zone_hulls(spark: SparkSession, sf_dir: str) -> DataFrame:
     planar perimeter vs the inscribed-polygon closed forms. Vertex-level
     parity with the single-stage applyInPandas hull is pytest-asserted."""
     from gaia_spark.operators.hull import convex_hull_per_group_distributed
+    from gaia_spark.operators.spatial_join import edges_sql
 
     load(spark, sf_dir, "customer").createOrReplaceTempView("customer")
     pts = spark.sql(_HULL_PTS_SQL)
     hulls = convex_hull_per_group_distributed(pts, "g")
 
-    closed = "concat(vertices, slice(vertices, 1, 1))"
-    pairs = (
-        f"zip_with(slice({closed}, 1, size({closed}) - 1), "
-        f"slice({closed}, 2, size({closed}) - 1), "
-        "(a, b) -> struct(a.lat AS y1, a.lon AS x1, b.lat AS y2, b.lon AS x2))"
-    )
+    pairs = edges_sql("concat(vertices, slice(vertices, 1, 1))")
     area = f"aggregate({pairs}, cast(0 as double), (acc, p) -> acc + (p.x1 * p.y2 - p.x2 * p.y1)) / 2.0"
     perim = (
         f"aggregate({pairs}, cast(0 as double), (acc, p) -> "

@@ -203,16 +203,12 @@ def test_feature_distance_cells_matches_broadcast(spark, zones_idx):
     """Distributed cell-ring nearest-zone == the broadcast zones-array
     result (both sides DataFrames; zones never broadcast)."""
     from gaia_spark.operators.feature_distance import (
-        _zones_meta_pdf,
         feature_distance_nearest,
         feature_distance_nearest_cells,
     )
 
     feats = parcels_df(spark, parcels_pdf(70))
-    zones = spark.createDataFrame(
-        _zones_meta_pdf(zones_idx).to_dict("records"),
-        "zone_id long, edges array<struct<y1:double,x1:double,y2:double,x2:double>>",
-    )
+    zones = zones_idx.zone_df(spark).select("zone_id", "edges")
     want = {
         (r.fid, r.zone_id, round(r.dist_m, 6))
         for r in feature_distance_nearest(feats, zones_idx, feature_key="fid").collect()
@@ -245,3 +241,19 @@ def test_feature_knn_ranks_consistent_with_nearest(spark, zones_idx):
         assert [r for r, _, _ in rs] == [1, 2, 3]
         assert (fid, rs[0][2]) in nearest and nearest[(fid, rs[0][2])] == rs[0][1]
         assert rs[0][1] <= rs[1][1] <= rs[2][1]
+
+
+def test_on_edge_features_read_zero_distance(spark):
+    """A line that starts exactly on a polygon zone's edge is at distance
+    exactly 0 from that zone (the boundary test decides intersects)."""
+    from gaia_spark.operators.feature_distance import feature_near_join
+    from gaia_spark.synth import synth_zones_pdf
+    from tests.test_feature_join import on_edge_features
+
+    idx = ZoneIndex.build(synth_zones_pdf(16))
+    feats, owner = on_edge_features(spark, "line")
+    got = {
+        (r.fid, r.zone_id): r.dist_m
+        for r in feature_near_join(feats, idx, 0.0, feature_key="fid", kind="line").collect()
+    }
+    assert {k: got.get(k) for k in owner.items()} == {k: 0.0 for k in owner.items()}

@@ -484,16 +484,54 @@ def test_feature_equals_canonical_invariance(spark):
     assert got == {(1, 10), (2, 10), (3, 10)}
 
 
+def on_edge_features(spark, kind, length=0.01):
+    """One feature per edge of every polygon zone of synth_zones_pdf(16)
+    (64 edges), starting exactly on the edge midpoint and pointing outward:
+    kind='line' gives a two-vertex segment, kind='poly' a closed triangle
+    with its apex on the midpoint. The zones are convex, so each feature
+    meets the zone it starts on only at that midpoint — the reference
+    kernel.PreparedPolygon confirms it. Returns (features, {fid: zone_id});
+    fids start at 10001 so they never collide with parcels_pdf's."""
+    from gaia_spark.synth import synth_zones_pdf
+
+    rows, owner = [], {}
+    for z in synth_zones_pdf(16).itertuples(index=False):
+        if z.kind != "poly":
+            continue
+        la = np.array([v["lat"] for v in z.vertices])
+        lo = np.array([v["lon"] for v in z.vertices])
+        prep = PreparedPolygon(la, lo)
+        centre = np.array([la[:-1].mean(), lo[:-1].mean()])
+        for i in range(len(la) - 1):
+            m = np.array([(la[i] + la[i + 1]) / 2, (lo[i] + lo[i + 1]) / 2])
+            t = np.array([la[i + 1] - la[i], lo[i + 1] - lo[i]])
+            t = t / np.hypot(*t) * length
+            n = np.array([t[1], -t[0]])
+            if n @ (m - centre) < 0:
+                n = -n
+            far = [m + n] if kind == "line" else [m + n + t / 2, m + n - t / 2]
+            assert prep.on_boundary([m[0]], [m[1]])[0]
+            assert not prep.covers([p[0] for p in far], [p[1] for p in far]).any()
+            ring = [m, *far] if kind == "line" else [m, *far, m]
+            fid = 10_001 + len(rows)
+            rows.append((fid, [{"lat": float(a), "lon": float(b)} for a, b in ring]))
+            owner[fid] = int(z.zone_id)
+    feats = spark.createDataFrame(rows, "fid long, vertices array<struct<lat:double,lon:double>>")
+    return feats, owner
+
+
 def test_arrow_refine_parity_with_sql(spark, rect_zones_idx):
     """refine='arrow' (numpy pair predicate) must produce EXACTLY the rows
     of the default SQL HOF refine — over the mixed rect+poly zone layer,
-    for every predicate the arrow backend supports, both kinds."""
+    for every predicate the arrow backend supports, both kinds. The
+    on-edge features put probe vertices exactly on zone edges, so the
+    boundary branch is compared too."""
     from gaia_spark.synth import synth_zones_pdf
 
     idx = ZoneIndex.build(synth_zones_pdf(16))
-    feats = parcels_df(spark, parcels_pdf(250))
+    parcels = parcels_df(spark, parcels_pdf(250))
 
-    def pairs(pred, kind, refine):
+    def pairs(feats, pred, kind, refine):
         return {
             (r.fid, r.zone_id)
             for r in feature_spatial_join(
@@ -501,14 +539,65 @@ def test_arrow_refine_parity_with_sql(spark, rect_zones_idx):
             ).collect()
         }
 
+    feats = parcels.unionByName(on_edge_features(spark, "poly")[0])
     for pred in ("intersects", "within"):
-        assert pairs(pred, "poly", "sql") == pairs(pred, "poly", "arrow"), pred
+        assert pairs(feats, pred, "poly", "sql") == pairs(feats, pred, "poly", "arrow"), pred
     # line kinds: open chains; crosses is line-only
+    feats = parcels.unionByName(on_edge_features(spark, "line")[0])
     for pred in ("intersects", "crosses"):
-        assert pairs(pred, "line", "sql") == pairs(pred, "line", "arrow"), pred
+        assert pairs(feats, pred, "line", "sql") == pairs(feats, pred, "line", "arrow"), pred
 
     with pytest.raises(ValueError, match="arrow"):
-        feature_spatial_join(feats, idx, "touches", feature_key="fid", refine="arrow")
+        feature_spatial_join(parcels, idx, "touches", feature_key="fid", refine="arrow")
+
+
+@pytest.mark.parametrize("kind", ["line", "poly"])
+def test_on_edge_features_touch_their_zone(spark, kind):
+    """A feature that starts exactly on a polygon zone's edge and points
+    outward intersects that zone under both refine backends, touches it
+    (SQL; the arrow backend has no touches), is not within it and, as a
+    line, does not cross it."""
+    from gaia_spark.synth import synth_zones_pdf
+
+    idx = ZoneIndex.build(synth_zones_pdf(16))
+    feats, owner = on_edge_features(spark, kind)
+    want = set(owner.items())
+
+    def pairs(pred, refine="sql"):
+        return {
+            (r.fid, r.zone_id)
+            for r in feature_spatial_join(
+                feats, idx, pred, feature_key="fid", kind=kind, refine=refine
+            ).collect()
+        }
+
+    assert len(want) == 64
+    assert want - pairs("intersects", "sql") == set()
+    assert want - pairs("intersects", "arrow") == set()
+    assert want - pairs("touches") == set()
+    assert want & pairs("within") == set()
+    if kind == "line":
+        assert want & pairs("crosses") == set()
+
+
+@pytest.mark.parametrize("refine", ["sql", "arrow"])
+def test_nan_vertex_feature_is_refused(spark, refine):
+    """A closed square with one NaN vertex fails the join with a clear
+    error under both refine backends instead of yielding rows the two
+    backends disagree on."""
+    from gaia_spark.synth import synth_zones_pdf
+
+    zones = synth_zones_pdf(16)
+    idx = ZoneIndex.build(zones)
+    la, lo = float(zones.iloc[0]["min_lat"]), float(zones.iloc[0]["min_lon"])
+    bad = rect_ring(la - 0.5, lo - 0.5, la + 0.5, lo + 0.5)
+    bad[2] = {"lat": float("nan"), "lon": lo + 0.5}
+    feats = spark.createDataFrame(
+        [(1, rect_ring(la - 0.5, lo - 0.5, la + 0.5, lo + 0.5)), (2, bad)],
+        "fid long, vertices array<struct<lat:double,lon:double>>",
+    )
+    with pytest.raises(Exception, match="NaN vertex"):
+        feature_spatial_join(feats, idx, "intersects", feature_key="fid", refine=refine).collect()
 
 
 def test_auto_refine_backend_choice(spark):

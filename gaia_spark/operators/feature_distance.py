@@ -20,19 +20,20 @@ Distance definition (planar-parameterized geodesic):
   geometry, a documented small-edge approximation for long slanted edges
   (the parameterization is planar in degrees).
 
-Physical plan (the 100-TB shape, mirroring knn_join_broadcast's sql impl):
+Physical plan (the 100-TB shape, mirroring knn_join_broadcast):
 the zone layer rides along as ONE broadcast array column; per feature a
 single JVM expression tree (transform / array_min over the zones array)
 computes every zone distance and picks (min dist, min zone_id) — no
 explode, no shuffle, no Python. Features stream through map-side only.
-For zone sets too large to broadcast, fall back to the cell-ring pattern
-in knn.knn_join_cells (future work; the web-pipeline shape is small-m).
+For zone sets too large to broadcast, :func:`feature_distance_nearest_cells`
+runs the point kNN's cell-ring loop (``knn.ring_topk``) over the zones'
+bbox-cell cover.
 """
 
 from __future__ import annotations
 
 import pyspark.sql.functions as F
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 
 from gaia_spark.functions import portable
 
@@ -41,8 +42,8 @@ from gaia_spark.operators.feature_join import (
     _covered_at,
     _proper_cross_sql,
 )
+from gaia_spark.operators.knn import ring_topk
 from gaia_spark.operators.spatial_join import ZoneIndex, _boundary_sql, edges_sql
-from gaia_spark.session import iter_checkpoint
 
 
 def _pt_seg_dist_m_sql(edges: str, lat: str, lon: str) -> str:
@@ -156,8 +157,6 @@ def feature_near_join(
     )
 
 
-
-
 def feature_distance_nearest_cells(
     features: DataFrame,
     zones: DataFrame,
@@ -170,30 +169,25 @@ def feature_distance_nearest_cells(
     max_fallback_rows: int = 10_000_000,
 ) -> DataFrame:
     """Distributed nearest-zone per feature for zone layers TOO LARGE TO
-    BROADCAST: iterative cell-ring expansion (the knn.knn_join_cells
-    pattern generalized to geometry-to-geometry distance). Both sides stay
-    DataFrames end to end.
+    BROADCAST: the :func:`gaia_spark.operators.knn.ring_topk` loop with
+    k=1 and the geometry-to-geometry distance. Both sides stay DataFrames
+    end to end.
 
     ``zones``: (zone_id long, edges array<struct<y1,x1,y2,x2>>).
 
-    Round ρ anchors each still-unsettled feature at its bbox-center cell,
-    explodes the 8ρ hollow-ring offsets (tiny literal array — the only
-    driver-built object), joins the zone bbox-cell cover on cell, and
-    keeps a running best (dist, zone_id) per feature. A feature settles
-    when its best distance beats the conservative bound
-    ``ring_lower_bound(ρ+1) − feature_bbox_half_diagonal``: any unseen
-    zone's nearest point lies in an unexplored cell, i.e. at least that
-    far from the feature. The bounded final round compares the (small)
-    unsettled remainder against every zone directly.
+    Each feature anchors at its bbox-center cell; each zone contributes one
+    row per cell of its bbox. The slack is a strict over-estimate of the
+    feature's reach from its anchor: a feature settles when its best
+    distance beats ``ring_lower_bound(ρ+1) − slack``, because any unseen
+    zone's nearest point lies in an unexplored cell, i.e. at least that far
+    from the feature.
 
     Returns (feature_key, zone_id, dist_m); ties by (dist, zone_id) asc.
     """
     n = 1 << res
-    spark = features.sparkSession
-
     # zone side: bbox from edges -> cell-range cover (distributed explode)
     ze = zones.select(
-        F.col("zone_id").alias("_zid"),
+        F.col("zone_id").alias("_rk"),
         F.col("edges").alias("_zed"),
         F.expr("array_min(transform(edges, e -> least(e.y1, e.y2)))").alias("_zmin_lat"),
         F.expr("array_max(transform(edges, e -> greatest(e.y1, e.y2)))").alias("_zmax_lat"),
@@ -205,8 +199,7 @@ def feature_distance_nearest_cells(
     zcover = (
         ze.withColumn("_zx", F.explode(F.expr(f"sequence({zx0}, {zx1})")))
         .withColumn("_zy", F.explode(F.expr(f"sequence({zy0}, {zy1})")))
-        .select("_zid", "_zed", (F.col("_zy") * n + F.col("_zx")).alias("_zcell"))
-        .persist()
+        .select("_rk", "_zed", (F.col("_zy") * n + F.col("_zx")).alias("_rcell"))
     )
 
     feats = (
@@ -240,112 +233,23 @@ def feature_distance_nearest_cells(
     anchor_lat = f"(({fmin_lat}) + ({fmax_lat})) / 2"
     anchor_lon = f"(({fmin_lon}) + ({fmax_lon})) / 2"
     pend = feats.select(
-        F.col(feature_key).alias("_fk"),
+        F.col(feature_key).alias("_lk"),
         "vertices",
         F.expr(fedges).alias("_fedges"),
         F.expr(half_bound).alias("_hd"),
         F.expr(f"({anchor_lat})").alias("_alat"),
         F.expr(portable.cell_id_sql(f"({anchor_lat})", f"({anchor_lon})", res)).alias("_acell"),
     )
-
-    from gaia_spark.operators.knn import _ring_offsets
-
-    dist = F.expr(_zone_dist_sql(kind, zedges="_zed"))
-    best: DataFrame | None = None  # set on the first _merge (possibly empty frame)
-
-    def _merge(acc: DataFrame | None, cand: DataFrame) -> DataFrame:
-        merged = cand if acc is None else acc.unionByName(cand)
-        merged = (
-            merged.dropDuplicates(["_fk", "_zid"])
-            .withColumn(
-                "_rn",
-                F.row_number().over(
-                    Window.partitionBy("_fk").orderBy(F.asc("_d"), F.asc("_zid"))
-                ),
-            )
-            .where(F.col("_rn") <= 1)
-            .drop("_rn")
-        )
-        # cut the accumulator's lineage each round (this line was previously
-        # unreachable behind an early return — the per-round checkpoint was
-        # silently skipped) and free the superseded accumulator's blocks
-        return iter_checkpoint(merged, reliable_checkpoint, release=acc)
-
-    for rho in range(max_rounds + 1):
-        last = rho == max_rounds
-        if last:
-            # loud bounded fallback (VERDICT r4 #9): the unsettled remainder
-            # is small by construction after ring expansion, but count it
-            # and refuse an oversized crossJoin rather than assume
-            n_pending = pend.count()
-            if n_pending == 0:
-                break
-            zuniq = zcover.select("_zid", "_zed").dropDuplicates(["_zid"])
-            n_zones = zuniq.count()
-            print(
-                f"feature_distance_nearest_cells: final fallback crossJoin "
-                f"over {n_pending} unsettled features x {n_zones} zones"
-            )
-            if n_pending * n_zones > max_fallback_rows:
-                raise RuntimeError(
-                    f"feature_distance_nearest_cells: fallback crossJoin "
-                    f"would produce {n_pending * n_zones} rows (> "
-                    f"max_fallback_rows={max_fallback_rows}); raise "
-                    f"max_rounds or the bound"
-                )
-            cand = pend.crossJoin(zuniq)
-        else:
-            offs = F.array(
-                *[
-                    F.struct(F.lit(dx).alias("dx"), F.lit(dy).alias("dy"))
-                    for dx, dy in _ring_offsets(rho)
-                ]
-            )
-            cover = (
-                pend.withColumn("_o", F.explode(offs))
-                .select(
-                    "_fk", "vertices", "_fedges", "_hd", "_alat",
-                    (F.expr(portable.idiv_sql("_acell", n)) + F.col("_o.dy")).alias("_y"),
-                    F.pmod(F.col("_acell") % n + F.col("_o.dx"), F.lit(n)).alias("_x"),
-                )
-                .where((F.col("_y") >= 0) & (F.col("_y") < n))
-                .select("_fk", "vertices", "_fedges", "_hd", "_alat",
-                        (F.col("_y") * n + F.col("_x")).alias("_cell"))
-            )
-            cand = cover.join(zcover, cover["_cell"] == zcover["_zcell"], "inner")
-        cand = cand.withColumn("_d", dist).select("_fk", "_zid", "_d")
-        best = _merge(best, cand)
-        if last:
-            break
-        # settle: best dist beats the conservative next-ring lower bound
-        cell_h_deg = 180.0 / n
-        vert = F.lit(rho * cell_h_deg * 110_000.0)
-        max_abs_lat = F.least(F.lit(90.0), F.abs(F.col("_alat")) + F.lit((rho + 2) * cell_h_deg))
-        # 110,000 m/deg floor — must UNDER-estimate haversine (111,195
-        # m/deg) or a feature can settle on a non-nearest zone
-        horiz = (
-            F.lit(rho * (360.0 / n) * 110_000.0)
-            * F.greatest(F.lit(0.0), F.cos(F.radians(max_abs_lat)))
-        )
-        settled = (
-            pend.select("_fk", "_alat", "_hd")
-            .join(best.select(F.col("_fk").alias("_bfk"), "_d"),
-                  F.col("_fk") == F.col("_bfk"), "inner")
-            .where(F.col("_d") < F.least(vert, horiz) - F.col("_hd"))
-            .select("_fk")
-        )
-        pend = iter_checkpoint(
-            pend.join(settled, "_fk", "left_anti"),
-            reliable_checkpoint,
-            release=pend,
-        )
-        if pend.isEmpty():
-            break
-
-    zcover.unpersist()
+    best = ring_topk(
+        pend, zcover, F.expr(_zone_dist_sql(kind, zedges="_zed")), 1, res,
+        slack="_hd",
+        max_rounds=max_rounds,
+        reliable_checkpoint=reliable_checkpoint,
+        max_fallback_rows=max_fallback_rows,
+    )
     return best.select(
-        F.col("_fk").alias(feature_key),
-        F.col("_zid").alias("zone_id"),
+        F.col("_lk").alias(feature_key),
+        F.col("_rk").alias("zone_id"),
         F.col("_d").alias("dist_m"),
     )
 

@@ -32,7 +32,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 
 from gaia_spark.functions import portable
-from gaia_spark.synth import TILE_PX
+from gaia_spark.synth import TILE_PX, band_f32_sql, tile_px_center_sql
 
 # (compass, dr, dc, esri_code, slope-square multiplier: 2 orthogonal / 1 diagonal)
 D8 = [
@@ -86,6 +86,42 @@ def d8_step_sql(axis: int) -> str:
         for _, dr, dc, code, _ in D8
     )
     return f"(CASE {pairs} ELSE 0 END)"
+
+
+def d8_pivot_cte(n_t: int) -> str:
+    """Shared DuckDB oracle CTE chain for the synth raster at ``n_t`` tiles
+    per axis: rebuild the zoom's global pixel grid, scatter each pixel onto
+    its 9 windows, pivot to v_c/v_<compass>, rank with the shared
+    exact-integer D8 keys and decode the ESRI dir."""
+    px = TILE_PX
+    n_px = n_t * px
+    c_lat, c_lon = tile_px_center_sql(n_t, px)
+    v = band_f32_sql(0)
+    vcols = ", ".join(
+        f"max(CASE WHEN orr = {dr} AND occ = {dc} THEN v_e4 END) AS v_{nm}"
+        for nm, dr, dc, _, _ in D8
+    )
+    kcols = ", ".join(f"{d8_key_sql(nm)} AS k_{nm}" for nm, *_ in D8)
+    return f"""
+    g AS (SELECT r, c FROM generate_series(0, {n_px - 1}) t1(r),
+                           generate_series(0, {n_px - 1}) t2(c)),
+    pxg AS (SELECT r, c, {portable.idiv_sql('r', px)} AS ty, r % {px} AS i,
+                   {portable.idiv_sql('c', px)} AS tx, c % {px} AS j FROM g),
+    pc AS (SELECT r, c, {c_lat} AS plat, {c_lon} AS plon FROM pxg),
+    pv AS (SELECT r, c, {portable.floor_scaled_sql(v, 4)} AS v_e4 FROM pc),
+    offs(dr, dc) AS (VALUES (-1,-1),(-1,0),(-1,1),(0,-1),(0,0),(0,1),(1,-1),(1,0),(1,1)),
+    scat AS (SELECT r + dr AS tr, (c + dc + {n_px}) % {n_px} AS tc,
+                    -dr AS orr, -dc AS occ, v_e4
+             FROM pv CROSS JOIN offs
+             WHERE r + dr >= 0 AND r + dr < {n_px}),
+    win AS (SELECT tr, tc, count(*) AS _n,
+                   max(CASE WHEN orr = 0 AND occ = 0 THEN v_e4 END) AS v_c,
+                   {vcols}
+            FROM scat GROUP BY tr, tc),
+    kk AS (SELECT cast(tr as bigint) AS r, cast(tc as bigint) AS c, {kcols}
+           FROM win WHERE _n = 9),
+    dd AS (SELECT r, c, cast({d8_dir_sql(portable.DUCK)} as int) AS dir FROM kk)
+    """
 
 
 def flow_direction(raster: DataFrame, zoom: int, band: int = 0) -> DataFrame:

@@ -13,18 +13,10 @@ import numpy as np
 import pandas as pd
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
-from pyspark.sql.types import ArrayType, DoubleType, StructField, StructType
+from pyspark.sql.types import DoubleType, StructField, StructType
 
-from gaia_spark.functions.kernel import (
-    destination_point,
-    polygon_area_m2,
-    polyline_length_m,
-)
+from gaia_spark.functions.kernel import polygon_area_m2, polyline_length_m
 from gaia_spark.operators.spatial_join import edges_sql
-
-RING = ArrayType(
-    StructType([StructField("lat", DoubleType()), StructField("lon", DoubleType())])
-)
 
 
 @F.pandas_udf(DoubleType())
@@ -79,30 +71,6 @@ def combined_centroid(points: DataFrame) -> DataFrame:
     return points.where(F.col("lat").isNotNull()).agg(
         F.avg("lat").alias("centroid_lat"), F.avg("lon").alias("centroid_lon")
     )
-
-
-@F.pandas_udf(RING)
-def buffer_ngon_udf(lat: pd.Series, lon: pd.Series, radius_m: pd.Series) -> pd.Series:
-    """BufferProcess for points: a 32-gon spherical circle polygon.
-
-    For *predicates* prefer the haversine form (operators.knn.near_join) —
-    materialize polygons only for export/visualisation.
-    """
-    n = 32
-    bearings = np.linspace(0.0, 2 * np.pi, n, endpoint=False)
-    out = []
-    la = lat.to_numpy(dtype=np.float64)
-    lo = lon.to_numpy(dtype=np.float64)
-    r = radius_m.to_numpy(dtype=np.float64)
-    for i in range(len(la)):
-        if np.isnan(la[i]):
-            out.append(None)
-            continue
-        blat, blon = destination_point(la[i], lo[i], bearings, r[i])
-        ring = [{"lat": float(a), "lon": float(b)} for a, b in zip(blat, blon)]
-        ring.append(ring[0])
-        out.append(ring)
-    return pd.Series(out)
 
 
 def chain_length_m_sql(vertices: str = "vertices") -> str:
@@ -203,19 +171,16 @@ def buffer_ngon_sql(lat: str = "lat", lon: str = "lon", radius_m: float = 0.0, n
     return f"concat({ring}, slice({ring}, 1, 1))"
 
 
-def add_buffer(
-    points: DataFrame, radius_m: float, out: str = "buffer", impl: str = "sql"
-) -> DataFrame:
-    """impl='sql' (default): codegen-able JVM expression; impl='arrow':
-    numpy kernel UDF (kept for parity testing / export paths)."""
-    if impl == "sql":
-        return points.withColumn(
-            out,
-            F.when(
-                F.col("lat").isNotNull(), F.expr(buffer_ngon_sql("lat", "lon", radius_m))
-            ),
-        )
-    return points.withColumn(out, buffer_ngon_udf("lat", "lon", F.lit(float(radius_m))))
+def add_buffer(points: DataFrame, radius_m: float, out: str = "buffer") -> DataFrame:
+    """BufferProcess for points: a closed 32-gon spherical circle polygon
+    per point, as one codegen-able JVM expression (NULL for a NULL lat).
+
+    For *predicates* prefer the haversine form (operators.knn.near_join) —
+    materialize polygons only for export/visualisation."""
+    return points.withColumn(
+        out,
+        F.when(F.col("lat").isNotNull(), F.expr(buffer_ngon_sql("lat", "lon", radius_m))),
+    )
 
 
 # --- feature-layer buffer (polygon / line offset rings) ----------------------

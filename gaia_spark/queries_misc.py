@@ -11,7 +11,9 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
 from gaia_spark.functions import portable as P
+from gaia_spark.operators.hydrology import d8_pivot_cte
 from gaia_spark.queries import customer_points, load, register
+from gaia_spark.synth import band_f32_sql, tile_px_center_sql
 
 
 def _dbscan_oracle() -> str:
@@ -173,38 +175,13 @@ def q_raster_zonal(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _tile_px_center_sql(n_t: int, px: int) -> tuple[str, str]:
-    """Pixel-center (plat, plon) expressions for tile (tx, ty) pixel (i, j)
-    at a zoom with ``n_t`` tiles per axis — the per-tile twin of the global
-    pixel grid in :func:`_raster_zonal_oracle` (same Mercator bounds, same
-    numpy linspace op order, proven bit-identical there)."""
-    sinh = "((exp({x}) - exp(-({x}))) / 2.0)"
-    merc_lat = "degrees(atan(" + sinh.format(x=f"pi() * (1.0 - (2 * {{y}}) / {n_t}.0)") + "))"
-    lat1 = merc_lat.format(y="ty")        # tile top
-    lat0 = merc_lat.format(y="(ty + 1)")  # tile bottom
-    lon0 = f"((tx / {n_t}.0) * 360.0 - 180.0)"
-    lon1 = f"(((tx + 1) / {n_t}.0) * 360.0 - 180.0)"
-    c_lat = f"(({lat1} + i * (({lat0} - {lat1}) / {px})) - ({lat1} - {lat0}) / {2 * px})"
-    c_lon = f"(({lon0} + j * (({lon1} - {lon0}) / {px})) + ({lon1} - {lon0}) / {2 * px})"
-    return c_lat, c_lon
-
-
-def _band_f32_sql(band: int) -> str:
-    """synth.surface_value(plat, plon, band) quantized through float32,
-    back as double (IEEE double→float32 is identical in numpy and DuckDB)."""
-    return (
-        f"cast(cast(100.0 * (sin(3.0 * radians(plat)) * cos(2.0 * radians(plon))"
-        f" + {band}.0) as float) as double)"
-    )
-
-
 def _raster_math_oracle() -> str:
     """raster_math(calc='A + 2*B') replayed per pixel: band values float32-
     quantized like the tile payloads, the calc evaluated in float64 (numpy
     env dtype), the result quantized back to float32 (RASTER_SCHEMA)."""
     n_t, px = 8, 64
-    c_lat, c_lon = _tile_px_center_sql(n_t, px)
-    r = f"cast(cast(({_band_f32_sql(0)}) + 2.0 * ({_band_f32_sql(1)}) as float) as double)"
+    c_lat, c_lon = tile_px_center_sql(n_t, px)
+    r = f"cast(cast(({band_f32_sql(0)}) + 2.0 * ({band_f32_sql(1)}) as float) as double)"
     return f"""
     WITH t AS (SELECT tx, ty FROM generate_series(0, {n_t - 1}) a(tx),
                                   generate_series(0, {n_t - 1}) b(ty)),
@@ -250,7 +227,7 @@ def _raster_clip_oracle() -> str:
     from gaia_spark.queries import ZONES_CTE
 
     n_t, px = 8, 64
-    c_lat, c_lon = _tile_px_center_sql(n_t, px)
+    c_lat, c_lon = tile_px_center_sql(n_t, px)
     return f"""
     WITH {ZONES_CTE},
     zt AS (SELECT zone_id, min_lat, min_lon, max_lat, max_lon, tx, ty
@@ -266,7 +243,7 @@ def _raster_clip_oracle() -> str:
     pv AS (SELECT zone_id, tx, ty,
            CASE WHEN plat BETWEEN min_lat AND max_lat
                  AND plon BETWEEN min_lon AND max_lon THEN 1 ELSE 0 END AS kept,
-           {_band_f32_sql(0)} AS v FROM pc),
+           {band_f32_sql(0)} AS v FROM pc),
     pair AS (SELECT zone_id, tx, ty,
              cast(sum(kept) as bigint) AS n_valid,
              min(CASE WHEN kept = 1 THEN v END) AS vmin,
@@ -1206,8 +1183,8 @@ def q_variogram(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _focal_oracle() -> str:
     n_t, px = 8, 64
     n_px = n_t * px
-    c_lat, c_lon = _tile_px_center_sql(n_t, px)
-    v = _band_f32_sql(0)
+    c_lat, c_lon = tile_px_center_sql(n_t, px)
+    v = band_f32_sql(0)
     mean = P.bigint_div(
         "cast(sum(v_e4) as bigint) + count(*) * 2000000", "count(*) * 100", P.DUCK
     )
@@ -1466,8 +1443,8 @@ def q_std_ellipse(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _slope_oracle() -> str:
     n_t, px = 8, 64
     n_px = n_t * px
-    c_lat, c_lon = _tile_px_center_sql(n_t, px)
-    v = _band_f32_sql(0)
+    c_lat, c_lon = tile_px_center_sql(n_t, px)
+    v = band_f32_sql(0)
     grad = "sqrt(cast(gx_e4 * gx_e4 + gy_e4 * gy_e4 as double)) / cast(80000 as double)"
     deg = "cast(180 as double) / pi()"
     aspect_rad = "atan2(cast(gy_e4 as double), cast(gx_e4 as double))"
@@ -1590,8 +1567,8 @@ def _contour_oracle() -> str:
     n_t, px = 8, 64
     n_px = n_t * px
     lvl = int(math.floor(_CONTOUR_LVL * 1e4 + 0.5))
-    c_lat, c_lon = _tile_px_center_sql(n_t, px)
-    v = _band_f32_sql(0)
+    c_lat, c_lon = tile_px_center_sql(n_t, px)
+    v = band_f32_sql(0)
     code = (
         f"(CASE WHEN v00 >= {lvl} THEN 8 ELSE 0 END + "
         f"CASE WHEN v01 >= {lvl} THEN 4 ELSE 0 END + "
@@ -1838,46 +1815,9 @@ def q_emerging_hotspots(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --- D8 hydrology: flow direction / accumulation / watersheds ------------------
 
-def _d8_pivot_cte(n_t: int) -> str:
-    """Shared oracle CTE chain: rebuild the zoom's global pixel grid, scatter
-    each pixel onto its 9 windows, pivot to v_c/v_<compass>, rank with the
-    shared exact-integer D8 keys and decode the ESRI dir."""
-    from gaia_spark.operators.hydrology import D8, d8_dir_sql, d8_key_sql
-
-    px = 64
-    n_px = n_t * px
-    c_lat, c_lon = _tile_px_center_sql(n_t, px)
-    v = _band_f32_sql(0)
-    vcols = ", ".join(
-        f"max(CASE WHEN orr = {dr} AND occ = {dc} THEN v_e4 END) AS v_{nm}"
-        for nm, dr, dc, _, _ in D8
-    )
-    kcols = ", ".join(f"{d8_key_sql(nm)} AS k_{nm}" for nm, *_ in D8)
-    return f"""
-    g AS (SELECT r, c FROM generate_series(0, {n_px - 1}) t1(r),
-                           generate_series(0, {n_px - 1}) t2(c)),
-    pxg AS (SELECT r, c, {P.idiv_sql('r', px)} AS ty, r % {px} AS i,
-                   {P.idiv_sql('c', px)} AS tx, c % {px} AS j FROM g),
-    pc AS (SELECT r, c, {c_lat} AS plat, {c_lon} AS plon FROM pxg),
-    pv AS (SELECT r, c, {P.floor_scaled_sql(v, 4)} AS v_e4 FROM pc),
-    offs(dr, dc) AS (VALUES (-1,-1),(-1,0),(-1,1),(0,-1),(0,0),(0,1),(1,-1),(1,0),(1,1)),
-    scat AS (SELECT r + dr AS tr, (c + dc + {n_px}) % {n_px} AS tc,
-                    -dr AS orr, -dc AS occ, v_e4
-             FROM pv CROSS JOIN offs
-             WHERE r + dr >= 0 AND r + dr < {n_px}),
-    win AS (SELECT tr, tc, count(*) AS _n,
-                   max(CASE WHEN orr = 0 AND occ = 0 THEN v_e4 END) AS v_c,
-                   {vcols}
-            FROM scat GROUP BY tr, tc),
-    kk AS (SELECT cast(tr as bigint) AS r, cast(tc as bigint) AS c, {kcols}
-           FROM win WHERE _n = 9),
-    dd AS (SELECT r, c, cast({d8_dir_sql(P.DUCK)} as int) AS dir FROM kk)
-    """
-
-
 @register(
     "q_flow_dir",
-    f"WITH {_d8_pivot_cte(4)} SELECT r, c, dir FROM dd",
+    f"WITH {d8_pivot_cte(4)} SELECT r, c, dir FROM dd",
 )
 def q_flow_dir(spark: SparkSession, sf_dir: str) -> DataFrame:
     """D8 steepest-descent flow direction over the zoom-2 global pixel grid
@@ -1897,7 +1837,7 @@ def _flow_accum_oracle() -> str:
 
     n_px = 4 * 64
     return f"""
-    WITH RECURSIVE {_d8_pivot_cte(4)},
+    WITH RECURSIVE {d8_pivot_cte(4)},
     nodes AS (SELECT r * {n_px} + c AS v, r, c, dir FROM dd),
     tgt AS (SELECT v, (r + {d8_step_sql(0)}) * {n_px}
                       + ((c + {d8_step_sql(1)} + {n_px}) % {n_px}) AS nxt
@@ -2151,8 +2091,8 @@ def _bilinear_oracle() -> str:
     n_src = n_t * px
     n_tgt = 2 * n_src
     off = 10**7
-    c_lat, c_lon = _tile_px_center_sql(n_t, px)
-    v = _band_f32_sql(0)
+    c_lat, c_lon = tile_px_center_sql(n_t, px)
+    v = band_f32_sql(0)
     return f"""
     WITH g AS (SELECT r, c FROM generate_series(0, {n_src - 1}) t1(r),
                             generate_series(0, {n_src - 1}) t2(c)),
@@ -2245,8 +2185,8 @@ def q_hilbert_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _terrain_oracle() -> str:
     n_t, px = 8, 64
     n_px = n_t * px
-    c_lat, c_lon = _tile_px_center_sql(n_t, px)
-    v = _band_f32_sql(0)
+    c_lat, c_lon = tile_px_center_sql(n_t, px)
+    v = band_f32_sql(0)
     off = 2_000_000
     tpi = P.bigint_div(f"n_nb * v_e4 - _s + n_nb * {off}", "n_nb", P.DUCK)
     ssd = "(n_nb * v_e4 * v_e4 - 2 * v_e4 * _s + _ss)"
@@ -2302,8 +2242,8 @@ def _cd_ctes() -> str:
     q_cost_distance and q_isochrones oracles."""
     n_t, px = 2, 64
     n_px = n_t * px
-    c_lat, c_lon = _tile_px_center_sql(n_t, px)
-    v = _band_f32_sql(0)
+    c_lat, c_lon = tile_px_center_sql(n_t, px)
+    v = band_f32_sql(0)
     cost = P.floor_scaled_sql(f"(({v}) + cast(150 as double))", 4)
     w = (
         "(cast(_cs + c_e4 as double) / cast(20000 as double)) * "
@@ -2378,8 +2318,8 @@ def _reclass_cls_sql() -> str:
 def _reclass_oracle() -> str:
     n_t, px = 4, 64
     n_px = n_t * px
-    c_lat, c_lon = _tile_px_center_sql(n_t, px)
-    v = _band_f32_sql(0)
+    c_lat, c_lon = tile_px_center_sql(n_t, px)
+    v = band_f32_sql(0)
     return f"""
     WITH g AS (SELECT r, c FROM generate_series(0, {n_px - 1}) t1(r),
                             generate_series(0, {n_px - 1}) t2(c)),
@@ -2417,8 +2357,8 @@ def q_raster_reclass(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _polygonize_oracle() -> str:
     n_t, px = 1, 64
     n_px = n_t * px
-    c_lat, c_lon = _tile_px_center_sql(n_t, px)
-    v = _band_f32_sql(0)
+    c_lat, c_lon = tile_px_center_sql(n_t, px)
+    v = band_f32_sql(0)
     return f"""
     WITH RECURSIVE g AS (SELECT r, c FROM generate_series(0, {n_px - 1}) t1(r),
                             generate_series(0, {n_px - 1}) t2(c)),
@@ -3000,8 +2940,8 @@ def _viewshed_oracle() -> str:
 
     n_t, px = 8, 64
     r0, c0, rad, h = _VS_R0, _VS_C0, _VS_RAD, _VS_H
-    c_lat, c_lon = _tile_px_center_sql(n_t, px)
-    v = _band_f32_sql(0)
+    c_lat, c_lon = tile_px_center_sql(n_t, px)
+    v = band_f32_sql(0)
     sr = f"{r0} + {round_frac_sql('k', 'dr', 'm', rad, P.DUCK)}"
     sc = f"{c0} + {round_frac_sql('k', 'dc', 'm', rad, P.DUCK)}"
     # grid restricted to the radius bounding box: line samples never leave
@@ -3186,8 +3126,8 @@ def _curvature_oracle() -> str:
 
     n_t, px = 8, 64
     n_px = n_t * px
-    c_lat, c_lon = _tile_px_center_sql(n_t, px)
-    v = _band_f32_sql(0)
+    c_lat, c_lon = tile_px_center_sql(n_t, px)
+    v = band_f32_sql(0)
     prof, plan, gen = zt_curvature_sqls()
     w = {k: zt_weight_sql("v_e4", "(-dr)", "(-dc)", k) for k in "defgh"}
     return f"""

@@ -1660,12 +1660,11 @@ def q_ab_test(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _strahler_oracle() -> str:
-    from gaia_spark.operators.hydrology import d8_step_sql
-    from gaia_spark.queries_misc import _d8_pivot_cte
+    from gaia_spark.operators.hydrology import d8_pivot_cte, d8_step_sql
 
     n_px = 64
     return f"""
-    WITH RECURSIVE {_d8_pivot_cte(1)},
+    WITH RECURSIVE {d8_pivot_cte(1)},
     nodes AS (SELECT r * {n_px} + c AS v, r, c, dir FROM dd),
     tgt AS (SELECT v, (r + {d8_step_sql(0)}) * {n_px}
                       + ((c + {d8_step_sql(1)} + {n_px}) % {n_px}) AS nxt
@@ -1868,12 +1867,11 @@ _TWI = (
 
 
 def _twi_oracle() -> str:
-    from gaia_spark.operators.hydrology import d8_step_sql
-    from gaia_spark.queries_misc import _d8_pivot_cte
+    from gaia_spark.operators.hydrology import d8_pivot_cte, d8_step_sql
 
     n_px = 4 * 64
     return f"""
-    WITH RECURSIVE {_d8_pivot_cte(4)},
+    WITH RECURSIVE {d8_pivot_cte(4)},
     nodes AS (SELECT r * {n_px} + c AS v, r, c, dir FROM dd),
     tgt AS (SELECT v, (r + {d8_step_sql(0)}) * {n_px}
                       + ((c + {d8_step_sql(1)} + {n_px}) % {n_px}) AS nxt

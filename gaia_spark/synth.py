@@ -272,6 +272,32 @@ def surface_value(lat: np.ndarray, lon: np.ndarray, band: int) -> np.ndarray:
     return 100.0 * (np.sin(3.0 * np.radians(lat)) * np.cos(2.0 * np.radians(lon)) + band)
 
 
+def tile_px_center_sql(n_t: int, px: int) -> tuple[str, str]:
+    """Pixel-center (plat, plon) expressions for tile (tx, ty) pixel (i, j)
+    at a zoom with ``n_t`` tiles per axis, as DuckDB oracle SQL — the
+    per-tile twin of the global pixel grid in
+    ``queries_misc._raster_zonal_oracle`` (same Mercator bounds, same numpy
+    linspace op order as :func:`synth_raster`, proven bit-identical there)."""
+    sinh = "((exp({x}) - exp(-({x}))) / 2.0)"
+    merc_lat = "degrees(atan(" + sinh.format(x=f"pi() * (1.0 - (2 * {{y}}) / {n_t}.0)") + "))"
+    lat1 = merc_lat.format(y="ty")        # tile top
+    lat0 = merc_lat.format(y="(ty + 1)")  # tile bottom
+    lon0 = f"((tx / {n_t}.0) * 360.0 - 180.0)"
+    lon1 = f"(((tx + 1) / {n_t}.0) * 360.0 - 180.0)"
+    c_lat = f"(({lat1} + i * (({lat0} - {lat1}) / {px})) - ({lat1} - {lat0}) / {2 * px})"
+    c_lon = f"(({lon0} + j * (({lon1} - {lon0}) / {px})) + ({lon1} - {lon0}) / {2 * px})"
+    return c_lat, c_lon
+
+
+def band_f32_sql(band: int) -> str:
+    """synth.surface_value(plat, plon, band) quantized through float32,
+    back as double (IEEE double→float32 is identical in numpy and DuckDB)."""
+    return (
+        f"cast(cast(100.0 * (sin(3.0 * radians(plat)) * cos(2.0 * radians(plon))"
+        f" + {band}.0) as float) as double)"
+    )
+
+
 def synth_raster(
     spark: SparkSession, zooms: tuple[int, ...] = (4, 6), bands: tuple[int, ...] = (0, 1)
 ) -> DataFrame:

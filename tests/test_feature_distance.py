@@ -199,9 +199,11 @@ def test_local_morans_sums_to_global(spark):
     np.testing.assert_allclose(li, gi * sw, rtol=1e-9)
 
 
-def test_feature_distance_cells_matches_broadcast(spark, zones_idx):
+@pytest.mark.parametrize("max_rounds", [0, 6])
+def test_feature_distance_cells_matches_broadcast(spark, zones_idx, max_rounds):
     """Distributed cell-ring nearest-zone == the broadcast zones-array
-    result (both sides DataFrames; zones never broadcast)."""
+    result (both sides DataFrames; zones never broadcast). max_rounds=0
+    sends every feature through the bounded crossJoin fallback."""
     from gaia_spark.operators.feature_distance import (
         feature_distance_nearest,
         feature_distance_nearest_cells,
@@ -216,7 +218,7 @@ def test_feature_distance_cells_matches_broadcast(spark, zones_idx):
     got = {
         (r.fid, r.zone_id, round(r.dist_m, 6))
         for r in feature_distance_nearest_cells(
-            feats, zones, res=5, feature_key="fid", max_rounds=6
+            feats, zones, res=5, feature_key="fid", max_rounds=max_rounds
         ).collect()
     }
     assert got == want and len(got) == 70

@@ -34,6 +34,12 @@ def brute_knn(points_pdf, sites, k):
         out[r.url] = [(int(s_id[i]), float(d[i])) for i in order]
     return out
 
+def persisted_ids(spark):
+    """Ids of the RDDs the session holds persisted (cached frames and
+    checkpoints alike)."""
+    return set(spark.sparkContext._jsc.getPersistentRDDs().keys())
+
+
 def test_knn_broadcast_matches_brute_force(spark, points, sites):
     pdf = points.select("url", "lat", "lon").toPandas()
     want = brute_knn(pdf, sites, 3)
@@ -51,8 +57,13 @@ def test_knn_broadcast_matches_brute_force(spark, points, sites):
 def test_knn_cells_matches_broadcast(spark, points, sites):
     sites_df = spark.createDataFrame(sites)
     a = {(r.url, r.site_id) for r in knn_join_broadcast(points, sites, k=1).collect()}
-    b = {(r.url, r.site_id) for r in knn_join_cells(points, sites_df, k=1, res=5).collect()}
+    before = persisted_ids(spark)
+    out = knn_join_cells(points, sites_df, k=1, res=5)
+    b = {(r.url, r.site_id) for r in out.collect()}
     assert a == b
+    # the rounds' pending checkpoints and the persisted site side are
+    # released; only the returned result stays persisted
+    assert len(persisted_ids(spark) - before) == 1
 
 
 def test_near_join_high_latitude_no_misses(spark):
@@ -113,9 +124,10 @@ def test_near_join_matches_brute_force(spark, points, sites):
 
 
 def test_knn_cells_k3_distributed_sites(spark):
-    """knn_join_cells with k>1 and a fully-distributed site side: parity with
-    the broadcast implementation, including that no (point, site) duplicate
-    from ring regeneration displaces a true k-th neighbour."""
+    """k>1 over 2000 sites: the distributed cell-ring kNN (site side a
+    DataFrame) and the broadcast kNN both match brute force — including that
+    no (point, site) duplicate from ring regeneration displaces a true k-th
+    neighbour."""
     import pandas as pd
 
     sid = np.arange(1, 2001, dtype=np.int64)
@@ -131,23 +143,22 @@ def test_knn_cells_k3_distributed_sites(spark):
          for i in range(150)],
         "url string, lat double, lon double",
     )
+    want = brute_knn(pts.toPandas(), big_sites, 3)
     sites_df = spark.createDataFrame(big_sites)
-    want = {
-        (r.url, r.site_id, r.rank)
-        for r in knn_join_broadcast(pts, big_sites, k=3).collect()
-    }
-    got = {
-        (r.url, r.site_id, r.rank)
-        for r in knn_join_cells(pts, sites_df, k=3, res=6, max_rounds=6).collect()
-    }
-    assert got == want
-    # every point has exactly k distinct ranked sites (no dup displacement)
-    per_pt = {}
-    for url, site, rank in got:
-        per_pt.setdefault(url, []).append((rank, site))
-    for url, rs in per_pt.items():
-        assert sorted(r for r, _ in rs) == [1, 2, 3]
-        assert len({s for _, s in rs}) == 3
+    for out in (
+        knn_join_broadcast(pts, big_sites, k=3),
+        knn_join_cells(pts, sites_df, k=3, res=6, max_rounds=6),
+    ):
+        got = {}
+        for r in out.orderBy("url", "rank").collect():
+            got.setdefault(r.url, []).append((r.rank, r.site_id, r.dist_m))
+        assert set(got) == set(want)
+        for url, ranked in got.items():
+            assert [rk for rk, _, _ in ranked] == [1, 2, 3]
+            assert [s for _, s, _ in ranked] == [s for s, _ in want[url]]
+            np.testing.assert_allclose(
+                [d for _, _, d in ranked], [d for _, d in want[url]], rtol=1e-9
+            )
 
 
 def test_knn_cells_reliable_checkpoint(spark, points, sites, tmp_path):
@@ -188,21 +199,20 @@ def test_knn_cells_fallback_loud_and_bounded(spark, points, sites):
     bounded step — an adversarially sparse fixture (antipodal site, zero
     expansion rounds so everything falls through) still returns the exact
     answer under the row bound, and REFUSES above it instead of silently
-    launching an n x m product."""
-    import pytest
-
+    launching an n x m product. Either way only the returned result stays
+    persisted: a refusal leaves no persisted frame behind."""
     sites_df = spark.createDataFrame(sites)
     exact = {(r.url, r.site_id) for r in knn_join_broadcast(points, sites, k=1).collect()}
-    # max_rounds=0 -> every point is an unsettled remainder entering fallback
-    got = {
-        (r.url, r.site_id)
-        for r in knn_join_cells(points, sites_df, k=1, res=5, max_rounds=0).collect()
-    }
-    assert got == exact
+    before = persisted_ids(spark)
     with pytest.raises(RuntimeError, match="max_fallback_rows"):
         knn_join_cells(
             points, sites_df, k=1, res=5, max_rounds=0, max_fallback_rows=3
         ).collect()
+    assert persisted_ids(spark) - before == set()
+    # max_rounds=0 -> every point is an unsettled remainder entering fallback
+    out = knn_join_cells(points, sites_df, k=1, res=5, max_rounds=0)
+    assert {(r.url, r.site_id) for r in out.collect()} == exact
+    assert len(persisted_ids(spark) - before) == 1
 
 
 def test_near_join_refuses_oversized_driver_cover(spark):

@@ -3,6 +3,11 @@
 Runs at sf0.001 for speed; the driver runs the same pairs at sf0.01.
 """
 
+import glob
+import os
+import subprocess
+import sys
+
 import pytest
 
 from gaia_spark import queries as Q
@@ -37,3 +42,24 @@ def test_rows_only_queries_run_and_are_deterministic(spark, name):
     n2 = q.spark(spark, SF_DIR).count()
     assert n1 == n2 and n1 >= 0
     assert len(a.schema.fields) > 0
+
+
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+REGISTRY_MODULES = sorted(
+    "gaia_spark." + os.path.basename(p)[: -len(".py")]
+    for p in glob.glob(os.path.join(ROOT, "gaia_spark", "queries*.py"))
+)
+
+
+@pytest.mark.parametrize("module", REGISTRY_MODULES)
+def test_registry_module_imports_alone(module):
+    """Each registry module imports first in a fresh interpreter — no
+    import cycle through gaia_spark.queries' tail imports."""
+    proc = subprocess.run(
+        [sys.executable, "-c", f"import {module}"],
+        cwd=ROOT,
+        capture_output=True,
+        text=True,
+        timeout=300,
+    )
+    assert proc.returncode == 0, proc.stderr[-2000:]

@@ -45,13 +45,24 @@ def test_spatial_join_is_broadcast_and_python_free(spark):
 
 
 def test_knn_sql_path_is_python_free_after_geoparse(spark, tmp_path):
+    import numpy as np
+    import pandas as pd
+
     path = str(tmp_path / "pages")
     synth_pages(spark, 300, partitions=2).write.parquet(path)
     pts = geoparse(spark.read.parquet(path))
-    knn = knn_join_broadcast(pts, site_points_pdf(), k=2)
-    plan = plan_of(knn)
-    assert "ArrowEvalPython" not in plan  # geoparse is JVM-side now
-    assert "FlatMapGroupsInPandas" not in plan and "MapInPandas" not in plan
+    sid = np.arange(1, 601, dtype=np.int64)
+    many_sites = pd.DataFrame(
+        {
+            "site_id": sid,
+            "lat": (sid * 7919 % 16000) / 100.0 - 80.0,
+            "lon": (sid * 104729 % 36000) / 100.0 - 180.0,
+        }
+    )
+    for sites in (site_points_pdf(), many_sites):
+        plan = plan_of(knn_join_broadcast(pts, sites, k=2))
+        assert "ArrowEvalPython" not in plan  # geoparse is JVM-side now
+        assert "FlatMapGroupsInPandas" not in plan and "MapInPandas" not in plan
 
 
 def test_salted_smj_distributes_keys(spark):

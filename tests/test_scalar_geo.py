@@ -59,28 +59,30 @@ def test_buffer_ngon_radius(spark):
 
 
 def test_buffer_sql_matches_numpy_kernel(spark):
-    """The JVM-expression buffer (default) and the numpy-kernel buffer must
-    agree vertex-for-vertex (same destination-point formula, two impls)."""
+    """The JVM-expression buffer must agree vertex-for-vertex with the numpy
+    kernel's destination point (same formula, two implementations)."""
     import numpy as np
-    import pyspark.sql.functions as F
 
+    from gaia_spark.functions.kernel import destination_point
     from gaia_spark.operators.scalar_geo import add_buffer
 
-    pts = spark.createDataFrame(
-        [(i, float(i * 13 % 160 - 80), float(i * 37 % 350 - 175)) for i in range(1, 25)],
-        "id long, lat double, lon double",
-    )
-    a = {r.id: r.buffer for r in add_buffer(pts, 250_000.0, impl="sql").collect()}
-    b = {r.id: r.buffer for r in add_buffer(pts, 250_000.0, impl="arrow").collect()}
-    assert set(a) == set(b)
-    for i in a:
-        assert len(a[i]) == len(b[i]) == 33
-        for va, vb in zip(a[i], b[i]):
-            # JVM StrictMath vs numpy libm differ by a few ulps through the
-            # asin/atan2 chain; 1e-7 deg ≈ 1 cm
-            np.testing.assert_allclose(
-                [va.lat, va.lon], [vb.lat, vb.lon], rtol=0, atol=1e-7
-            )
+    rows = [(i, float(i * 13 % 160 - 80), float(i * 37 % 350 - 175)) for i in range(1, 25)]
+    pts = spark.createDataFrame(rows, "id long, lat double, lon double")
+    got = {r.id: r.buffer for r in add_buffer(pts, 250_000.0).collect()}
+    bearings = np.linspace(0.0, 2 * np.pi, 32, endpoint=False)
+    assert set(got) == {i for i, _, _ in rows}
+    for i, lat, lon in rows:
+        ring = got[i]
+        assert len(ring) == 33 and ring[0] == ring[-1]
+        want_lat, want_lon = destination_point(lat, lon, bearings, 250_000.0)
+        # JVM StrictMath vs numpy libm differ by a few ulps through the
+        # asin/atan2 chain; 1e-7 deg ≈ 1 cm
+        np.testing.assert_allclose(
+            [[v.lat, v.lon] for v in ring[:32]],
+            np.column_stack([want_lat, want_lon]),
+            rtol=0,
+            atol=1e-7,
+        )
 
 
 def test_ring_area_sphere_matches_rect_closed_form(spark):

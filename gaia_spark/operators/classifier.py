@@ -74,16 +74,15 @@ def logreg_train(
     n_rounds: int = 3,
     id_col: str = "doc_id",
     text_col: str = "text",
-    reliable: bool = False,
 ) -> DataFrame:
     """Train the quality classifier: ``n_rounds`` full-batch GD rounds from
     w = 0 (so round 1 is exactly σ = 0.5 everywhere — fully integer), lr=1.
     Returns the weight table (_b, w_e6)."""
     feats, labels = _features(docs, n_buckets, id_col, text_col, label_expr)
-    feats = iter_checkpoint(feats.join(labels, id_col), reliable=reliable)
+    feats = iter_checkpoint(feats.join(labels, id_col))
     n = docs.count()  # driver scalar: one long (every doc has >=1 gram)
     w = feats.select("_b").distinct().withColumn("w_e6", F.lit(0).cast("long"))
-    w = iter_checkpoint(w, reliable=reliable)
+    w = iter_checkpoint(w)
     for _ in range(n_rounds):
         z = (
             feats.join(F.broadcast(w), "_b")
@@ -109,7 +108,6 @@ def logreg_train(
                        - F.lit(LR_OFF))
                 ).cast("long").alias("w_e6"),
             ),
-            reliable=reliable,
             release=w,
         )
     return w

@@ -83,13 +83,12 @@ def kmeans_fit(
     n_rounds: int = 3,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    reliable: bool = False,
 ) -> DataFrame:
     """``n_rounds`` Lloyd's iterations from md5-ordered seeds (the k rows
     with the smallest md5(id) — deterministic, engine-independent);
     returns the trained CODEBOOK (cid, c) with e6-bigint center arrays —
     the piece product quantization reuses per subspace."""
-    pts = iter_checkpoint(_quantize(emb, id_col, vec_col), reliable=reliable)
+    pts = iter_checkpoint(_quantize(emb, id_col, vec_col))
     h = portable.md5_int60(f"cast({id_col} as string)", portable.SPARK)
     w = Window.orderBy("_h", id_col)
     centers = (
@@ -100,9 +99,7 @@ def kmeans_fit(
     )
     for _ in range(n_rounds):
         a = _assign(pts, centers, id_col)
-        centers = iter_checkpoint(
-            _recenter(a, pts, id_col), reliable=reliable, release=centers
-        )
+        centers = iter_checkpoint(_recenter(a, pts, id_col), release=centers)
     return centers
 
 
@@ -112,13 +109,12 @@ def kmeans_assign(
     n_rounds: int = 3,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    reliable: bool = False,
 ) -> DataFrame:
     """:func:`kmeans_fit` + a final exact-integer assignment. A cluster
     that empties mid-run simply drops out (its cid disappears; documented,
     mirrored exactly by the oracle). Returns (id, cid, dist_e12) — dist in
     (e6)² integer units."""
-    centers = kmeans_fit(emb, k, n_rounds, id_col, vec_col, reliable)
+    centers = kmeans_fit(emb, k, n_rounds, id_col, vec_col)
     pts = _quantize(emb, id_col, vec_col)
     return _assign(pts, centers, id_col)
 
@@ -130,7 +126,6 @@ def semdedup(
     threshold: float = 0.95,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    reliable: bool = False,
 ) -> DataFrame:
     """SemDeDup (Abbas et al. 2023): cluster-then-dedup — the k-means
     clusters act as the candidate generator (the all-pairs cosine sweep is
@@ -147,9 +142,7 @@ def semdedup(
     from gaia_spark.operators.simsearch import DOT, NORM2
     from gaia_spark.operators.stats import min_label_components
 
-    assign = kmeans_assign(emb, k, n_rounds, id_col, vec_col, reliable).select(
-        id_col, "cid"
-    )
+    assign = kmeans_assign(emb, k, n_rounds, id_col, vec_col).select(id_col, "cid")
     av = assign.join(emb.select(id_col, vec_col), id_col)
     a = av.select("cid", F.col(id_col).alias("a"), F.col(vec_col).alias("_ea"))
     b = av.select("cid", F.col(id_col).alias("b"), F.col(vec_col).alias("_eb"))
@@ -171,7 +164,6 @@ def semdedup(
         sym.select(F.col("a").alias("_n"), F.col("b").alias("_nbr")),
         node_col="_n",
         nbr_col="_nbr",
-        reliable_checkpoint=reliable,
     )
     return (
         assign.join(comp.withColumnRenamed("_n", id_col), id_col)

@@ -293,7 +293,6 @@ def dup_clusters(
     a_col: str = "a",
     b_col: str = "b",
     max_iter: int = 30,
-    reliable_checkpoint: bool = False,
 ) -> DataFrame:
     """Connected components over an undirected duplicate-pair graph:
     (doc_id, cluster_id = min doc id of the component). The step after
@@ -311,8 +310,7 @@ def dup_clusters(
     )
     nodes = edges.select("doc_id").distinct()
     labels = min_label_components(
-        nodes, edges, node_col="doc_id", nbr_col="neighbor", max_iter=max_iter,
-        reliable_checkpoint=reliable_checkpoint,
+        nodes, edges, node_col="doc_id", nbr_col="neighbor", max_iter=max_iter
     )
     return labels.withColumnRenamed("label", "cluster_id")
 
@@ -635,7 +633,7 @@ def bpe_train(
             ).alias("syms"),
         )
     )
-    vocab = iter_checkpoint(words.select("w", "wc", "syms"), False)
+    vocab = iter_checkpoint(words.select("w", "wc", "syms"))
     merges = None
     for rnd in range(1, n_merges + 1):
         # sequence(0, -1) is DESCENDING in Spark: single-symbol words
@@ -659,7 +657,7 @@ def bpe_train(
         )
         # materialize the 1-row winner NOW: `merges` is read only after the
         # loop, by which point this round's vocab blocks have been released
-        top = iter_checkpoint(top, False)
+        top = iter_checkpoint(top)
         merges = top if merges is None else merges.unionByName(top)
         # positions matching the winning pair; run-parity keeps the
         # left-to-right non-overlapping subset
@@ -668,9 +666,7 @@ def bpe_train(
             .select("w", "pos")
         )
         rebuilt = _bpe_rebuild(vocab, _bpe_parity_keep(m))
-        vocab = iter_checkpoint(
-            rebuilt.select("w", "wc", "syms"), False, release=vocab
-        )
+        vocab = iter_checkpoint(rebuilt.select("w", "wc", "syms"), release=vocab)
     return merges.select("round", "pa", "pb", "pair_count")
 
 
@@ -699,8 +695,7 @@ def bpe_apply(words: DataFrame, merges: list[tuple[str, str]]) -> DataFrame:
             F.expr(
                 "transform(sequence(1, length(w)), i -> substr(w, i, 1))"
             ).alias("syms"),
-        ),
-        False,
+        )
     )
     for pa, pb in merges:
         m = (
@@ -718,9 +713,7 @@ def bpe_apply(words: DataFrame, merges: list[tuple[str, str]]) -> DataFrame:
             .select("w", "pos")
         )
         rebuilt = _bpe_rebuild(vocab, _bpe_parity_keep(m))
-        vocab = iter_checkpoint(
-            rebuilt.select("w", "wc", "syms"), False, release=vocab
-        )
+        vocab = iter_checkpoint(rebuilt.select("w", "wc", "syms"), release=vocab)
     return vocab.select("w", "syms")
 
 

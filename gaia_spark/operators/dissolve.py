@@ -105,7 +105,6 @@ def dissolve_parts(
     group_col: str = "group_id",
     id_col: str = "feature_id",
     vertices_col: str = "vertices",
-    reliable_checkpoint: bool = False,
 ) -> DataFrame:
     """Disjoint-part count of each dissolved group: features sharing an
     edge (within the group) are connected; parts = connected components of
@@ -123,9 +122,7 @@ def dissolve_parts(
         shared.select(F.col("b").alias("cell"), F.col("a").alias("neighbor"))
     )
     nodes = feats.select(F.col(id_col).alias("cell"), F.col(group_col)).distinct()
-    labels = min_label_components(
-        nodes.select("cell"), sym, reliable_checkpoint=reliable_checkpoint
-    )
+    labels = min_label_components(nodes.select("cell"), sym)
     return (
         nodes.join(labels, "cell")
         .groupBy(group_col)

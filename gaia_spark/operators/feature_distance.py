@@ -165,7 +165,6 @@ def feature_distance_nearest_cells(
     vertices_col: str = "vertices",
     kind: str = "poly",
     max_rounds: int = 8,
-    reliable_checkpoint: bool = False,
     max_fallback_rows: int = 10_000_000,
 ) -> DataFrame:
     """Distributed nearest-zone per feature for zone layers TOO LARGE TO
@@ -244,7 +243,6 @@ def feature_distance_nearest_cells(
         pend, zcover, F.expr(_zone_dist_sql(kind, zedges="_zed")), 1, res,
         slack="_hd",
         max_rounds=max_rounds,
-        reliable_checkpoint=reliable_checkpoint,
         max_fallback_rows=max_fallback_rows,
     )
     return best.select(

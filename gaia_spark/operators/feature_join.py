@@ -214,21 +214,6 @@ _FEATURE_EDGES = edges_sql("vertices")
 # ring i's end and ring i+1's start
 _RING_EDGES = "flatten(transform({rings}, r -> " + edges_sql(_close_ring_sql("r")) + "))"
 
-# refine='auto' switches to the Arrow/numpy backend above this many edges
-# per feature: the SQL HOF refine pays an interpreted-expression cost per
-# edge pair, the Arrow path a fixed Python-worker round-trip. Re-measured
-# in round 6 after the probe prefilters + bbox-clipped sweep landed: the
-# SQL refine now BEATS Arrow at 512 edges (1.76 s vs 2.16 s on the bench's
-# 100k-feature 512-gon layer — the prefilters removed most per-vertex
-# raycasts, leaving the Python round-trip as Arrow's fixed cost), so the
-# crossover sits well above the bench regime; 2048 is a conservative
-# extrapolation (the clipped pairwise sweep grows ~O(√Va·√Vb), so the
-# interpreted cost overtakes the round-trip again for very dense rings).
-# A later A/B at local[4] (2000 star-shaped 512-gons × 16 zones) had Arrow
-# ahead (intersects 1.09 s vs 1.31 s, within 1.14 s vs 1.69 s), so this
-# threshold is not the measured crossover; see ROADMAP item 3.
-AUTO_ARROW_MIN_EDGES = 2048
-
 # Candidate generation strategy switch: at or below this many zones the
 # candidate join is a broadcast nested-loop join on closed bbox overlap
 # (4 codegen'd comparisons per (feature, zone) probe — features × |zones|
@@ -358,27 +343,6 @@ def _refine_ok_sql(
     return ok
 
 
-def _choose_refine(
-    features: DataFrame, predicate: str, vertices_col: str, rings_col: str | None
-) -> str:
-    """Pick the refine backend from a bounded probe of the feature layer.
-
-    Reads ≤256 rows (one partition-ish scan — NOT a full pass) and takes
-    the max vertex count; feature layers are near-uniform in complexity so
-    a prefix sample is representative. Predicates the Arrow backend doesn't
-    implement (touches: needs the collinear-overlap witness) stay on SQL.
-    """
-    if predicate not in ("intersects", "within", "crosses"):
-        return "sql"
-    col = (
-        F.size(F.flatten(F.col(rings_col))) if rings_col is not None
-        else F.size(F.col(vertices_col))
-    )
-    row = features.select(col.alias("_n")).limit(256).agg(F.max("_n")).first()
-    max_edges = row[0] or 0
-    return "arrow" if max_edges >= AUTO_ARROW_MIN_EDGES else "sql"
-
-
 def feature_spatial_join(
     features: DataFrame,
     index: ZoneIndex,
@@ -405,10 +369,8 @@ def feature_spatial_join(
     'arrow' (numpy per-pair evaluation of the same predicate algebra via an
     Arrow-batched pandas UDF — wins for LARGE-VERTEX layers where HOF
     lambdas pay the interpreted-expression cost per edge; supports
-    intersects / within / crosses), or 'auto' (bounded 256-row probe of the
-    layer's max vertex count picks arrow above AUTO_ARROW_MIN_EDGES edges,
-    sql otherwise/for unsupported predicates). Both backends produce
-    identical rows (pytest-asserted parity).
+    intersects / within / crosses). Both backends produce identical rows
+    (pytest-asserted parity).
     """
     if predicate == "disjoint":
         return feature_spatial_join(
@@ -420,10 +382,8 @@ def feature_spatial_join(
         raise ValueError("crosses is defined here for line features vs polygon zones")
     if how not in ("inner", "semi", "anti"):
         raise ValueError(f"unknown how {how!r}")
-    if refine not in ("sql", "arrow", "auto"):
+    if refine not in ("sql", "arrow"):
         raise ValueError(f"unknown refine backend {refine!r}")
-    if refine == "auto":
-        refine = _choose_refine(features, predicate, vertices_col, rings_col)
     if refine == "arrow" and predicate in ("touches", "touches_rook"):
         raise ValueError(
             "refine='arrow' supports intersects/within/crosses — the "

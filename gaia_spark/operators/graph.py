@@ -8,10 +8,10 @@ priors for training-data selection.
 Scale shape (100 TB): classic power iteration as pure DataFrame ops —
 each round is ONE join (ranks onto edges by src) + ONE groupBy(dst) agg
 (map-side combinable) + a broadcast of two scalars (node count, dangling
-mass); lineage is cut per round via iter_checkpoint (reliable= for real
-clusters). No Python, no adjacency collection; a hot dst (everyone links
-to one host) is an agg skew handled by partial aggregation, not a join
-skew.
+mass); lineage is cut per round via iter_checkpoint (a reliable checkpoint
+once the session has a checkpoint directory). No Python, no adjacency
+collection; a hot dst (everyone links to one host) is an agg skew handled
+by partial aggregation, not a join skew.
 
 Engine-determinism: ranks are re-quantized to fixed-point 10^-12 BETWEEN
 iterations (the MinHash determinism lesson applied to iterative float
@@ -45,7 +45,6 @@ def pagerank(
     iters: int = 5,
     src_col: str = "src",
     dst_col: str = "dst",
-    reliable_checkpoint: bool = False,
 ) -> DataFrame:
     """PageRank over a directed edge list (deduplicated edges expected).
     Nodes = union of srcs and dsts; dangling nodes (no out-edges) donate
@@ -66,9 +65,7 @@ def pagerank(
     n = base.count()  # one scalar; the only driver-side value
     n_sql = f"cast({n} as double)"
 
-    ranks = iter_checkpoint(
-        base.withColumn("rank", F.lit(1.0) / F.lit(float(n))), reliable_checkpoint
-    )
+    ranks = iter_checkpoint(base.withColumn("rank", F.lit(1.0) / F.lit(float(n))))
     for _ in range(iters):
         _prev = ranks
         dangling = (
@@ -93,7 +90,7 @@ def pagerank(
                 ).alias("rank"),
             )
         )
-        ranks = iter_checkpoint(ranks, reliable_checkpoint, release=_prev)
+        ranks = iter_checkpoint(ranks, release=_prev)
     return ranks.select("node", "rank")
 
 
@@ -105,7 +102,6 @@ def shortest_paths(
     dst_col: str = "dst",
     weight_col: str = "w",
     source_col: str = "node",
-    reliable_checkpoint: bool = False,
 ) -> DataFrame:
     """Multi-source shortest paths by ``iters`` Bellman–Ford relaxation
     rounds (distance to the NEAREST source; paths longer than ``iters``
@@ -138,7 +134,7 @@ def shortest_paths(
     dist = sources.select(
         F.col(source_col).alias("node"), F.lit(0.0).alias("dist")
     ).distinct()
-    dist = iter_checkpoint(dist, reliable_checkpoint)
+    dist = iter_checkpoint(dist)
     for _ in range(iters):
         _prev = dist
         relaxed = (
@@ -151,7 +147,7 @@ def shortest_paths(
             .groupBy("node")
             .agg(F.min("dist").alias("dist"))
         )
-        dist = iter_checkpoint(dist, reliable_checkpoint, release=_prev)
+        dist = iter_checkpoint(dist, release=_prev)
     return dist
 
 
@@ -169,7 +165,6 @@ def hits(
     iters: int = 5,
     src_col: str = "src",
     dst_col: str = "dst",
-    reliable_checkpoint: bool = False,
 ) -> DataFrame:
     """HITS hubs & authorities over a directed edge list (Kleinberg 1999),
     MAX-normalized: each half-round divides by the maximum score instead
@@ -191,7 +186,7 @@ def hits(
         .distinct()
     )
     hub = nodes.withColumn("hub", F.lit(1.0))
-    hub = iter_checkpoint(hub, reliable_checkpoint)
+    hub = iter_checkpoint(hub)
     auth = None
     for _ in range(iters):
         _prev_hub, _prev_auth = hub, auth
@@ -212,7 +207,7 @@ def hits(
             auth.crossJoin(F.broadcast(amax))
             .select("node", F.expr(quant12_sql("_q / _m")).alias("auth"))
         )
-        auth = iter_checkpoint(auth, reliable_checkpoint, release=_prev_auth)
+        auth = iter_checkpoint(auth, release=_prev_auth)
         h_raw = (
             e.join(auth, e["dst"] == auth["node"])
             .groupBy("src")
@@ -230,7 +225,7 @@ def hits(
             hub.crossJoin(F.broadcast(hmax))
             .select("node", F.expr(quant12_sql("_q / _m")).alias("hub"))
         )
-        hub = iter_checkpoint(hub, reliable_checkpoint, release=_prev_hub)
+        hub = iter_checkpoint(hub, release=_prev_hub)
     return hub.join(auth, "node").select("node", "hub", "auth")
 
 
@@ -496,7 +491,7 @@ def k_core(
         .where(F.col("u") != F.col("v"))
         .distinct()
     )
-    e = iter_checkpoint(e, False)
+    e = iter_checkpoint(e)
     n_edges = e.count()
     for _ in range(max_rounds):
         deg = (
@@ -510,7 +505,7 @@ def k_core(
             .join(keep.withColumnRenamed("node", "v"), "v", "left_semi")
             .select("u", "v")
         )
-        e2 = iter_checkpoint(e2, False, release=e)
+        e2 = iter_checkpoint(e2, release=e)
         n2 = e2.count()
         e = e2
         if n2 == n_edges:

@@ -68,7 +68,7 @@ def convex_hull_per_group(
         "vertices array<struct<lat:double,lon:double>>"
     )
 
-    def hull(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def hull(key, pdf):
         ring = _monotone_chain(
             pdf[lat].to_numpy(dtype=np.float64), pdf[lon].to_numpy(dtype=np.float64)
         )

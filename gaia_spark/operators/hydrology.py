@@ -176,7 +176,6 @@ def flow_accumulation(
     dirs: DataFrame,
     zoom: int,
     max_rounds: int = 17,
-    reliable: bool = False,
     max_closure_rows: int = 50_000_000,
 ) -> DataFrame:
     """Upstream contributing-cell count + watershed basin per pixel of a
@@ -195,36 +194,15 @@ def flow_accumulation(
     shuffled per round) and points at :func:`flow_accumulation_peel`,
     whose O(cells)/round rake-and-compress state never materializes the
     closure — the 100-TB path (bit-identical output, A/B-proven)."""
-    from gaia_spark.session import iter_checkpoint
-
-    n_px = TILE_PX * (1 << zoom)
-    # materialize the node table once: four downstream consumers (targets,
-    # edge semi-join, sink anti-join, final join) would otherwise each
-    # replay the full flow_direction plan (pixels_of + pivot + argmax)
-    nodes = iter_checkpoint(
-        dirs.select((F.col("r") * n_px + F.col("c")).alias("v"), "r", "c", "dir"),
-        reliable=reliable,
-    )
-    tgt = nodes.where(F.col("dir") > 0).select(
-        "v",
-        (
-            (F.col("r") + F.expr(d8_step_sql(0))) * n_px
-            + F.pmod(F.col("c") + F.expr(d8_step_sql(1)), F.lit(n_px))
-        ).alias("nxt"),
-    )
-    # flow leaving the interior grid terminates: keep edges inside the node set
-    edges = tgt.join(
-        nodes.select(F.col("v").alias("nxt")), "nxt", "left_semi"
-    ).select("v", "nxt")
-    sinks = nodes.select("v").join(edges.select("v"), "v", "left_anti")
     import shutil
     import tempfile
 
-    from gaia_spark.session import sever_lineage
+    from gaia_spark.session import iter_checkpoint, sever_lineage
 
+    nodes, edges, sinks = _edges_sinks(dirs, zoom)
     scratch = tempfile.mkdtemp(prefix="gaia_facc_")
     s = edges.unionByName(sinks.withColumn("nxt", F.col("v")))
-    p = iter_checkpoint(edges, reliable=reliable)
+    p = iter_checkpoint(edges)
     n_p = p.count()
     for _round in range(max_rounds):
         # S is one row per NODE (bounded); P is the growing closure. Always
@@ -236,14 +214,11 @@ def flow_accumulation(
             .join(p.alias("p"), F.col("s.nxt") == F.col("p.v"))
             .select(F.col("s.v").alias("v"), F.col("p.nxt").alias("nxt"))
         )
-        p2 = iter_checkpoint(
-            p.unionByName(hop).distinct(), reliable=reliable, release=p
-        )
+        p2 = iter_checkpoint(p.unionByName(hop).distinct(), release=p)
         s = iter_checkpoint(
             s.alias("a")
             .join(F.broadcast(s.alias("b")), F.col("a.nxt") == F.col("b.v"))
             .select(F.col("a.v").alias("v"), F.col("b.nxt").alias("nxt")),
-            reliable=reliable,
             release=s,
         )
         n_p2 = p2.count()
@@ -271,21 +246,23 @@ def flow_accumulation(
         .join(acc, "v", "left")
         .join(s.withColumnRenamed("nxt", "basin"), "v")
         .select("r", "c", F.coalesce("acc", F.lit(0)).cast("long").alias("acc"), "basin"),
-        reliable=reliable,
     )
     shutil.rmtree(scratch, ignore_errors=True)
     return out
 
 
-def _edges_sinks(dirs: DataFrame, zoom: int, reliable: bool):
-    """Shared graph build for both accumulation paths: the checkpointed
-    node table, the interior edge list (v, nxt) and the sink set."""
+def _edges_sinks(dirs: DataFrame, zoom: int):
+    """Shared graph build for the accumulation paths and strahler_order:
+    the checkpointed node table, the interior edge list (v, nxt) and the
+    sink set."""
     from gaia_spark.session import iter_checkpoint
 
     n_px = TILE_PX * (1 << zoom)
+    # materialize the node table once: its downstream consumers (targets,
+    # edge semi-join, sink anti-join, final join) would otherwise each
+    # replay the full flow_direction plan (pixels_of + pivot + argmax)
     nodes = iter_checkpoint(
-        dirs.select((F.col("r") * n_px + F.col("c")).alias("v"), "r", "c", "dir"),
-        reliable=reliable,
+        dirs.select((F.col("r") * n_px + F.col("c")).alias("v"), "r", "c", "dir")
     )
     tgt = nodes.where(F.col("dir") > 0).select(
         "v",
@@ -294,6 +271,7 @@ def _edges_sinks(dirs: DataFrame, zoom: int, reliable: bool):
             + F.pmod(F.col("c") + F.expr(d8_step_sql(1)), F.lit(n_px))
         ).alias("nxt"),
     )
+    # flow leaving the interior grid terminates: keep edges inside the node set
     edges = tgt.join(
         nodes.select(F.col("v").alias("nxt")), "nxt", "left_semi"
     ).select("v", "nxt")
@@ -305,7 +283,6 @@ def _basins(
     edges: DataFrame,
     sinks: DataFrame,
     max_rounds: int,
-    reliable: bool,
     scratch: str | None = None,
 ) -> DataFrame:
     """Terminal sink per node by successor pointer doubling: S_{k+1} =
@@ -320,9 +297,7 @@ def _basins(
 
     own = scratch is None
     scratch = scratch or tempfile.mkdtemp(prefix="gaia_basins_")
-    s = iter_checkpoint(
-        edges.unionByName(sinks.withColumn("nxt", F.col("v"))), reliable=reliable
-    )
+    s = iter_checkpoint(edges.unionByName(sinks.withColumn("nxt", F.col("v"))))
     sink_set = sinks.select(F.col("v").alias("nxt"))
     n_settled = s.join(sink_set, "nxt", "left_semi").count()
     n_all = s.count()
@@ -333,13 +308,12 @@ def _basins(
             s.alias("a")
             .join(F.broadcast(s.alias("b")), F.col("a.nxt") == F.col("b.v"))
             .select(F.col("a.v").alias("v"), F.col("b.nxt").alias("nxt")),
-            reliable=reliable,
             release=s,
         )
         if rounds % 3 == 0:
             s = sever_lineage(s, f"{scratch}/basins_{rounds}")
         n_settled = s.join(sink_set, "nxt", "left_semi").count()
-    out = iter_checkpoint(s.withColumnRenamed("nxt", "basin"), reliable=reliable)
+    out = iter_checkpoint(s.withColumnRenamed("nxt", "basin"))
     if own:
         shutil.rmtree(scratch, ignore_errors=True)
     return out
@@ -349,7 +323,6 @@ def flow_accumulation_peel(
     dirs: DataFrame,
     zoom: int,
     max_rounds: int = 200,
-    reliable: bool = False,
     stats: list | None = None,
     scratch_dir: str | None = None,
     sever_every: int = 3,
@@ -402,7 +375,7 @@ def flow_accumulation_peel(
 
     spark = dirs.sparkSession
     scratch = scratch_dir or tempfile.mkdtemp(prefix="gaia_peel_")
-    nodes, edges, sinks = _edges_sinks(dirs, zoom, reliable)
+    nodes, edges, sinks = _edges_sinks(dirs, zoom)
     bit = f"({portable.md5_int60('cast(v as string)', portable.SPARK)}) % 2"
     active = iter_checkpoint(
         edges.unionByName(sinks.withColumn("nxt", F.lit(None).cast("long"))).select(
@@ -412,7 +385,6 @@ def flow_accumulation_peel(
             F.lit(0).cast("long").alias("carry"),
             F.expr(bit).cast("int").alias("bit"),
         ),
-        reliable=reliable,
     )
     window_cps: list[DataFrame] = [active]
     pend_total = 0
@@ -422,7 +394,7 @@ def flow_accumulation_peel(
         rounds += 1
         # --- rake: in-degree-0 nodes finish and push subtree size downstream
         indeg = active.groupBy(F.col("nxt").alias("v")).agg(F.count("*").alias("_ind"))
-        a = iter_checkpoint(active.join(indeg, "v", "left"), reliable=reliable)
+        a = iter_checkpoint(active.join(indeg, "v", "left"))
         window_cps.append(a)
         leaves = a.where(F.col("_ind").isNull())
         leaves.select("v", F.col("w").alias("sub")).write.mode("append").parquet(
@@ -459,7 +431,6 @@ def flow_accumulation_peel(
                 state.join(ind2, "v", "left").withColumn(
                     "_unary", F.coalesce(F.col("_i2"), F.lit(0)) == 1
                 ),
-                reliable=reliable,
             )
             window_cps.append(r2)
             sel = (
@@ -485,7 +456,7 @@ def flow_accumulation_peel(
                     F.col("carry").alias("scarry"),
                 )
             )
-            j = iter_checkpoint(r2.join(sel, r2["nxt"] == sel["sv"], "left"), reliable=reliable)
+            j = iter_checkpoint(r2.join(sel, r2["nxt"] == sel["sv"], "left"))
             window_cps.append(j)
             new_pending = j.where(F.col("sv").isNotNull()).select(
                 F.col("sv").alias("v"),
@@ -535,9 +506,7 @@ def flow_accumulation_peel(
     sub = done
     if pend_total:
         pending = spark.read.parquet(f"{scratch}/pending")
-        unresolved = iter_checkpoint(
-            pending.select("v", F.col("dep").alias("ptr"), "off"), reliable=reliable
-        )
+        unresolved = iter_checkpoint(pending.select("v", F.col("dep").alias("ptr"), "off"))
         pmap = pending.select(
             F.col("v").alias("ptr"), F.col("dep").alias("_pdep"), F.col("off").alias("_poff")
         )
@@ -552,23 +521,21 @@ def flow_accumulation_peel(
                 done.select(F.col("v").alias("ptr"), "sub"), "ptr"
             ).select("v", (F.col("off") + F.col("sub")).alias("sub"))
             sub = iter_checkpoint(
-                sub.unionByName(hit.select("v", "sub")), reliable=reliable, release=_prev_sub
+                sub.unionByName(hit.select("v", "sub")), release=_prev_sub
             )
             _prev_sub = sub
             unresolved = iter_checkpoint(
                 unresolved.join(pmap, "ptr")
                 .select("v", F.col("_pdep").alias("ptr"), (F.col("off") + F.col("_poff")).alias("off")),
-                reliable=reliable,
                 release=unresolved,
             )
             n_un = unresolved.count()
-    basins = _basins(edges, sinks, max_rounds, reliable, scratch=scratch)
+    basins = _basins(edges, sinks, max_rounds, scratch=scratch)
     out = iter_checkpoint(
         nodes.select("v", "r", "c")
         .join(sub, "v")
         .join(basins, "v")
         .select("r", "c", (F.col("sub") - 1).cast("long").alias("acc"), "basin"),
-        reliable=reliable,
     )
     for frame in window_cps:
         release_checkpoint(frame)
@@ -693,7 +660,6 @@ def strahler_order(
     dirs: DataFrame,
     zoom: int,
     max_rounds: int = 64,
-    reliable: bool = False,
 ) -> DataFrame:
     """Strahler stream order over the D8 drainage forest: leaves are order
     1; an interior cell takes its children's maximum order, +1 when two or
@@ -708,7 +674,7 @@ def strahler_order(
     Round count = drainage-tree height (12 on the zoom-0 fixture); heights
     at continental scale are bounded by main-stem length, the same bound
     the peel path documents. Returns (r, c, strahler)."""
-    nodes, edges, _ = _edges_sinks(dirs, zoom, reliable)
+    nodes, edges, _ = _edges_sinks(dirs, zoom)
     from gaia_spark.session import iter_checkpoint
 
     n_ch = edges.groupBy(F.col("nxt").alias("v")).agg(
@@ -721,7 +687,6 @@ def strahler_order(
             F.when(F.col("n_children").isNull(), 1).otherwise(0).alias("fin"),
             F.coalesce("n_children", F.lit(0)).alias("n_children"),
         ),
-        reliable=reliable,
     )
     for _ in range(max_rounds):
         if state.where(F.col("fin") == 0).limit(1).count() == 0:
@@ -757,7 +722,6 @@ def strahler_order(
                 ).alias("fin"),
                 "n_children",
             ),
-            reliable=reliable,
             release=prev,
         )
     else:

@@ -288,7 +288,6 @@ def ring_topk(
     res: int,
     slack: str | None = None,
     max_rounds: int = 8,
-    reliable_checkpoint: bool = False,
     max_fallback_rows: int = 10_000_000,
 ) -> DataFrame:
     """The one cell-ring top-k loop: per ``left`` row, the k ``right`` rows
@@ -364,7 +363,7 @@ def ring_topk(
             )
             # cut the iterative lineage each round; the superseded
             # accumulator is dead once the merge materializes
-            best = iter_checkpoint(topped, reliable_checkpoint, release=best)
+            best = iter_checkpoint(topped, release=best)
             if rho == max_rounds:
                 break
             # lower bound on the distance to any cell in rings > rho,
@@ -387,9 +386,7 @@ def ring_topk(
                 .select("_lk")
             )
             pending = iter_checkpoint(
-                pending.join(settled, "_lk", "left_anti"),
-                reliable_checkpoint,
-                release=pending,
+                pending.join(settled, "_lk", "left_anti"), release=pending
             )
             if pending.isEmpty():
                 break
@@ -411,7 +408,6 @@ def knn_join_cells(
     point_key: str = "url",
     site_key: str = "site_id",
     max_rounds: int = 8,
-    reliable_checkpoint: bool = False,
     max_fallback_rows: int = 10_000_000,
 ) -> DataFrame:
     """Distributed kNN via :func:`ring_topk` (both sides large; the site
@@ -435,7 +431,6 @@ def knn_join_cells(
     best = ring_topk(
         pts, sites, dist, k, res,
         max_rounds=max_rounds,
-        reliable_checkpoint=reliable_checkpoint,
         max_fallback_rows=max_fallback_rows,
     )
     rank = F.row_number().over(Window.partitionBy("_lk").orderBy(F.asc("_d"), F.asc("_rk")))

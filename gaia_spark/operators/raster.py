@@ -864,7 +864,6 @@ def polygonize(
     zoom: int,
     breaks: list[float],
     band: int = 0,
-    reliable_checkpoint: bool = False,
 ) -> DataFrame:
     """Raster → vector regionization (gdal_polygonize): group 4-connected
     runs of equal class into regions. Classes come from :func:`reclassify`;
@@ -903,7 +902,6 @@ def polygonize(
         sym.select(F.col("a").alias("node"), F.col("b").alias("nbr")),
         node_col="node",
         nbr_col="nbr",
-        reliable_checkpoint=reliable_checkpoint,
     )
     return (
         cls.join(comp, "node")

@@ -352,7 +352,6 @@ def pq_codes(
     n_rounds: int = 2,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    reliable: bool = False,
 ) -> tuple[DataFrame, DataFrame]:
     """Product quantization (Jégou et al. 2011): split each ``dim``-vector
     into ``m`` subvectors, train a ``k``-centroid codebook per subspace
@@ -380,7 +379,7 @@ def pq_codes(
         sub = emb.select(
             id_col, F.expr(f"slice({vec_col}, {j * sd + 1}, {sd})").alias(vec_col)
         )
-        cb = kmeans_fit(sub, k, n_rounds, id_col, vec_col, reliable)
+        cb = kmeans_fit(sub, k, n_rounds, id_col, vec_col)
         cj = _assign(_quantize(sub, id_col, vec_col), cb, id_col).select(
             id_col,
             F.lit(j).cast("int").alias("m"),

@@ -17,8 +17,8 @@ every relation is the same two-phase Spark plan (SURVEY.md §2.C):
    array each cover row carries (the "prepared geometry" role).
 
 The polygon side is tiny next to a web-scale pages table, so the cover is
-broadcast (zero shuffle). A salted sort-merge path exists for the
-large↔large case and for skew-stress tests.
+broadcast (zero shuffle): ``ZoneIndex`` builds it on the driver, so it
+always fits one.
 """
 
 from __future__ import annotations
@@ -324,8 +324,6 @@ def spatial_join(
     predicate: str = "within",
     how: str = "inner",
     point_key: str = "url",
-    strategy: str = "broadcast",
-    n_salt: int = 8,
 ) -> DataFrame:
     """Two-phase cell-bucketed spatial join of points against a zone index.
 
@@ -335,7 +333,7 @@ def spatial_join(
     how='anti' → points matching none (DisjointProcess).
     """
     if predicate == "disjoint":
-        return spatial_join(points, index, "intersects", "anti", point_key, strategy, n_salt)
+        return spatial_join(points, index, "intersects", "anti", point_key)
     if predicate not in PREDICATES:
         raise ValueError(f"unknown predicate {predicate!r}")
     if how not in ("inner", "semi", "anti"):
@@ -347,15 +345,7 @@ def spatial_join(
     pts = with_cell(pts, res, out="_cell")
 
     cover = index.cover_df(spark)
-    if strategy == "broadcast":
-        cand = pts.join(F.broadcast(cover), pts["_cell"] == cover["cell"], "inner")
-    else:
-        # large↔large: sort-merge on a salted key; points pick a deterministic
-        # salt, the (smaller) cover side is exploded across all salts so no
-        # pair is lost. AQE skew-join splitting stays on as a second line.
-        pts = pts.withColumn("_salt", F.pmod(F.xxhash64(F.col(point_key)), F.lit(n_salt)))
-        cover = cover.withColumn("_salt", F.explode(F.array(*[F.lit(s) for s in range(n_salt)])))
-        cand = pts.join(cover, (pts["_cell"] == cover["cell"]) & (pts["_salt"] == cover["_salt"]), "inner")
+    cand = pts.join(F.broadcast(cover), pts["_cell"] == cover["cell"], "inner")
 
     lat, lon = F.col("lat"), F.col("lon")
     strict_in_bbox = (
@@ -396,7 +386,7 @@ def spatial_join(
 
     if how == "inner":
         return matched.drop(
-            "_cell", "_salt", "cell", "full", "kind",
+            "_cell", "cell", "full", "kind",
             "min_lat", "min_lon", "max_lat", "max_lon", "edges",
         )
     hits = matched.select(point_key).distinct()

@@ -193,7 +193,6 @@ def grid_dbscan(
     min_pts: int,
     point_key: str = "url",
     max_iter: int = 30,
-    reliable_checkpoint: bool = False,
 ) -> DataFrame:
     """ClusterProcess as grid-DBSCAN: dense cells (count ≥ min_pts) are core;
     clusters are connected components of dense cells under rook adjacency,
@@ -205,7 +204,7 @@ def grid_dbscan(
     a grid-spanning snake component (diameter ~2·2^res) settles in ~res+1
     rounds, far inside max_iter. Raises if the loop still exits
     unconverged rather than silently returning split components.
-    localCheckpoint cuts the lineage every round so plans stay flat.
+    iter_checkpoint cuts the lineage every round so plans stay flat.
     """
     from gaia_spark.operators.spatial_join import with_cell
 
@@ -217,10 +216,7 @@ def grid_dbscan(
         .select("cell")
     )
     adj = cell_rook_weights(dense, res).select("cell", "neighbor")
-    labels = min_label_components(
-        dense, adj, node_col="cell", max_iter=max_iter,
-        reliable_checkpoint=reliable_checkpoint,
-    )
+    labels = min_label_components(dense, adj, node_col="cell", max_iter=max_iter)
     return labels.withColumnRenamed("label", "cluster_id")
 
 
@@ -230,7 +226,6 @@ def min_label_components(
     node_col: str = "cell",
     nbr_col: str = "neighbor",
     max_iter: int = 30,
-    reliable_checkpoint: bool = False,
 ) -> DataFrame:
     """Connected components by min-label propagation WITH pointer doubling:
     returns (node_col, label) where label = min node id of the component.
@@ -245,9 +240,9 @@ def min_label_components(
     "no row changed" is exact), not an extra join per round.
     ``edges`` must be symmetric (or the propagation only flows one way);
     labels are always node ids, so the pointer lookup is total.
-    The per-round lineage cut is localCheckpoint by default;
-    ``reliable_checkpoint=True`` survives executor loss on a real cluster
-    (see session.iter_checkpoint)."""
+    The per-round lineage cut is session.iter_checkpoint: a reliable
+    checkpoint when the session has a checkpoint directory, else
+    localCheckpoint."""
     import shutil
     import tempfile
 
@@ -255,10 +250,8 @@ def min_label_components(
 
     # the edge input is joined in every round: materialize it once, or each
     # round re-runs whatever plan produced it
-    edges = iter_checkpoint(edges, reliable_checkpoint)
-    labels = iter_checkpoint(
-        nodes.select(node_col, F.col(node_col).alias("label")), reliable_checkpoint
-    )
+    edges = iter_checkpoint(edges)
+    labels = iter_checkpoint(nodes.select(node_col, F.col(node_col).alias("label")))
     _cp = labels  # the round's live checkpoint frame (release target: a
     # .drop() wrapper is NOT releasable — unpersist needs the LogicalRDD root)
     scratch = tempfile.mkdtemp(prefix="gaia_mlc_")
@@ -288,8 +281,7 @@ def min_label_components(
                     node_col,
                     F.least(F.col("label"), F.coalesce(F.col("_pl"), F.col("label"))).alias("label"),
                     "_prev",
-                ),
-                reliable_checkpoint,
+                )
             )
             new = iter_checkpoint(
                 jump1.join(
@@ -300,8 +292,7 @@ def min_label_components(
                     node_col,
                     F.least(F.col("label"), F.coalesce(F.col("_pl"), F.col("label"))).alias("label"),
                     "_prev",
-                ),
-                reliable_checkpoint,
+                )
             )
             release_checkpoint(jump1)
             converged = new.where(F.col("label") != F.col("_prev")).isEmpty()
@@ -321,7 +312,7 @@ def min_label_components(
             raise RuntimeError(
                 f"min_label_components: no convergence in {max_iter} rounds"
             )
-        return iter_checkpoint(labels, reliable_checkpoint, release=_cp)
+        return iter_checkpoint(labels, release=_cp)
     finally:
         release_checkpoint(edges)
         shutil.rmtree(scratch, ignore_errors=True)

@@ -47,14 +47,17 @@ def get_session(
     return builder.getOrCreate()
 
 
-def iter_checkpoint(df, reliable: bool = False, release=None):
+def iter_checkpoint(df, release=None):
     """Lineage cut for iterative operators (ring expansion, min-label
-    propagation): ``localCheckpoint`` by default — right locally and
-    cheapest on a cluster, but its blocks live on executors and are LOST on
-    executor death, which fails the job mid-iteration. On a real cluster
-    with preemptible executors pass ``reliable=True`` to write a
-    fault-tolerant checkpoint instead (requires
-    ``spark.sparkContext.setCheckpointDir(<hdfs/s3 path>)`` once per app).
+    propagation). The session's checkpoint directory picks the kind:
+
+    - a directory is set (``SparkContext.setCheckpointDir`` or the
+      ``spark.checkpoint.dir`` conf): a reliable ``checkpoint``, written
+      under it, which survives executor loss on a cluster. Spark deletes
+      those files only when
+      ``spark.cleaner.referenceTracking.cleanCheckpoints`` is on;
+    - no directory: ``localCheckpoint`` — cheapest, but its blocks live on
+      executors and are lost with them, which fails the job mid-iteration.
 
     ``release``: the PREVIOUS round's checkpointed DataFrame, unpersisted
     once the new checkpoint has materialized (eager=True guarantees the
@@ -63,7 +66,10 @@ def iter_checkpoint(df, reliable: bool = False, release=None):
     round of blocks, not k — without it a long multi-query session slowly
     fills executor storage with dead checkpoint blocks.
     """
-    out = df.checkpoint(eager=True) if reliable else df.localCheckpoint(eager=True)
+    if df.sparkSession.sparkContext.getCheckpointDir() is not None:
+        out = df.checkpoint(eager=True)
+    else:
+        out = df.localCheckpoint(eager=True)
     if release is not None:
         release_checkpoint(release)
     return out

@@ -128,7 +128,7 @@ def stream_spatial_join(
     from gaia_spark.operators.spatial_join import spatial_join
 
     pts = geoparse(pages).where(F.col("lat").isNotNull())
-    return spatial_join(pts, index, predicate, how="inner", strategy="broadcast")
+    return spatial_join(pts, index, predicate, how="inner")
 
 
 def stream_stream_join(

@@ -16,3 +16,6 @@ def spark():
         confs={"spark.sql.shuffle.partitions": "8", "spark.driver.memory": "4g"},
     )
     yield s
+    # iter_checkpoint picks reliable checkpoints once a directory is set,
+    # and a directory cannot be unset: no test may set one on this session
+    assert s.sparkContext.getCheckpointDir() is None

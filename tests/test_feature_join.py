@@ -598,40 +598,3 @@ def test_nan_vertex_feature_is_refused(spark, refine):
     )
     with pytest.raises(Exception, match="NaN vertex"):
         feature_spatial_join(feats, idx, "intersects", feature_key="fid", refine=refine).collect()
-
-
-def test_auto_refine_backend_choice(spark):
-    """refine='auto': bounded probe picks arrow for large-vertex layers,
-    sql for small ones and for predicates arrow doesn't implement."""
-    from gaia_spark.operators.feature_join import _choose_refine, AUTO_ARROW_MIN_EDGES
-    from gaia_spark.synth import synth_zones_pdf
-
-    small = parcels_df(spark, parcels_pdf(20))  # 5-vertex rects
-    assert _choose_refine(small, "intersects", "vertices", None) == "sql"
-
-    big_ring = [
-        (0.01 * i, 0.02 * i) for i in range(AUTO_ARROW_MIN_EDGES + 1)
-    ]
-    big = spark.createDataFrame(
-        [(1, [{"lat": la, "lon": lo} for la, lo in big_ring])],
-        "fid long, vertices array<struct<lat:double,lon:double>>",
-    )
-    assert _choose_refine(big, "intersects", "vertices", None) == "arrow"
-    # touches has no arrow implementation - auto must stay on sql
-    assert _choose_refine(big, "touches", "vertices", None) == "sql"
-
-    # end-to-end: auto on a small layer matches explicit sql rows
-    idx = ZoneIndex.build(synth_zones_pdf(16))
-    sql_rows = {
-        (r.fid, r.zone_id)
-        for r in feature_spatial_join(
-            small, idx, "intersects", feature_key="fid", refine="sql"
-        ).collect()
-    }
-    auto_rows = {
-        (r.fid, r.zone_id)
-        for r in feature_spatial_join(
-            small, idx, "intersects", feature_key="fid", refine="auto"
-        ).collect()
-    }
-    assert auto_rows == sql_rows

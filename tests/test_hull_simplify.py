@@ -1,6 +1,8 @@
 """Convex hull and Douglas–Peucker: brute-force and property evidence (the
 rows-only operators' correctness story)."""
 
+import warnings
+
 import numpy as np
 import pandas as pd
 
@@ -76,6 +78,17 @@ def test_hull_operator_groups(spark):
         expect = _brute_hull_vertices(sub.lat.to_numpy(), sub.lon.to_numpy())
         got = {(v["lat"], v["lon"]) for v in r["vertices"]}
         assert got == expect and r["n_hull"] == len(expect)
+
+
+def test_hull_operator_plans_without_warning(spark):
+    """The per-group UDF carries no type hints: applyInPandas warns
+    (TYPE_HINT_SHOULD_BE_SPECIFIED) on a hinted function."""
+    pdf = pd.DataFrame({"g": [0, 0, 0], "lat": [0.0, 1.0, 0.0], "lon": [0.0, 0.0, 1.0]})
+    df = spark.createDataFrame(pdf)
+    with warnings.catch_warnings():
+        warnings.simplefilter("error", UserWarning)
+        rows = convex_hull_per_group(df, "g").collect()
+    assert [r.n_hull for r in rows] == [3]
 
 
 def _zigzag(n=41, big=1.0, small=1e-4):

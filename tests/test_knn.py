@@ -1,5 +1,9 @@
 """Distance/kNN/near joins vs brute-force numpy (FIXTURES.md §7 distance row)."""
 
+import os
+import subprocess
+import sys
+
 import numpy as np
 import pytest
 import pyspark.sql.functions as F
@@ -9,6 +13,8 @@ from gaia_spark.functions.kernel import haversine_m
 from gaia_spark.operators.knn import knn_join_broadcast, knn_join_cells, near_join
 from gaia_spark.queries import site_points_pdf
 from gaia_spark.synth import synth_pages
+
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 @pytest.fixture(scope="module")
@@ -161,19 +167,76 @@ def test_knn_cells_k3_distributed_sites(spark):
             )
 
 
-def test_knn_cells_reliable_checkpoint(spark, points, sites, tmp_path):
-    """reliable_checkpoint=True swaps localCheckpoint for a fault-tolerant
-    checkpoint (survives executor loss on a cluster) — same answer."""
-    spark.sparkContext.setCheckpointDir(str(tmp_path / "ckpt"))
-    sites_df = spark.createDataFrame(sites)
-    a = {(r.url, r.site_id) for r in knn_join_broadcast(points, sites, k=1).collect()}
-    b = {
-        (r.url, r.site_id)
-        for r in knn_join_cells(
-            points, sites_df, k=1, res=5, reliable_checkpoint=True
-        ).collect()
-    }
-    assert a == b
+_CHECKPOINT_DIR_SCRIPT = """
+import glob, sys
+import pyspark.sql.functions as F
+from gaia_spark.operators.knn import knn_join_broadcast, knn_join_cells
+from gaia_spark.operators.stats import min_label_components
+from gaia_spark.queries import site_points_pdf
+from gaia_spark.session import get_session
+
+ckpt = sys.argv[1]
+spark = get_session("local[2]", confs={"spark.sql.shuffle.partitions": "4"})
+sc = spark.sparkContext
+
+
+def rdd_files():
+    return len(glob.glob(ckpt + "/**/rdd-*", recursive=True))
+
+
+# two chains, 0-1-...-5 and 6-...-11: components labelled 0 and 6
+nodes = spark.range(12).select(F.col("id").alias("cell"))
+half = spark.createDataFrame(
+    [(i, i + 1) for i in range(11) if i != 5], "cell long, neighbor long"
+)
+edges = half.unionByName(half.select(F.col("neighbor").alias("cell"), F.col("cell").alias("neighbor")))
+
+
+def components():
+    return sorted(map(tuple, min_label_components(nodes, edges).collect()))
+
+
+assert sc.getCheckpointDir() is None
+local = components()
+assert local == [(i, 0 if i < 6 else 6) for i in range(12)], local
+
+sc.setCheckpointDir(ckpt)
+sites = site_points_pdf()
+pts = spark.createDataFrame(
+    [(f"p{i}", (i * 7919 % 15000) / 100.0 - 75.0, (i * 104729 % 36000) / 100.0 - 180.0)
+     for i in range(60)],
+    "url string, lat double, lon double",
+)
+want = sorted((r.url, r.rank, r.site_id) for r in knn_join_broadcast(pts, sites, k=2).collect())
+got = sorted(
+    (r.url, r.rank, r.site_id)
+    for r in knn_join_cells(pts, spark.createDataFrame(sites), k=2, res=5).collect()
+)
+assert got == want, (got[:5], want[:5])
+after_knn = rdd_files()
+assert after_knn > 0, "knn_join_cells wrote no reliable checkpoint"
+assert components() == local
+assert rdd_files() > after_knn, "min_label_components wrote no reliable checkpoint"
+print("OK")
+"""
+
+
+def test_checkpoint_dir_selects_reliable_checkpoint(tmp_path):
+    """With a checkpoint directory set, iter_checkpoint writes reliable
+    checkpoints (rdd-* files under the directory) and the iterative
+    operators return the same rows as without one. Runs in a fresh
+    interpreter: a SparkContext's checkpoint directory cannot be unset, so
+    setting it on the shared test session would switch every later
+    iterative test to disk checkpoints."""
+    proc = subprocess.run(
+        [sys.executable, "-c", _CHECKPOINT_DIR_SCRIPT, str(tmp_path / "ckpt")],
+        cwd=ROOT,
+        capture_output=True,
+        text=True,
+        timeout=300,
+    )
+    assert proc.returncode == 0, proc.stderr[-2000:]
+    assert proc.stdout.strip().endswith("OK")
 
 
 def test_near_join_cells_matches_driver_cover(spark, points, sites):

@@ -65,16 +65,6 @@ def test_knn_sql_path_is_python_free_after_geoparse(spark, tmp_path):
         assert "FlatMapGroupsInPandas" not in plan and "MapInPandas" not in plan
 
 
-def test_salted_smj_distributes_keys(spark):
-    idx = ZoneIndex.build(synth_zones_pdf(16))
-    pts = geoparse(synth_pages(spark, 300, partitions=2))
-    joined = spatial_join(pts, idx, "within", strategy="smj_salted", n_salt=4)
-    plan = plan_of(joined)
-    # salted path must not silently fall back to a broadcast-only plan:
-    # the explicit salt column appears in the join keys
-    assert "_salt" in plan
-
-
 def test_relational_join_broadcasts_small_dim(spark):
     from gaia_spark.queries import REGISTRY
 

@@ -80,7 +80,7 @@ def test_pip_implies_bbox(ring, plat, plon):
 
 
 def test_join_invariant_under_partitioning(spark):
-    """Spatial join output must not depend on partitioning or salting."""
+    """Spatial join output must not depend on partitioning."""
     import pyspark.sql.functions as F
 
     from gaia_spark.functions.geoparse import geoparse
@@ -89,14 +89,14 @@ def test_join_invariant_under_partitioning(spark):
 
     idx = ZoneIndex.build(synth_zones_pdf(16))
     results = []
-    for parts, strategy in [(1, "broadcast"), (7, "broadcast"), (4, "smj_salted")]:
+    for parts in (1, 7, 4):
         pts = geoparse(synth_pages(spark, 300, partitions=parts))
         if parts == 4:
             pts = pts.repartition(16, F.col("url"))
         results.append(
             frozenset(
                 (r.url, r.zone_id)
-                for r in spatial_join(pts, idx, "within", strategy=strategy)
+                for r in spatial_join(pts, idx, "within")
                 .select("url", "zone_id").collect()
             )
         )

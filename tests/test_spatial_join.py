@@ -122,42 +122,22 @@ def test_overlapping_zones_yield_multiple_rows(points, points_pdf, zones_pdf, in
     assert per_url == int((cnt > 1).sum())
 
 
-def test_hot_cell_skew_salting_correct(spark, index):
-    """M4 skew case: 80% of points crammed into ONE cell — the salted SMJ
-    path must still produce exactly the broadcast path's pairs (no lost or
-    duplicated matches when the cover is replicated across salts)."""
-    z = synth_zones_pdf(16)
-    hot_lat = float(z.iloc[0]["min_lat"]) + 0.01
-    hot_lon = float(z.iloc[0]["min_lon"]) + 0.01
+def test_hot_cell_skew_salting_correct(spark, zones_pdf, index):
+    """M4 skew case: 80% of points crammed into ONE cell — the broadcast
+    cell join must still produce exactly the brute-force pairs (no lost or
+    duplicated matches in the hot cell)."""
+    hot_lat = float(zones_pdf.iloc[0]["min_lat"]) + 0.01
+    hot_lon = float(zones_pdf.iloc[0]["min_lon"]) + 0.01
     rows = [(f"hot{i}", hot_lat, hot_lon) for i in range(800)]
     rows += [(f"cold{i}", float(-80 + i % 160), float(-170 + (i * 7) % 340)) for i in range(200)]
     pts = spark.createDataFrame(rows, "url string, lat double, lon double")
-    a = {
-        (r.url, r.zone_id)
-        for r in spatial_join(pts, index, "intersects", strategy="broadcast")
-        .select("url", "zone_id").collect()
-    }
-    b = {
-        (r.url, r.zone_id)
-        for r in spatial_join(pts, index, "intersects", strategy="smj_salted", n_salt=8)
-        .select("url", "zone_id").collect()
-    }
-    assert a == b
-    assert sum(1 for u, _ in a if u.startswith("hot")) >= 800  # hot cell matched
-
-
-def test_salted_smj_same_result(points, index):
-    a = {
-        (r.url, r.zone_id)
-        for r in spatial_join(points, index, "within", strategy="broadcast")
-        .select("url", "zone_id").collect()
-    }
-    b = {
-        (r.url, r.zone_id)
-        for r in spatial_join(points, index, "within", strategy="smj_salted", n_salt=4)
-        .select("url", "zone_id").collect()
-    }
-    assert a == b
+    got = spatial_join(pts, index, "intersects").select("url", "zone_id").collect()
+    pairs = {(r.url, r.zone_id) for r in got}
+    assert len(got) == len(pairs)
+    assert pairs == brute_force_pairs(
+        pd.DataFrame(rows, columns=["url", "lat", "lon"]), zones_pdf, "intersects"
+    )
+    assert sum(1 for u, _ in pairs if u.startswith("hot")) >= 800  # hot cell matched
 
 
 def test_holed_zone_matches_numpy_kernel(spark, points):

@@ -16,6 +16,7 @@ from gaia_spark.operators.spatial_join import ZoneIndex, spatial_join, with_cell
 from gaia_spark.operators.knn import knn_join_broadcast, near_join
 from gaia_spark.operators.raster import point_tile_pyramid, with_tile
 from gaia_spark.operators.zonal import zonal_stats
+from gaia_spark.session import read_parquet
 
 
 class GaiaFrame:
@@ -100,7 +101,7 @@ class Engine:
         self.spark = spark
 
     def pages(self, path: str) -> GaiaFrame:
-        return GaiaFrame(self.spark.read.parquet(path))
+        return GaiaFrame(read_parquet(self.spark, path))
 
     def frame(self, df: DataFrame) -> GaiaFrame:
         return GaiaFrame(df)

@@ -201,54 +201,55 @@ def flow_accumulation(
 
     nodes, edges, sinks = _edges_sinks(dirs, zoom)
     scratch = tempfile.mkdtemp(prefix="gaia_facc_")
-    s = edges.unionByName(sinks.withColumn("nxt", F.col("v")))
-    p = iter_checkpoint(edges)
-    n_p = p.count()
-    for _round in range(max_rounds):
-        # S is one row per NODE (bounded); P is the growing closure. Always
-        # broadcast S — without the hint AQE happily broadcasts a
-        # tens-of-MB P (it is under the threshold) and the per-round
-        # blockify of the closure OOMs a small driver.
-        hop = (
-            F.broadcast(s.alias("s"))
-            .join(p.alias("p"), F.col("s.nxt") == F.col("p.v"))
-            .select(F.col("s.v").alias("v"), F.col("p.nxt").alias("nxt"))
-        )
-        p2 = iter_checkpoint(p.unionByName(hop).distinct(), release=p)
-        s = iter_checkpoint(
-            s.alias("a")
-            .join(F.broadcast(s.alias("b")), F.col("a.nxt") == F.col("b.v"))
-            .select(F.col("a.v").alias("v"), F.col("b.nxt").alias("nxt")),
-            release=s,
-        )
-        n_p2 = p2.count()
-        p = p2
-        if n_p2 > max_closure_rows:
-            raise RuntimeError(
-                f"flow_accumulation: transitive-closure intermediate reached "
-                f"{n_p2} rows (> max_closure_rows={max_closure_rows}) at "
-                f"doubling round {_round + 1} — the closure is O(sum of path "
-                "lengths) and does not scale to long-drainage DEMs; use "
-                "flow_accumulation_peel (O(cells)/round, bit-identical "
-                "output) or raise the bound"
+    try:
+        s = edges.unionByName(sinks.withColumn("nxt", F.col("v")))
+        p = iter_checkpoint(edges)
+        n_p = p.count()
+        for _round in range(max_rounds):
+            # S is one row per NODE (bounded); P is the growing closure. Always
+            # broadcast S — without the hint AQE happily broadcasts a
+            # tens-of-MB P (it is under the threshold) and the per-round
+            # blockify of the closure OOMs a small driver.
+            hop = (
+                F.broadcast(s.alias("s"))
+                .join(p.alias("p"), F.col("s.nxt") == F.col("p.v"))
+                .select(F.col("s.v").alias("v"), F.col("p.nxt").alias("nxt"))
             )
-        if n_p2 == n_p:
-            break
-        n_p = n_p2
-        # both S∘S and S⋈P reference their predecessors twice per round —
-        # sever the retained object graph periodically (session.sever_lineage)
-        if (_round + 1) % 3 == 0:
-            p = sever_lineage(p, f"{scratch}/p_{_round}")
-            s = sever_lineage(s, f"{scratch}/s_{_round}")
-    acc = p.groupBy(F.col("nxt").alias("v")).agg(F.count("*").cast("long").alias("acc"))
-    out = iter_checkpoint(
-        nodes.select("v", "r", "c")
-        .join(acc, "v", "left")
-        .join(s.withColumnRenamed("nxt", "basin"), "v")
-        .select("r", "c", F.coalesce("acc", F.lit(0)).cast("long").alias("acc"), "basin"),
-    )
-    shutil.rmtree(scratch, ignore_errors=True)
-    return out
+            p2 = iter_checkpoint(p.unionByName(hop).distinct(), release=p)
+            s = iter_checkpoint(
+                s.alias("a")
+                .join(F.broadcast(s.alias("b")), F.col("a.nxt") == F.col("b.v"))
+                .select(F.col("a.v").alias("v"), F.col("b.nxt").alias("nxt")),
+                release=s,
+            )
+            n_p2 = p2.count()
+            p = p2
+            if n_p2 > max_closure_rows:
+                raise RuntimeError(
+                    f"flow_accumulation: transitive-closure intermediate reached "
+                    f"{n_p2} rows (> max_closure_rows={max_closure_rows}) at "
+                    f"doubling round {_round + 1} — the closure is O(sum of path "
+                    "lengths) and does not scale to long-drainage DEMs; use "
+                    "flow_accumulation_peel (O(cells)/round, bit-identical "
+                    "output) or raise the bound"
+                )
+            if n_p2 == n_p:
+                break
+            n_p = n_p2
+            # both S∘S and S⋈P reference their predecessors twice per round —
+            # sever the retained object graph periodically (session.sever_lineage)
+            if (_round + 1) % 3 == 0:
+                p = sever_lineage(p, f"{scratch}/p_{_round}")
+                s = sever_lineage(s, f"{scratch}/s_{_round}")
+        acc = p.groupBy(F.col("nxt").alias("v")).agg(F.count("*").cast("long").alias("acc"))
+        return iter_checkpoint(
+            nodes.select("v", "r", "c")
+            .join(acc, "v", "left")
+            .join(s.withColumnRenamed("nxt", "basin"), "v")
+            .select("r", "c", F.coalesce("acc", F.lit(0)).cast("long").alias("acc"), "basin"),
+        )
+    finally:
+        shutil.rmtree(scratch, ignore_errors=True)
 
 
 def _edges_sinks(dirs: DataFrame, zoom: int):
@@ -297,26 +298,27 @@ def _basins(
 
     own = scratch is None
     scratch = scratch or tempfile.mkdtemp(prefix="gaia_basins_")
-    s = iter_checkpoint(edges.unionByName(sinks.withColumn("nxt", F.col("v"))))
-    sink_set = sinks.select(F.col("v").alias("nxt"))
-    n_settled = s.join(sink_set, "nxt", "left_semi").count()
-    n_all = s.count()
-    rounds = 0
-    while n_settled < n_all:
-        rounds += 1
-        s = iter_checkpoint(
-            s.alias("a")
-            .join(F.broadcast(s.alias("b")), F.col("a.nxt") == F.col("b.v"))
-            .select(F.col("a.v").alias("v"), F.col("b.nxt").alias("nxt")),
-            release=s,
-        )
-        if rounds % 3 == 0:
-            s = sever_lineage(s, f"{scratch}/basins_{rounds}")
+    try:
+        s = iter_checkpoint(edges.unionByName(sinks.withColumn("nxt", F.col("v"))))
+        sink_set = sinks.select(F.col("v").alias("nxt"))
         n_settled = s.join(sink_set, "nxt", "left_semi").count()
-    out = iter_checkpoint(s.withColumnRenamed("nxt", "basin"))
-    if own:
-        shutil.rmtree(scratch, ignore_errors=True)
-    return out
+        n_all = s.count()
+        rounds = 0
+        while n_settled < n_all:
+            rounds += 1
+            s = iter_checkpoint(
+                s.alias("a")
+                .join(F.broadcast(s.alias("b")), F.col("a.nxt") == F.col("b.v"))
+                .select(F.col("a.v").alias("v"), F.col("b.nxt").alias("nxt")),
+                release=s,
+            )
+            if rounds % 3 == 0:
+                s = sever_lineage(s, f"{scratch}/basins_{rounds}")
+            n_settled = s.join(sink_set, "nxt", "left_semi").count()
+        return iter_checkpoint(s.withColumnRenamed("nxt", "basin"))
+    finally:
+        if own:
+            shutil.rmtree(scratch, ignore_errors=True)
 
 
 def flow_accumulation_peel(
@@ -371,177 +373,178 @@ def flow_accumulation_peel(
     import shutil
     import tempfile
 
-    from gaia_spark.session import iter_checkpoint, release_checkpoint
+    from gaia_spark.session import iter_checkpoint, read_parquet, release_checkpoint, sever_lineage
 
     spark = dirs.sparkSession
     scratch = scratch_dir or tempfile.mkdtemp(prefix="gaia_peel_")
-    nodes, edges, sinks = _edges_sinks(dirs, zoom)
-    bit = f"({portable.md5_int60('cast(v as string)', portable.SPARK)}) % 2"
-    active = iter_checkpoint(
-        edges.unionByName(sinks.withColumn("nxt", F.lit(None).cast("long"))).select(
-            "v",
-            "nxt",
-            F.lit(1).cast("long").alias("w"),
-            F.lit(0).cast("long").alias("carry"),
-            F.expr(bit).cast("int").alias("bit"),
-        ),
-    )
-    window_cps: list[DataFrame] = [active]
-    pend_total = 0
-    n_active = active.count()
-    rounds = 0
-    while n_active > 0 and rounds < max_rounds:
-        rounds += 1
-        # --- rake: in-degree-0 nodes finish and push subtree size downstream
-        indeg = active.groupBy(F.col("nxt").alias("v")).agg(F.count("*").alias("_ind"))
-        a = iter_checkpoint(active.join(indeg, "v", "left"))
-        window_cps.append(a)
-        leaves = a.where(F.col("_ind").isNull())
-        leaves.select("v", F.col("w").alias("sub")).write.mode("append").parquet(
-            f"{scratch}/done"
-        )
-        push = (
-            leaves.where(F.col("nxt").isNotNull())
-            .groupBy(F.col("nxt").alias("v"))
-            .agg(F.sum(F.col("w") + F.col("carry")).alias("_add"))
-        )
-        raked = (
-            a.where(F.col("_ind").isNotNull())
-            .join(push, "v", "left")
-            .select(
+    try:
+        nodes, edges, sinks = _edges_sinks(dirs, zoom)
+        bit = f"({portable.md5_int60('cast(v as string)', portable.SPARK)}) % 2"
+        active = iter_checkpoint(
+            edges.unionByName(sinks.withColumn("nxt", F.lit(None).cast("long"))).select(
                 "v",
                 "nxt",
-                (F.col("w") + F.coalesce(F.col("_add"), F.lit(0))).alias("w"),
-                "carry",
-                "bit",
-            )
+                F.lit(1).cast("long").alias("w"),
+                F.lit(0).cast("long").alias("carry"),
+                F.expr(bit).cast("int").alias("bit"),
+            ),
         )
-        # --- compress: TWO passes per round, one per coin parity — each
-        # pass removes an independent set of unary chain links (parity-bit
-        # nodes whose parent is not itself a selected unary link), and the
-        # second pass (opposite parity, in-degrees recomputed) roughly
-        # halves the round count vs a single pass (compression removes
-        # ~7-13%/round one-sided on terrain grids; rake never creates new
-        # work for compress, so rake→compress(1)→compress(0) is exact)
-        n_pend = 0
-        state = raked
-        for parity in (1, 0):
-            ind2 = state.groupBy(F.col("nxt").alias("v")).agg(F.count("*").alias("_i2"))
-            r2 = iter_checkpoint(
-                state.join(ind2, "v", "left").withColumn(
-                    "_unary", F.coalesce(F.col("_i2"), F.lit(0)) == 1
-                ),
+        window_cps: list[DataFrame] = [active]
+        pend_total = 0
+        n_active = active.count()
+        rounds = 0
+        while n_active > 0 and rounds < max_rounds:
+            rounds += 1
+            # --- rake: in-degree-0 nodes finish and push subtree size downstream
+            indeg = active.groupBy(F.col("nxt").alias("v")).agg(F.count("*").alias("_ind"))
+            a = iter_checkpoint(active.join(indeg, "v", "left"))
+            window_cps.append(a)
+            leaves = a.where(F.col("_ind").isNull())
+            leaves.select("v", F.col("w").alias("sub")).write.mode("append").parquet(
+                f"{scratch}/done"
             )
-            window_cps.append(r2)
-            sel = (
-                r2.alias("x")
-                .join(
-                    r2.select(
-                        F.col("v").alias("nxt"),
-                        F.col("_unary").alias("_pu"),
-                        F.col("bit").alias("_pb"),
-                    ).alias("y"),
-                    "nxt",
-                    "left",
-                )
-                .where(
-                    F.col("_unary")
-                    & (F.col("bit") == parity)
-                    & ~(F.coalesce(F.col("_pu"), F.lit(False)) & (F.col("_pb") == parity))
-                )
+            push = (
+                leaves.where(F.col("nxt").isNotNull())
+                .groupBy(F.col("nxt").alias("v"))
+                .agg(F.sum(F.col("w") + F.col("carry")).alias("_add"))
+            )
+            raked = (
+                a.where(F.col("_ind").isNotNull())
+                .join(push, "v", "left")
                 .select(
-                    F.col("v").alias("sv"),
-                    F.col("nxt").alias("snxt"),
-                    F.col("w").alias("sw"),
-                    F.col("carry").alias("scarry"),
+                    "v",
+                    "nxt",
+                    (F.col("w") + F.coalesce(F.col("_add"), F.lit(0))).alias("w"),
+                    "carry",
+                    "bit",
                 )
             )
-            j = iter_checkpoint(r2.join(sel, r2["nxt"] == sel["sv"], "left"))
-            window_cps.append(j)
-            new_pending = j.where(F.col("sv").isNotNull()).select(
-                F.col("sv").alias("v"),
-                j["v"].alias("dep"),
-                (F.col("sw") + F.col("carry")).alias("off"),
-            )
-            new_pending.write.mode("append").parquet(f"{scratch}/pending")
-            state = j.join(
-                j.where(F.col("sv").isNotNull()).select(F.col("sv").alias("v")),
-                "v",
-                "left_anti",
-            ).select(
-                "v",
-                # child of a compressed node: inherit its nxt VERBATIM (NULL when
-                # the compressed node was a sink — the child becomes the sink;
-                # a coalesce here would leave it pointing at the removed node)
-                F.when(F.col("sv").isNotNull(), F.col("snxt")).otherwise(F.col("nxt")).alias("nxt"),
-                "w",
-                F.when(
-                    F.col("sv").isNotNull(),
-                    F.col("carry") + F.col("sw") + F.col("scarry"),
+            # --- compress: TWO passes per round, one per coin parity — each
+            # pass removes an independent set of unary chain links (parity-bit
+            # nodes whose parent is not itself a selected unary link), and the
+            # second pass (opposite parity, in-degrees recomputed) roughly
+            # halves the round count vs a single pass (compression removes
+            # ~7-13%/round one-sided on terrain grids; rake never creates new
+            # work for compress, so rake→compress(1)→compress(0) is exact)
+            n_pend = 0
+            state = raked
+            for parity in (1, 0):
+                ind2 = state.groupBy(F.col("nxt").alias("v")).agg(F.count("*").alias("_i2"))
+                r2 = iter_checkpoint(
+                    state.join(ind2, "v", "left").withColumn(
+                        "_unary", F.coalesce(F.col("_i2"), F.lit(0)) == 1
+                    ),
                 )
-                .otherwise(F.col("carry"))
-                .alias("carry"),
-                "bit",
+                window_cps.append(r2)
+                sel = (
+                    r2.alias("x")
+                    .join(
+                        r2.select(
+                            F.col("v").alias("nxt"),
+                            F.col("_unary").alias("_pu"),
+                            F.col("bit").alias("_pb"),
+                        ).alias("y"),
+                        "nxt",
+                        "left",
+                    )
+                    .where(
+                        F.col("_unary")
+                        & (F.col("bit") == parity)
+                        & ~(F.coalesce(F.col("_pu"), F.lit(False)) & (F.col("_pb") == parity))
+                    )
+                    .select(
+                        F.col("v").alias("sv"),
+                        F.col("nxt").alias("snxt"),
+                        F.col("w").alias("sw"),
+                        F.col("carry").alias("scarry"),
+                    )
+                )
+                j = iter_checkpoint(r2.join(sel, r2["nxt"] == sel["sv"], "left"))
+                window_cps.append(j)
+                new_pending = j.where(F.col("sv").isNotNull()).select(
+                    F.col("sv").alias("v"),
+                    j["v"].alias("dep"),
+                    (F.col("sw") + F.col("carry")).alias("off"),
+                )
+                new_pending.write.mode("append").parquet(f"{scratch}/pending")
+                state = j.join(
+                    j.where(F.col("sv").isNotNull()).select(F.col("sv").alias("v")),
+                    "v",
+                    "left_anti",
+                ).select(
+                    "v",
+                    # child of a compressed node: inherit its nxt VERBATIM (NULL when
+                    # the compressed node was a sink — the child becomes the sink;
+                    # a coalesce here would leave it pointing at the removed node)
+                    F.when(F.col("sv").isNotNull(), F.col("snxt")).otherwise(F.col("nxt")).alias("nxt"),
+                    "w",
+                    F.when(
+                        F.col("sv").isNotNull(),
+                        F.col("carry") + F.col("sw") + F.col("scarry"),
+                    )
+                    .otherwise(F.col("carry"))
+                    .alias("carry"),
+                    "bit",
+                )
+                n_pend += new_pending.count()
+            active = state
+            pend_total += n_pend
+            n_active = n_active - leaves.count() - n_pend
+            if rounds % sever_every == 0 and n_active > 0:
+                active = sever_lineage(active, f"{scratch}/active_{rounds}")
+                for frame in window_cps:
+                    release_checkpoint(frame)
+                window_cps = []
+            if stats is not None:
+                stats.append({"round": rounds, "active": n_active, "pending": pend_total})
+        if n_active > 0:
+            stuck = [tuple(r) for r in active.limit(10).collect()]
+            raise RuntimeError(
+                f"flow_accumulation_peel: {n_active} active after {max_rounds} "
+                f"rounds; first rows (v, nxt, w, carry, bit): {stuck}"
             )
-            n_pend += new_pending.count()
-        active = state
-        pend_total += n_pend
-        n_active = n_active - leaves.count() - n_pend
-        if rounds % sever_every == 0 and n_active > 0:
-            active.write.mode("overwrite").parquet(f"{scratch}/active_{rounds}")
-            active = spark.read.parquet(f"{scratch}/active_{rounds}")
-            for frame in window_cps:
-                release_checkpoint(frame)
-            window_cps = []
-        if stats is not None:
-            stats.append({"round": rounds, "active": n_active, "pending": pend_total})
-    if n_active > 0:
-        stuck = [tuple(r) for r in active.limit(10).collect()]
-        raise RuntimeError(
-            f"flow_accumulation_peel: {n_active} active after {max_rounds} "
-            f"rounds; first rows (v, nxt, w, carry, bit): {stuck}"
-        )
-    done = spark.read.parquet(f"{scratch}/done")
-    # --- resolve pending promises: dep chains have depth <= #rounds
-    sub = done
-    if pend_total:
-        pending = spark.read.parquet(f"{scratch}/pending")
-        unresolved = iter_checkpoint(pending.select("v", F.col("dep").alias("ptr"), "off"))
-        pmap = pending.select(
-            F.col("v").alias("ptr"), F.col("dep").alias("_pdep"), F.col("off").alias("_poff")
-        )
-        n_un = unresolved.count()
-        guard = 0
-        _prev_sub = None
-        while n_un > 0:
-            guard += 1
-            if guard > max_rounds:
-                raise RuntimeError("flow_accumulation_peel: pending chain too deep")
-            hit = unresolved.join(
-                done.select(F.col("v").alias("ptr"), "sub"), "ptr"
-            ).select("v", (F.col("off") + F.col("sub")).alias("sub"))
-            sub = iter_checkpoint(
-                sub.unionByName(hit.select("v", "sub")), release=_prev_sub
-            )
-            _prev_sub = sub
-            unresolved = iter_checkpoint(
-                unresolved.join(pmap, "ptr")
-                .select("v", F.col("_pdep").alias("ptr"), (F.col("off") + F.col("_poff")).alias("off")),
-                release=unresolved,
+        done = read_parquet(spark, f"{scratch}/done")
+        # --- resolve pending promises: dep chains have depth <= #rounds
+        sub = done
+        if pend_total:
+            pending = read_parquet(spark, f"{scratch}/pending")
+            unresolved = iter_checkpoint(pending.select("v", F.col("dep").alias("ptr"), "off"))
+            pmap = pending.select(
+                F.col("v").alias("ptr"), F.col("dep").alias("_pdep"), F.col("off").alias("_poff")
             )
             n_un = unresolved.count()
-    basins = _basins(edges, sinks, max_rounds, scratch=scratch)
-    out = iter_checkpoint(
-        nodes.select("v", "r", "c")
-        .join(sub, "v")
-        .join(basins, "v")
-        .select("r", "c", (F.col("sub") - 1).cast("long").alias("acc"), "basin"),
-    )
-    for frame in window_cps:
-        release_checkpoint(frame)
-    if scratch_dir is None:
-        shutil.rmtree(scratch, ignore_errors=True)
-    return out
+            guard = 0
+            _prev_sub = None
+            while n_un > 0:
+                guard += 1
+                if guard > max_rounds:
+                    raise RuntimeError("flow_accumulation_peel: pending chain too deep")
+                hit = unresolved.join(
+                    done.select(F.col("v").alias("ptr"), "sub"), "ptr"
+                ).select("v", (F.col("off") + F.col("sub")).alias("sub"))
+                sub = iter_checkpoint(
+                    sub.unionByName(hit.select("v", "sub")), release=_prev_sub
+                )
+                _prev_sub = sub
+                unresolved = iter_checkpoint(
+                    unresolved.join(pmap, "ptr")
+                    .select("v", F.col("_pdep").alias("ptr"), (F.col("off") + F.col("_poff")).alias("off")),
+                    release=unresolved,
+                )
+                n_un = unresolved.count()
+        basins = _basins(edges, sinks, max_rounds, scratch=scratch)
+        out = iter_checkpoint(
+            nodes.select("v", "r", "c")
+            .join(sub, "v")
+            .join(basins, "v")
+            .select("r", "c", (F.col("sub") - 1).cast("long").alias("acc"), "basin"),
+        )
+        for frame in window_cps:
+            release_checkpoint(frame)
+        return out
+    finally:
+        if scratch_dir is None:
+            shutil.rmtree(scratch, ignore_errors=True)
 
 
 def cost_distance(

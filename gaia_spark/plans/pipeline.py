@@ -21,6 +21,8 @@ from collections.abc import Callable
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
+from gaia_spark.session import read_parquet
+
 OPS: dict[str, Callable] = {}
 
 
@@ -205,7 +207,7 @@ def _agg_count(df: DataFrame, step: dict) -> DataFrame:
 def _source(spark: SparkSession, src: dict) -> DataFrame:
     kind = src["kind"]
     if kind == "parquet":
-        return spark.read.parquet(src["path"])
+        return read_parquet(spark, src["path"])
     if kind == "pages_synth":
         from gaia_spark.synth import synth_pages
 

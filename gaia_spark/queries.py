@@ -20,6 +20,7 @@ checks operator semantics, not string equality.
 
 from __future__ import annotations
 
+import functools
 from collections.abc import Callable
 from dataclasses import dataclass
 
@@ -28,6 +29,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
 from gaia_spark.functions import portable as P
+from gaia_spark.session import read_parquet
 
 SparkFn = Callable[[SparkSession, str], DataFrame]
 
@@ -49,7 +51,7 @@ def register(name: str, oracle: str | None = None):
 
 
 def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    return read_parquet(spark, f"{sf_dir}/{name}.parquet")
 
 
 # ---------------------------------------------------------------------------
@@ -116,7 +118,10 @@ def oracle_zones_pdf() -> pd.DataFrame:
     return pd.DataFrame(rows)
 
 
+@functools.cache
 def _zone_index():
+    """The index of the constant oracle zones, built once per process: one
+    shared instance lets ZoneIndex's per-session DataFrame memo hit."""
     from gaia_spark.operators.spatial_join import ZoneIndex
 
     return ZoneIndex.build(oracle_zones_pdf())

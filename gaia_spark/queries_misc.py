@@ -12,7 +12,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 from gaia_spark.functions import portable as P
 from gaia_spark.operators.hydrology import d8_pivot_cte
-from gaia_spark.queries import customer_points, load, register
+from gaia_spark.queries import _zone_index, customer_points, load, register
 from gaia_spark.synth import band_f32_sql, tile_px_center_sql
 
 
@@ -158,13 +158,11 @@ def q_raster_zonal(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Raster→vector zonal stats over the analytic-surface tile pyramid
     (ZonalStatsProcess on raster input): tiles → pixels_of explode → cell
     spatial join → aggregate; the oracle rebuilds every pixel in SQL."""
-    from gaia_spark.operators.spatial_join import ZoneIndex
     from gaia_spark.operators.zonal import pixel_zonal_stats
-    from gaia_spark.queries import oracle_zones_pdf
     from gaia_spark.synth import synth_raster
 
     raster = synth_raster(spark, zooms=(3,), bands=(0,))
-    idx = ZoneIndex.build(oracle_zones_pdf())
+    idx = _zone_index()
     stats = pixel_zonal_stats(raster, idx, band=0)
     return stats.select(
         "zone_id",
@@ -265,12 +263,10 @@ def q_raster_clip(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle rebuilds every (zone, tile, pixel) in SQL and aggregates the
     unmasked counts/extrema per tile."""
     from gaia_spark.operators.raster import clip_raster
-    from gaia_spark.operators.spatial_join import ZoneIndex
-    from gaia_spark.queries import oracle_zones_pdf
     from gaia_spark.synth import synth_raster
 
     raster = synth_raster(spark, zooms=(3,), bands=(0,))
-    idx = ZoneIndex.build(oracle_zones_pdf())
+    idx = _zone_index()
     out = clip_raster(raster, idx)
     # masked pixels surface as NULL array elements (pandas→Arrow turns the
     # kernel's NaN floats in object lists into nulls), so filter on NULL,
@@ -2077,7 +2073,6 @@ def q_zonal_majority(spark: SparkSession, sf_dir: str) -> DataFrame:
     ties broken toward the smaller category via exact struct-min."""
     from gaia_spark.operators.spatial_join import spatial_join
     from gaia_spark.operators.zonal import zonal_majority
-    from gaia_spark.queries import _zone_index
 
     pts = customer_points(spark, sf_dir)
     joined = spatial_join(pts, _zone_index(), predicate="intersects", point_key="c_custkey")

@@ -2056,15 +2056,15 @@ def q_flagship_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     shared quality heuristic)."""
     from gaia_spark.functions import text as TT
     from gaia_spark.functions.geoparse import geoparse
-    from gaia_spark.operators.spatial_join import ZoneIndex, spatial_join, with_cell
-    from gaia_spark.queries import oracle_zones_pdf, pages_from_documents
+    from gaia_spark.operators.spatial_join import spatial_join, with_cell
+    from gaia_spark.queries import _zone_index, pages_from_documents
 
     fs = P.floor_scaled_sql
     pages = pages_from_documents(spark, sf_dir).withColumn(
         "quality", F.expr(TT.quality_score_sql("text", P.SPARK))
     )
     pts = with_cell(geoparse(pages), 8).filter(F.col("lat").isNotNull())
-    idx = ZoneIndex.build(oracle_zones_pdf())
+    idx = _zone_index()
     joined = spatial_join(pts, idx, predicate="intersects", point_key="url")
     return joined.groupBy("zone_id", "lang").agg(
         F.count("*").alias("n_pages"),
@@ -3950,14 +3950,14 @@ def q_lang_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
     join, the geo×lang association map. Exact counts, one quantized
     division; all margin tables are zone/lang-bounded."""
     from gaia_spark.functions.geoparse import geoparse
-    from gaia_spark.operators.spatial_join import ZoneIndex, spatial_join
-    from gaia_spark.queries import oracle_zones_pdf, pages_from_documents
+    from gaia_spark.operators.spatial_join import spatial_join
+    from gaia_spark.queries import _zone_index, pages_from_documents
 
     fs = P.floor_scaled_sql
     pts = geoparse(pages_from_documents(spark, sf_dir)).filter(
         F.col("lat").isNotNull()
     )
-    idx = ZoneIndex.build(oracle_zones_pdf())
+    idx = _zone_index()
     j = spatial_join(pts, idx, predicate="intersects", point_key="url")
     zl = j.groupBy("zone_id", "lang").agg(F.count("*").alias("n"))
     zt = zl.groupBy("zone_id").agg(F.sum("n").cast("long").alias("nz"))

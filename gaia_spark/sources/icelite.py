@@ -32,6 +32,7 @@ import time
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 
 class IceTable:
@@ -158,4 +159,6 @@ class IceTable:
                     f"(current snapshot is {snap['snapshot_id']})"
                 )
             snap = self._load(f"snap-{snapshot_id:08d}.json")
-        return spark.read.parquet(*snap["files"])
+        # the manifest records the table schema, so the read infers none
+        schema = StructType.fromJson(json.loads(snap["schema"]))
+        return spark.read.schema(schema).parquet(*snap["files"])

@@ -41,13 +41,13 @@ def main(argv=None) -> None:
         minhash_lsh_pairs,
     )
     from gaia_spark.operators.prefix import pack_token_spans
-    from gaia_spark.session import get_session
+    from gaia_spark.session import get_session, read_parquet
     from gaia_spark.sources.icelite import IceTable
     from gaia_spark.sources.lineage import ResumableJob
 
     spark = get_session(app_name=args.job_id)
 
-    docs_all = spark.read.parquet(args.documents)
+    docs_all = read_parquet(spark, args.documents)
     units = sorted(r.source for r in docs_all.select("source").distinct().collect())
 
     def process(spark_, unit: str):

@@ -33,7 +33,7 @@ def main(argv=None) -> None:
     from gaia_spark.functions.geoparse import geoparse
     from gaia_spark.operators.spatial_join import ZoneIndex, spatial_join
     from gaia_spark.plans.pipeline import _zones
-    from gaia_spark.session import get_session
+    from gaia_spark.session import get_session, read_parquet
     from gaia_spark.sources.icelite import IceTable
     from gaia_spark.sources.lineage import ResumableJob
     from gaia_spark.synth import LANGS, synth_pages
@@ -44,7 +44,7 @@ def main(argv=None) -> None:
     def load_pages():
         if args.pages.startswith("synth:"):
             return synth_pages(spark, int(args.pages.split(":", 1)[1]))
-        return spark.read.parquet(args.pages)
+        return read_parquet(spark, args.pages)
 
     def process(spark_, unit: str):
         pages = load_pages().where(F.col("lang") == unit)

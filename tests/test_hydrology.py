@@ -190,29 +190,39 @@ def test_peel_matches_closure_and_bounds_state(spark):
     assert stats[-1]["active"] == 0
 
 
-def test_peel_rejects_unconverged(spark):
-    """max_rounds too small -> loud failure, never a partial answer."""
+def test_peel_rejects_unconverged(spark, tmp_path, monkeypatch):
+    """max_rounds too small -> loud failure, never a partial answer, and
+    the refused run leaves no scratch directory behind."""
+    import tempfile
+
     from gaia_spark.operators.hydrology import flow_accumulation_peel
 
     rng = np.random.default_rng(3)
     grid = rng.uniform(0, 50, (TILE_PX, TILE_PX))
     dirs = flow_direction(_raster_from_grid(spark, grid), zoom=0).localCheckpoint()
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
     with pytest.raises(RuntimeError, match="active after"):
         flow_accumulation_peel(dirs, zoom=0, max_rounds=2).count()
+    assert list(tmp_path.glob("gaia_*")) == []
 
 
-def test_closure_refuses_above_max_closure_rows(spark):
+def test_closure_refuses_above_max_closure_rows(spark, tmp_path, monkeypatch):
     """VERDICT r5: the closure path's O(sum path-length) intermediate must
     refuse loudly above the bound and point at the peel — never silently
-    launch the blowup on a long-drainage grid."""
+    launch the blowup on a long-drainage grid — and the refused run leaves
+    no scratch directory behind."""
+    import tempfile
+
     import pytest
 
     # a 6-cell eastward chain: closure holds 15 pair rows after convergence
     dirs = spark.createDataFrame(
         [(1, c, 1) for c in range(1, 6)] + [(1, 6, 0)], "r int, c int, dir int"
     )
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
     with pytest.raises(RuntimeError, match="flow_accumulation_peel"):
         flow_accumulation(dirs, zoom=0, max_closure_rows=4).count()
+    assert list(tmp_path.glob("gaia_*")) == []
     # unchanged behaviour below the bound
     out = flow_accumulation(dirs, zoom=0).collect()
     assert max(r.acc for r in out) == 5

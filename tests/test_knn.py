@@ -184,20 +184,25 @@ def rdd_files():
     return len(glob.glob(ckpt + "/**/rdd-*", recursive=True))
 
 
-# two chains, 0-1-...-5 and 6-...-11: components labelled 0 and 6
-nodes = spark.range(12).select(F.col("id").alias("cell"))
-half = spark.createDataFrame(
-    [(i, i + 1) for i in range(11) if i != 5], "cell long, neighbor long"
-)
-edges = half.unionByName(half.select(F.col("neighbor").alias("cell"), F.col("cell").alias("neighbor")))
-
-
-def components():
+def components(nodes, edges):
     return sorted(map(tuple, min_label_components(nodes, edges).collect()))
 
 
+# nodes 0..n-1 chained i-(i+1), except across cut
+def chains(n, cut):
+    nodes = spark.range(n).select(F.col("id").alias("cell"))
+    half = spark.createDataFrame(
+        [(i, i + 1) for i in range(n - 1) if i != cut], "cell long, neighbor long"
+    )
+    return nodes, half.unionByName(
+        half.select(F.col("neighbor").alias("cell"), F.col("cell").alias("neighbor"))
+    )
+
+
+# two chains, 0-1-...-5 and 6-...-11: components labelled 0 and 6
+short = chains(12, 5)
 assert sc.getCheckpointDir() is None
-local = components()
+local = components(*short)
 assert local == [(i, 0 if i < 6 else 6) for i in range(12)], local
 
 sc.setCheckpointDir(ckpt)
@@ -215,8 +220,13 @@ got = sorted(
 assert got == want, (got[:5], want[:5])
 after_knn = rdd_files()
 assert after_knn > 0, "knn_join_cells wrote no reliable checkpoint"
-assert components() == local
-assert rdd_files() > after_knn, "min_label_components wrote no reliable checkpoint"
+assert components(*short) == local
+# released rounds lose their files: min_label_components leaves exactly one
+# rdd-* directory (its result's) after 12 nodes and after a 160-node chain
+# that takes more rounds
+assert rdd_files() == after_knn + 1, (after_knn, rdd_files())
+assert components(*chains(160, 99)) == [(i, 0 if i < 100 else 100) for i in range(160)]
+assert rdd_files() == after_knn + 2, (after_knn, rdd_files())
 print("OK")
 """
 
@@ -224,7 +234,9 @@ print("OK")
 def test_checkpoint_dir_selects_reliable_checkpoint(tmp_path):
     """With a checkpoint directory set, iter_checkpoint writes reliable
     checkpoints (rdd-* files under the directory) and the iterative
-    operators return the same rows as without one. Runs in a fresh
+    operators return the same rows as without one. Released rounds'
+    files are deleted: each min_label_components call leaves exactly one
+    rdd-* directory, whatever its round count. Runs in a fresh
     interpreter: a SparkContext's checkpoint directory cannot be unset, so
     setting it on the shared test session would switch every later
     iterative test to disk checkpoints."""

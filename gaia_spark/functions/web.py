@@ -272,10 +272,10 @@ def blocklist_filter(pages, rules: list[str], url_col: str = "url"):
     matching rule, NULL when kept. Returns the input + (host, blocked_by)."""
     import pyspark.sql.functions as F
 
+    from gaia_spark.session import local_df
+
     h = pages.withColumn("host", F.expr(host_sql(url_col)))
-    rules_df = h.sparkSession.createDataFrame(
-        [(r,) for r in sorted(set(rules))], "rule string"
-    )
+    rules_df = local_df(h.sparkSession, [(r,) for r in sorted(set(rules))], "rule string")
     sfx = h.select(
         url_col, F.explode(F.expr(host_suffixes_sql("host", SPARK))).alias("_sfx")
     )

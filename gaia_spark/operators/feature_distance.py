@@ -82,7 +82,12 @@ def _zone_dist_sql(kind: str, zedges: str = "z.edges") -> str:
     return f"(CASE WHEN {intersects} THEN cast(0 as double) ELSE least({d_fv}, {d_zv}) END)"
 
 
-def _with_zones_array(features: DataFrame, index: ZoneIndex, vertices_col: str, kind: str) -> DataFrame:
+def _with_zones_array(
+    features: DataFrame, index: ZoneIndex, vertices_col: str, kind: str
+) -> tuple[DataFrame, list[str]]:
+    """The features (vertices column renamed to ``vertices``) with their
+    edge array ``_fedges`` and the broadcast zones array ``_zs``, plus the
+    feature column names a caller's output keeps."""
     if kind not in ("poly", "line"):
         raise ValueError(f"unknown kind {kind!r}")
     # reserved output columns (feature_spatial_join twin): raise loudly
@@ -103,7 +108,8 @@ def _with_zones_array(features: DataFrame, index: ZoneIndex, vertices_col: str, 
     )
     feats = feats.where(F.col("vertices").isNotNull() & (F.size("vertices") >= 2))
     fedges = edges_sql(_close_ring_sql("vertices")) if kind == "poly" else edges_sql("vertices")
-    return feats.withColumn("_fedges", F.expr(fedges)).join(F.broadcast(zones))
+    cols = ["vertices" if c == vertices_col else c for c in features.columns]
+    return feats.withColumn("_fedges", F.expr(fedges)).join(F.broadcast(zones)), cols
 
 
 def feature_distance_nearest(
@@ -117,15 +123,14 @@ def feature_distance_nearest(
 
     Ties broken by (dist_m, zone_id) ascending — deterministic and
     oracle-mirrorable (``ORDER BY dist, zone_id``)."""
-    feats = _with_zones_array(features, index, vertices_col, kind)
+    feats, cols = _with_zones_array(features, index, vertices_col, kind)
     best = (
         f"array_min(transform(_zs, z -> struct({_zone_dist_sql(kind)} AS d, z.zone_id AS zid)))"
     )
-    return (
-        feats.withColumn("_best", F.expr(best))
-        .withColumn("zone_id", F.col("_best.zid"))
-        .withColumn("dist_m", F.col("_best.d"))
-        .drop("_fedges", "_zs", "_best")
+    # one select: the one-element array lets inline name the output fields
+    # while array_min runs once (a null best — no zones — is a null row)
+    return feats.select(
+        *cols, F.inline(F.expr(f"transform(array({best}), b -> struct(b.zid AS zone_id, b.d AS dist_m))"))
     )
 
 
@@ -144,16 +149,13 @@ def feature_near_join(
     :func:`feature_distance_nearest`: per feature ONE JVM expression scores
     every zone, then only the within-radius matches are exploded — no
     shuffle, no Python."""
-    feats = _with_zones_array(features, index, vertices_col, kind)
+    feats, cols = _with_zones_array(features, index, vertices_col, kind)
     scored = (
         f"filter(transform(_zs, z -> struct({_zone_dist_sql(kind)} AS d, z.zone_id AS zid)), "
         f"s -> s.d <= cast({float(radius_m)!r} as double))"
     )
-    return (
-        feats.withColumn("_m", F.explode(F.expr(scored)))
-        .withColumn("zone_id", F.col("_m.zid"))
-        .withColumn("dist_m", F.col("_m.d"))
-        .drop("_fedges", "_zs", "_m")
+    return feats.select(
+        *cols, F.inline(F.expr(f"transform({scored}, m -> struct(m.zid AS zone_id, m.d AS dist_m))"))
     )
 
 
@@ -265,20 +267,13 @@ def feature_knn_join(
     scored zones array, then a slice/posexplode — still no shuffle, no
     Python. Ties by (dist, zone_id) asc. Returns
     (feature cols, zone_id, dist_m, rank)."""
-    feats = _with_zones_array(features, index, vertices_col, kind)
+    feats, cols = _with_zones_array(features, index, vertices_col, kind)
     topk = (
         f"slice(array_sort(transform(_zs, z -> "
         f"struct({_zone_dist_sql(kind)} AS d, z.zone_id AS zid))), 1, {int(k)})"
     )
-    return (
-        feats.select(
-            "*", F.posexplode(F.expr(topk)).alias("_pos", "_m")
-        )
-        .withColumn("zone_id", F.col("_m.zid"))
-        .withColumn("dist_m", F.col("_m.d"))
-        .withColumn("rank", (F.col("_pos") + 1).cast("int"))
-        .drop("_fedges", "_zs", "_m", "_pos")
-    )
+    ranked = f"transform({topk}, (m, i) -> struct(m.zid AS zone_id, m.d AS dist_m, cast(i + 1 as int) AS rank))"
+    return feats.select(*cols, F.inline(F.expr(ranked)))
 
 
 __all__ = [

@@ -32,7 +32,7 @@ from pyspark.sql import Column, DataFrame, Window
 from gaia_spark.functions import portable
 from gaia_spark.functions.kernel import cell_encode
 from gaia_spark.operators.spatial_join import with_cell
-from gaia_spark.session import iter_checkpoint, release_checkpoint
+from gaia_spark.session import iter_checkpoint, local_df, release_checkpoint
 
 
 def knn_join_broadcast(
@@ -77,10 +77,10 @@ def knn_join_broadcast(
             F.expr(f"{best}.d").alias("dist_m"),
             F.lit(1).cast("int").alias("rank"),
         )
-    sites = spark.createDataFrame(
-        sites_pdf[[site_key, site_lat, site_lon]].rename(
-            columns={site_key: "sid", site_lat: "slat", site_lon: "slon"}
-        )
+    sites = local_df(
+        spark,
+        sites_pdf.rename(columns={site_key: "sid", site_lat: "slat", site_lon: "slon"}),
+        "sid long, slat double, slon double",
     ).agg(F.collect_list(F.struct("sid", "slat", "slon")).alias("_sites"))
     dist = portable.haversine_m_sql("lat", "lon", "s.slat", "s.slon")
     if k == 1:
@@ -184,10 +184,7 @@ def near_join(
                     continue
                 seen.add(key)
                 rows.append((sid, slat, slon, yy * n + xx))
-    cover = spark.createDataFrame(
-        pd.DataFrame(rows, columns=["site_id", "site_lat", "site_lon", "cell"]),
-        "site_id long, site_lat double, site_lon double, cell long",
-    )
+    cover = local_df(spark, rows, "site_id long, site_lat double, site_lon double, cell long")
     pts = with_cell(points.where(F.col("lat").isNotNull()), res, out="_cell")
     dist = F.expr(portable.haversine_m_sql("lat", "lon", "site_lat", "site_lon"))
     return (

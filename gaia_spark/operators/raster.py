@@ -20,6 +20,7 @@ from pyspark.sql import DataFrame
 
 from gaia_spark.functions import portable
 from gaia_spark.functions.kernel import tile_bounds
+from gaia_spark.session import local_df
 from gaia_spark.synth import RASTER_SCHEMA, TILE_PX
 
 
@@ -235,8 +236,8 @@ def clip_raster(raster: DataFrame, index) -> DataFrame:
             rows += [(int(zid), z, int(c) % (1 << z), int(c) // (1 << z), True) for c in full]
             rows += [(int(zid), z, int(c) % (1 << z), int(c) // (1 << z), False) for c in partial]
         frames.append(pd.DataFrame(rows, columns=["zone_id", "zoom", "x", "y", "full"]))
-    cover = spark.createDataFrame(
-        pd.concat(frames, ignore_index=True), "zone_id long, zoom int, x int, y int, full boolean"
+    cover = local_df(
+        spark, pd.concat(frames, ignore_index=True), "zone_id long, zoom int, x int, y int, full boolean"
     )
     hit = raster.join(F.broadcast(cover), ["zoom", "x", "y"], "inner")
 

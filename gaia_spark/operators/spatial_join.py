@@ -33,6 +33,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 from gaia_spark.functions import portable
 from gaia_spark.functions.kernel import PreparedPolygon, polygon_cover
+from gaia_spark.session import local_df
 
 PREDICATES = ("within", "intersects", "touches", "disjoint")
 
@@ -147,17 +148,19 @@ class ZoneIndex:
         )
 
     def _session_df(self, spark: SparkSession, name: str, pdf: pd.DataFrame, schema: str) -> DataFrame:
-        # memoized per session: the records conversion + schema inference
-        # costs ~0.5 s of SERIAL driver time per call — pure Amdahl loss
-        # that showed up directly in N-vs-4N scaling measurements
-        # keyed by the session OBJECT (identity compare, strong ref) — an
-        # id()-keyed cache could collide after the old session is GC'd and
-        # CPython reuses its id, returning a DataFrame bound to a dead session
+        # an Arrow LocalRelation (session.local_df): as pickled rows this
+        # table cost ~0.4-0.5 s of unpickling on EVERY execution that read
+        # it (each unit of a batch job, each query). Building it still costs
+        # ~50 ms of serial driver time for a 1k-row cover with edge arrays,
+        # so it is memoized per session — keyed by the session OBJECT
+        # (identity compare, strong ref): an id()-keyed cache could collide
+        # after the old session is GC'd and CPython reuses its id, returning
+        # a DataFrame bound to a dead session
         cache = self.__dict__.setdefault("_df_cache", {})
         hit = cache.get(name)
         if hit is not None and hit[0] is spark:
             return hit[1]
-        df = spark.createDataFrame(pdf.to_dict("records"), schema)
+        df = local_df(spark, pdf, schema)
         cache[name] = (spark, df)
         return df
 

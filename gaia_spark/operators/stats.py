@@ -11,6 +11,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, Window
 
 from gaia_spark.functions import portable
+from gaia_spark.session import local_df
 
 
 def cell_rook_weights(cells: DataFrame, res: int, cell_col: str = "cell") -> DataFrame:
@@ -57,9 +58,9 @@ def polygon_contiguity_weights(
         raise ValueError(f"unknown contiguity {contiguity!r}")
     from gaia_spark.operators.feature_join import feature_spatial_join
 
-    zpdf = index.zones_pdf[["zone_id", "vertices"]].rename(columns={"zone_id": "_zid"})
-    feats = spark.createDataFrame(
-        zpdf.to_dict("records"),
+    feats = local_df(
+        spark,
+        index.zones_pdf.rename(columns={"zone_id": "_zid"}),
         "_zid long, vertices array<struct<lat:double,lon:double>>",
     )
     pred = "touches_rook" if contiguity == "rook" else "touches"

@@ -29,7 +29,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
 from gaia_spark.functions import portable as P
-from gaia_spark.session import read_parquet
+from gaia_spark.session import local_df, read_parquet
 
 SparkFn = Callable[[SparkSession, str], DataFrame]
 
@@ -61,10 +61,8 @@ def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 def customer_points(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Point layer: one point per customer, lat/lon derived from c_custkey by
     the portable integer formulas — the Gaia 'vector dataset' stand-in."""
-    return (
-        load(spark, sf_dir, "customer")
-        .withColumn("lat", F.expr(P.key_lat_sql("c_custkey")))
-        .withColumn("lon", F.expr(P.key_lon_sql("c_custkey")))
+    return load(spark, sf_dir, "customer").withColumns(
+        {"lat": F.expr(P.key_lat_sql("c_custkey")), "lon": F.expr(P.key_lon_sql("c_custkey"))}
     )
 
 
@@ -385,8 +383,8 @@ def q_zone_category_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     pts = customer_points(spark, sf_dir)
     joined = spatial_join(pts, _zone_index(), predicate="intersects", point_key="c_custkey")
-    zmeta = spark.createDataFrame(
-        [(j, cat) for j, _, _, _, _, cat in oracle_zone_rows()], "zone_id long, category string"
+    zmeta = local_df(
+        spark, [(j, cat) for j, _, _, _, _, cat in oracle_zone_rows()], "zone_id long, category string"
     )
     return (
         joined.join(F.broadcast(zmeta), "zone_id")
@@ -496,7 +494,7 @@ def q_zone_geometry(spark: SparkSession, sf_dir: str) -> DataFrame:
     from gaia_spark.operators.scalar_geo import ring_area_m2, ring_length_m
     from gaia_spark.synth import ZONES_SCHEMA
 
-    zdf = spark.createDataFrame(oracle_zones_pdf().to_dict("records"), ZONES_SCHEMA)
+    zdf = local_df(spark, oracle_zones_pdf(), ZONES_SCHEMA)
     return (
         zdf.select(
             "zone_id",
@@ -597,8 +595,9 @@ def q_knn_bearing(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     pts = customer_points(spark, sf_dir)
     near = knn_join_broadcast(pts, site_points_pdf(), k=1, point_key="c_custkey")
-    sites = near.sparkSession.createDataFrame(
-        site_points_pdf().rename(columns={"lat": "slat", "lon": "slon"})
+    sites = local_df(
+        spark, site_points_pdf().rename(columns={"lat": "slat", "lon": "slon"}),
+        "site_id long, slat double, slon double",
     )
     # the kNN output carries only (key, site_id, dist_m, rank); point coords
     # re-derive from the key formulas (cheaper than a second join at scale)
@@ -671,7 +670,7 @@ def q_near_500km_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
     from gaia_spark.operators.knn import near_join_cells
 
     pts = customer_points(spark, sf_dir)
-    sites = spark.createDataFrame(site_points_pdf())
+    sites = local_df(spark, site_points_pdf(), "site_id long, lat double, lon double")
     out = near_join_cells(pts, sites, radius_m=500_000.0, point_key="c_custkey")
     return out.select(
         "c_custkey", "site_id", F.expr("cast(floor(dist_m) as bigint)").alias("dist_m_floor")

@@ -16,6 +16,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
 from gaia_spark.queries import ZONES_CTE, _zone_index, load, register
+from gaia_spark.session import local_df
 
 # key-derived rect parcels over the part table (FIXTURES.md §6 style)
 _LAT_C = "((p_partkey * 7919 % 15000) / cast(100 as double) - 75.0 + 0.0003)"
@@ -34,19 +35,14 @@ PARCELS_CTE = (
 def parcel_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Rect parcels as a GENERIC ring-array feature layer (the engine sees
     only vertices — the rect shape is knowledge private to the oracle)."""
-    p = load(spark, sf_dir, "part").select(
-        "p_partkey",
-        F.expr(f"{_LAT_C} - {_HL}").alias("_a"),
-        F.expr(f"{_LAT_C} + {_HL}").alias("_c"),
-        F.expr(f"{_LON_C} - {_HW}").alias("_b"),
-        F.expr(f"{_LON_C} + {_HW}").alias("_d"),
-    )
+    a, c = f"({_LAT_C} - {_HL})", f"({_LAT_C} + {_HL})"
+    b, d = f"({_LON_C} - {_HW})", f"({_LON_C} + {_HW})"
     ring = (
-        "array(struct(_a AS lat, _b AS lon), struct(_a AS lat, _d AS lon), "
-        "struct(_c AS lat, _d AS lon), struct(_c AS lat, _b AS lon), "
-        "struct(_a AS lat, _b AS lon))"
+        f"array(struct({a} AS lat, {b} AS lon), struct({a} AS lat, {d} AS lon), "
+        f"struct({c} AS lat, {d} AS lon), struct({c} AS lat, {b} AS lon), "
+        f"struct({a} AS lat, {b} AS lon))"
     )
-    return p.select("p_partkey", F.expr(ring).alias("vertices"))
+    return load(spark, sf_dir, "part").select("p_partkey", F.expr(ring).alias("vertices"))
 
 
 @register(
@@ -351,11 +347,11 @@ _TOUCH_BOUNDS = """
 def touch_parcel_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     from gaia_spark.queries import oracle_zone_rows
 
-    z = spark.createDataFrame(
+    z = local_df(
+        spark,
         [(j, a, b, c, d) for j, a, b, c, d, _ in oracle_zone_rows()],
-        "zid long, zmin_lat double, zmin_lon double, zmax_lat double, zmax_lon double",
-    ).withColumnRenamed("zmin_lat", "min_lat").withColumnRenamed("zmin_lon", "min_lon") \
-     .withColumnRenamed("zmax_lat", "max_lat").withColumnRenamed("zmax_lon", "max_lon")
+        "zid long, min_lat double, min_lon double, max_lat double, max_lon double",
+    )
     p = load(spark, sf_dir, "part").select(
         "p_partkey",
         (F.col("p_partkey") % 14).alias("zid"),
@@ -480,10 +476,8 @@ def q_parcel_equals(spark: SparkSession, sf_dir: str) -> DataFrame:
     from gaia_spark.queries import oracle_zones_pdf
 
     feats = touch_parcel_features(spark, sf_dir)
-    zpdf = oracle_zones_pdf()[["zone_id", "vertices"]]
-    zones = spark.createDataFrame(
-        zpdf.to_dict("records"),
-        "zone_id long, vertices array<struct<lat:double,lon:double>>",
+    zones = local_df(
+        spark, oracle_zones_pdf(), "zone_id long, vertices array<struct<lat:double,lon:double>>"
     )
     return feature_equals_join(
         feats, zones, key_a="p_partkey", key_b="zone_id"
@@ -694,8 +688,9 @@ def q_areal_interp(spark: SparkSession, sf_dir: str) -> DataFrame:
     feats = parcel_features(spark, sf_dir).join(
         load(spark, sf_dir, "part").select("p_partkey", "p_retailprice"), "p_partkey"
     )
-    zr = spark.createDataFrame(
-        oracle_zones_pdf()[["zone_id", "min_lat", "min_lon", "max_lat", "max_lon"]]
+    zr = local_df(
+        spark, oracle_zones_pdf(),
+        "zone_id long, min_lat double, min_lon double, max_lat double, max_lon double",
     )
     out = areal_reaggregate(
         feats, _zone_index(), zr, "p_retailprice", feature_key="p_partkey"

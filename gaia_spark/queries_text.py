@@ -12,6 +12,7 @@ from gaia_spark.functions import text as T
 from gaia_spark.functions import web as W
 from gaia_spark.operators.simsearch import lsh_bucket_sql
 from gaia_spark.queries import load, register
+from gaia_spark.session import local_df
 
 DUCK_WORDS = P.split_ws("text", P.DUCK)
 SPARK_WORDS = P.split_ws("text", P.SPARK)
@@ -2140,9 +2141,7 @@ def q_etld1(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     d = load(spark, sf_dir, "documents")
     hosts = d.select(F.expr(_ETLD_HOST).alias("host"))
-    sfx = spark.createDataFrame(
-        [(s,) for s in sorted(_ETLD_SUFFIXES)], "suffix string"
-    )
+    sfx = local_df(spark, [(s,) for s in sorted(_ETLD_SUFFIXES)], "suffix string")
     return registered_domain(hosts, sfx)
 
 

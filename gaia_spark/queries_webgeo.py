@@ -14,6 +14,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from gaia_spark.functions import portable as P
 from gaia_spark.functions import web as W
 from gaia_spark.queries import load, register
+from gaia_spark.session import local_df
 
 # --- cross-track / along-track route deviation --------------------------------
 
@@ -2328,17 +2329,9 @@ def q_zone_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("lat").isNotNull())
         .select("url", "lat", "lon")
     )
-    zones = spark.createDataFrame(
-        [
-            (z, la0, lo0, la1, lo1)
-            for z, la0, lo0, la1, lo1 in (
-                (r["zone_id"], r["min_lat"], r["min_lon"], r["max_lat"],
-                 r["max_lon"])
-                for _, r in oracle_zones_pdf().iterrows()
-            )
-        ],
-        "zone_id long, min_lat double, min_lon double, max_lat double, "
-        "max_lon double",
+    zones = local_df(
+        spark, oracle_zones_pdf(),
+        "zone_id long, min_lat double, min_lon double, max_lat double, max_lon double",
     )
     j = pts.join(
         F.broadcast(zones),

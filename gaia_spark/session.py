@@ -18,6 +18,10 @@ py4j boundary and off the cluster:
   and message are unchanged.
 - :func:`read_parquet` takes a table's schema from its Parquet footer, so
   opening a table starts no schema-inference Spark job.
+
+Every table the driver builds itself (zone covers, site lists, rule
+tables) goes through :func:`local_df`: an Arrow ``LocalRelation``, never an
+RDD of pickled rows that each execution unpickles again.
 """
 
 from __future__ import annotations
@@ -27,7 +31,7 @@ import os
 
 from py4j.protocol import Py4JError
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql.types import StructType
+from pyspark.sql.types import StructType, _parse_datatype_string
 
 DEFAULT_CONFS: dict[str, str] = {
     "spark.sql.adaptive.enabled": "true",
@@ -65,6 +69,51 @@ def get_session(
     for k, v in merged.items():
         builder = builder.config(k, v)
     return builder.getOrCreate()
+
+
+def local_df(spark: SparkSession, data, schema: StructType | str) -> DataFrame:
+    """A driver-built table as a Spark ``LocalRelation``, built through Arrow.
+
+    ``data`` is a pandas frame (columns taken by the schema's field names,
+    extra columns ignored) or a list of row tuples (fields by position).
+    ``schema`` is a ``StructType`` or a DDL string.
+
+    ``spark.createDataFrame(rows, schema)`` makes a ``LogicalRDD`` of pickled
+    Python rows, and the JVM unpickles them again on every execution (on a
+    4-core local session, warm: the registry's 894-row zone cover collects
+    in about 490 ms that way, 20-50 ms as a ``LocalRelation``). Here each
+    column converts to the Arrow type of its Spark field and the Arrow
+    table is handed to Spark, which keeps it as a ``LocalRelation`` up to
+    ``spark.sql.execution.arrow.localRelationThreshold``.
+
+    Conversion is strict and has no fallback: a value the field's type
+    cannot hold (a string in a double column, an int out of range) raises
+    ``pyarrow.ArrowInvalid``. NaN stays NaN and None is null, as in the
+    pickled rows. (``createDataFrame(pandas_df)`` would turn NaN into null
+    and, with ``spark.sql.execution.arrow.pyspark.fallback.enabled``, fall
+    back to pickled rows when Arrow conversion fails.)
+    """
+    import pandas as pd
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    struct = schema if isinstance(schema, StructType) else _parse_datatype_string(schema)
+    arrow = to_arrow_schema(struct)
+    if len(data) == 0:
+        table = arrow.empty_table()
+    else:
+        if isinstance(data, pd.DataFrame):
+            columns = [data[name] for name in struct.names]
+        else:
+            rows = [tuple(r) for r in data]
+            if any(len(r) != len(arrow) for r in rows):
+                raise ValueError(f"every row needs {len(arrow)} fields for {struct.simpleString()}")
+            columns = list(zip(*rows))
+        table = pa.Table.from_arrays(
+            [pa.array(col, type=field.type, from_pandas=False) for col, field in zip(columns, arrow)],
+            schema=arrow,
+        )
+    return spark.createDataFrame(table, struct)
 
 
 def iter_checkpoint(df, release=None):

@@ -11,10 +11,20 @@ Layout:
       _manifests/snap-00000001.json          (file list, added files, meta,
                                               schema, timestamp_ms)
       _manifests/CURRENT                     (atomic pointer, rename-committed)
+      _manifests/.commit-lock                (flock'd while a commit runs)
 
 Commit protocol: data is written to a fresh uuid dir (never overwritten),
 the manifest is written to a temp name and os.rename'd into place, then
 CURRENT is swapped by rename — readers always see a complete snapshot.
+Writers serialize the manifest step on an exclusive ``flock`` of
+``.commit-lock`` and re-read CURRENT under it: a commit whose parent moved
+since it started (another process or thread committed meanwhile) re-bases
+onto the new CURRENT — an append keeps the other commit's files and adds
+its own — so two writers never take the same snapshot id and neither
+commit's files drop out (Iceberg's optimistic retry, with the retry under
+the lock). The kernel releases the lock when its holder dies, so a killed
+writer never blocks the next one; a bare exclusive create of
+``snap-N.json`` could not tell a live writer's claim from a killed one's.
 A commit is the CURRENT swap: a ``snap-N.json`` with N above CURRENT's id
 (a kill between the two renames) is not committed, is never read, and is
 overwritten by the next commit. A manifest's ``meta`` (caller tags plus
@@ -26,10 +36,12 @@ On a real deployment this maps 1:1 onto Iceberg append/overwrite commits.
 
 from __future__ import annotations
 
+import fcntl
 import json
 import os
 import time
 import uuid
+from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructType
@@ -66,27 +78,50 @@ class IceTable:
         added: list[str] | None = None,
         meta: dict | None = None,
     ) -> dict:
-        snap_id = (parent["snapshot_id"] + 1) if parent else 1
-        manifest = {
-            "snapshot_id": snap_id,
-            "parent": parent["snapshot_id"] if parent else None,
-            "operation": operation,
-            "files": files,
-            "added": added if added is not None else files,
-            "meta": meta or {},
-            "schema": schema,
-            "timestamp_ms": int(time.time() * 1000),
-        }
-        name = f"snap-{snap_id:08d}.json"
-        tmp = os.path.join(self.manifest_dir, f".tmp-{uuid.uuid4().hex}")
-        with open(tmp, "w") as f:
-            json.dump(manifest, f)
-        os.rename(tmp, os.path.join(self.manifest_dir, name))
-        cur_tmp = os.path.join(self.manifest_dir, f".cur-{uuid.uuid4().hex}")
-        with open(cur_tmp, "w") as f:
-            f.write(name)
-        os.rename(cur_tmp, os.path.join(self.manifest_dir, "CURRENT"))
+        """Commit ``files`` (the full file list of the new snapshot, built
+        on ``parent``) under the commit lock, re-based onto CURRENT if
+        another writer committed after ``parent`` was read."""
+        added = added if added is not None else files
+        with self._commit_lock():
+            head = self._current_snapshot()
+            if head is not None and (parent is None or head["snapshot_id"] != parent["snapshot_id"]):
+                if operation == "append":
+                    files = head["files"] + added
+                parent = head
+            snap_id = (parent["snapshot_id"] + 1) if parent else 1
+            manifest = {
+                "snapshot_id": snap_id,
+                "parent": parent["snapshot_id"] if parent else None,
+                "operation": operation,
+                "files": files,
+                "added": added,
+                "meta": meta or {},
+                "schema": schema,
+                "timestamp_ms": int(time.time() * 1000),
+            }
+            name = f"snap-{snap_id:08d}.json"
+            tmp = os.path.join(self.manifest_dir, f".tmp-{uuid.uuid4().hex}")
+            with open(tmp, "w") as f:
+                json.dump(manifest, f)
+            # under the lock a snap-N.json above CURRENT is a killed
+            # writer's orphan, never a live commit: replacing it is safe
+            os.rename(tmp, os.path.join(self.manifest_dir, name))
+            cur_tmp = os.path.join(self.manifest_dir, f".cur-{uuid.uuid4().hex}")
+            with open(cur_tmp, "w") as f:
+                f.write(name)
+            os.rename(cur_tmp, os.path.join(self.manifest_dir, "CURRENT"))
         return manifest
+
+    @contextmanager
+    def _commit_lock(self):
+        """Exclusive ``flock`` on the table's lock file for one commit;
+        closing the descriptor (or the holder dying) releases it."""
+        fd = os.open(os.path.join(self.manifest_dir, ".commit-lock"), os.O_RDWR | os.O_CREAT, 0o644)
+        try:
+            fcntl.flock(fd, fcntl.LOCK_EX)
+            yield
+        finally:
+            os.close(fd)
 
     # -- write ------------------------------------------------------------------
     def _write_files(self, df: DataFrame) -> list[str]:

@@ -20,6 +20,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
+from gaia_spark.session import local_df
+
 
 def read_gal(spark: SparkSession, path: str) -> DataFrame:
     """Parse a .gal file into the (cell, neighbor, w=1.0) adjacency shape."""
@@ -51,7 +53,7 @@ def read_gal(spark: SparkSession, path: str) -> DataFrame:
         i += 2 if k > 0 else 1
     if seen != n_expected:
         raise ValueError(f"GAL header declares {n_expected} ids, parsed {seen}")
-    return spark.createDataFrame(rows, "cell long, neighbor long, w double")
+    return local_df(spark, rows, "cell long, neighbor long, w double")
 
 
 def write_gal(weights: DataFrame, path: str) -> None:

@@ -31,6 +31,8 @@ from pyspark.sql.types import (
     TimestampType,
 )
 
+from gaia_spark.session import local_df
+
 SEED = 42
 N_CITIES = 12
 VOCAB = (
@@ -254,8 +256,7 @@ def synth_zones_pdf(n_zones: int = 16, seed: int = SEED) -> pd.DataFrame:
 def zones_df(spark: SparkSession, pdf: pd.DataFrame | None = None) -> DataFrame:
     if pdf is None:
         pdf = synth_zones_pdf()
-    rows = pdf.to_dict("records")
-    return spark.createDataFrame(rows, ZONES_SCHEMA)
+    return local_df(spark, pdf, ZONES_SCHEMA)
 
 
 # ---------------------------------------------------------------------------
@@ -311,7 +312,7 @@ def synth_raster(
         for y in range(1 << z)
         for b in bands
     ]
-    kdf = spark.createDataFrame(keys, "zoom int, x int, y int, band int").repartition(32)
+    kdf = local_df(spark, keys, "zoom int, x int, y int, band int").repartition(32)
 
     def render(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for bdf in batches:

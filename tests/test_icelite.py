@@ -253,3 +253,82 @@ def test_stream_batch_orphan_manifest_is_replayed(spark, tmp_path):
     assert write_stream_batch(t2, spark.range(5).selectExpr("id + 100 AS v"), 1) is True
     got = sorted(r.v for r in t2.read(spark).collect())
     assert got == list(range(7)) + list(range(100, 105))
+
+
+_WRITER_SCRIPT = """
+import os, sys, time
+
+import pyarrow as pa
+import pyarrow.parquet as pq
+from pyspark.sql.types import StringType, StructField, StructType
+
+from gaia_spark.sources.icelite import IceTable
+
+path, writer, n, go = sys.argv[1], sys.argv[2], int(sys.argv[3]), sys.argv[4]
+SCHEMA = StructType([StructField("tag", StringType())])
+
+
+class Frame:
+    # what IceTable.append uses of a DataFrame: write.parquet and schema
+    schema = SCHEMA
+
+    def __init__(self, tag):
+        self.tag, self.write = tag, self
+
+    def parquet(self, commit_dir):
+        os.makedirs(commit_dir)
+        time.sleep(0.005)  # the data write: the window a commit races in
+        pq.write_table(pa.table({"tag": [self.tag]}), os.path.join(commit_dir, "part-0.parquet"))
+
+
+table = IceTable(path)
+while not os.path.exists(go):
+    time.sleep(0.001)
+for i in range(n):
+    table.append(Frame(f"{writer}-{i}"), meta={"writer": writer, "i": i})
+print("OK")
+"""
+
+
+def test_concurrent_appends_lose_no_commit(spark, tmp_path):
+    """Five processes (more than a 4-core box has cores) append to one
+    table at once. Every append commits: the current snapshot lists all
+    their files, each snapshot id is taken once and every commit record is
+    there. The writers are fresh interpreters without a Spark session (a
+    stand-in frame writes one-row Parquet files), so the commits race at
+    the protocol's own speed."""
+    import subprocess
+    import sys
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    path, go, n = str(tmp_path / "t"), str(tmp_path / "go"), 12
+    writers = ("a", "b", "c", "d", "e")
+    IceTable(path)
+    procs = [
+        subprocess.Popen(
+            [sys.executable, "-c", _WRITER_SCRIPT, path, w, str(n), go],
+            cwd=root, stdout=subprocess.PIPE, stderr=subprocess.PIPE, text=True,
+        )
+        for w in writers
+    ]
+    try:
+        with open(go, "w"):
+            pass
+        outs = [p.communicate(timeout=120) for p in procs]
+    finally:
+        for p in procs:
+            p.kill()
+    for p, (out, err) in zip(procs, outs):
+        assert p.returncode == 0 and out.strip() == "OK", err[-2000:]
+
+    t = IceTable(path)
+    cur = t._current_snapshot()
+    total = len(writers) * n
+    assert cur["snapshot_id"] == total
+    assert len(t.snapshots()) == total
+    assert len(cur["files"]) == len(set(cur["files"])) == total
+    assert sorted((m["writer"], m["i"]) for m in t.committed_meta()) == sorted(
+        (w, i) for w in writers for i in range(n)
+    )
+    want = sorted(f"{w}-{i}" for w in writers for i in range(n))
+    assert sorted(r.tag for r in t.read(spark).collect()) == want

@@ -1,12 +1,20 @@
 """Plan building stays on the driver: building a registry query's plan
 starts no Spark job, ``read_parquet`` gives the schema Spark's own
-inference would, and PySpark's call-site capture is off."""
+inference would, PySpark's call-site capture is off, and every
+driver-built table is an Arrow ``LocalRelation`` (``local_df``), never an
+RDD of pickled rows."""
 
+import ast
 import datetime
 import decimal
+import math
 import os
 import subprocess
 import sys
+
+import pandas as pd
+import pyarrow as pa
+import pytest
 
 from pyspark.sql.types import (
     ArrayType,
@@ -23,9 +31,11 @@ from pyspark.sql.types import (
     TimestampType,
 )
 
+from gaia_spark.operators.spatial_join import ZoneIndex
 from gaia_spark.queries import REGISTRY
-from gaia_spark.session import read_parquet
+from gaia_spark.session import local_df, read_parquet
 from gaia_spark.sources.icelite import IceTable
+from gaia_spark.synth import synth_zones_pdf
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 SF_DIR = os.path.join(ROOT, "perfbench", "sf0.001")
@@ -166,3 +176,101 @@ def test_call_site_capture_off_in_fresh_interpreter():
     )
     assert proc.returncode == 0, proc.stderr[-2000:]
     assert proc.stdout.strip().endswith("OK")
+
+
+def _optimized_plan(df) -> str:
+    return df._jdf.queryExecution().optimizedPlan().toString()
+
+
+def test_driver_built_tables_are_local_relations(spark):
+    """The zone cover and zone table, and every interactive query's plan,
+    read driver-built tables as a LocalRelation: no LogicalRDD of pickled
+    rows that each execution unpickles again."""
+    index = ZoneIndex.build(synth_zones_pdf())
+    for df in (index.cover_df(spark), index.zone_df(spark)):
+        assert _optimized_plan(df).startswith("LocalRelation")
+    with_rdd = [q for q in INTERACTIVE if "LogicalRDD" in _optimized_plan(REGISTRY[q].spark(spark, SF_DIR))]
+    assert with_rdd == []
+
+
+def _bits(x):
+    return None if x is None else float(x).hex()
+
+
+def test_local_df_round_trip(spark):
+    """The crawl zone cover round-trips bit-exact: every edge double, the
+    null edges of rect cover rows. NaN stays NaN and None stays null, and
+    empty input keeps its schema."""
+    index = ZoneIndex.build(synth_zones_pdf())
+    got = sorted(index.cover_df(spark).collect(), key=lambda r: (r.zone_id, r.cell))
+    want = index.cover_pdf.sort_values(["zone_id", "cell"])
+    assert len(got) == len(want) and set(want["kind"]) == {"rect", "poly"}
+    for r, w in zip(got, want.itertuples(index=False)):
+        assert (r.zone_id, r.cell, r.full, r.kind) == (w.zone_id, w.cell, w.full, w.kind)
+        assert [_bits(getattr(r, c)) for c in ("min_lat", "min_lon", "max_lat", "max_lon")] == [
+            _bits(getattr(w, c)) for c in ("min_lat", "min_lon", "max_lat", "max_lon")
+        ]
+        if w.kind == "rect":
+            assert r.edges is None
+        else:
+            assert [tuple(map(_bits, e)) for e in r.edges] == [
+                tuple(_bits(e[k]) for k in ("y1", "x1", "y2", "x2")) for e in w.edges
+            ]
+
+    rows = local_df(spark, [(1, float("nan"), "a"), (2, None, None)], "k long, v double, s string")
+    got = sorted(rows.collect())
+    assert math.isnan(got[0].v) and got[1].v is None and got[1].s is None
+    pdf = pd.DataFrame({"k": [1, 2], "v": [0.1 + 0.2, float("nan")], "extra": ["x", "y"]})
+    got = sorted(local_df(spark, pdf, "v double, k long").collect(), key=lambda r: r.k)
+    assert [r.k for r in got] == [1, 2] and got[0].v == 0.1 + 0.2 and math.isnan(got[1].v)
+
+    schema = "zone_id long, edges array<struct<y1:double,x1:double,y2:double,x2:double>>"
+    for empty in ([], pd.DataFrame({"zone_id": [], "edges": []})):
+        df = local_df(spark, empty, schema)
+        assert df.collect() == []
+        assert df.schema == spark.createDataFrame([], schema).schema
+
+
+def test_local_df_refuses_unconvertible_values(spark):
+    """A value its column cannot hold raises; there is no fallback to
+    pickled rows (Spark's Arrow fallback conf is at its default, on)."""
+    assert spark.conf.get("spark.sql.execution.arrow.pyspark.fallback.enabled") == "true"
+    with pytest.raises(pa.ArrowInvalid):
+        local_df(spark, [(1, "not a number")], "k long, v double")
+    with pytest.raises(pa.ArrowInvalid):
+        local_df(spark, pd.DataFrame({"k": [1], "v": ["x"]}), "k long, v double")
+    with pytest.raises(pa.ArrowInvalid):
+        local_df(spark, [(2**40,)], "zoom int")
+    with pytest.raises(ValueError):
+        local_df(spark, [(1, 2.0), (3,)], "k long, v double")
+
+
+def _calls(tree: ast.AST, attr: str):
+    """(enclosing function name, line) of every ``.attr(...)`` call."""
+    out = []
+
+    def walk(node, fn):
+        for child in ast.iter_child_nodes(node):
+            name = child.name if isinstance(child, (ast.FunctionDef, ast.AsyncFunctionDef)) else fn
+            if isinstance(child, ast.Call) and isinstance(child.func, ast.Attribute) and child.func.attr == attr:
+                out.append((name, child.lineno))
+            walk(child, name)
+
+    walk(tree, None)
+    return out
+
+
+def test_only_local_df_calls_create_dataframe():
+    """Every driver-built table goes through session.local_df: no other
+    function under gaia_spark/ calls createDataFrame."""
+    pkg = os.path.join(ROOT, "gaia_spark")
+    found = []
+    for dirpath, _, names in os.walk(pkg):
+        for n in sorted(names):
+            if n.endswith(".py"):
+                path = os.path.join(dirpath, n)
+                with open(path) as f:
+                    tree = ast.parse(f.read(), path)
+                rel = os.path.relpath(path, ROOT)
+                found += [(rel, fn, line) for fn, line in _calls(tree, "createDataFrame")]
+    assert {(rel, fn) for rel, fn, _ in found} == {("gaia_spark/session.py", "local_df")}, found
